@@ -32,8 +32,8 @@ logger = logging.getLogger(__name__)
 
 #: Session conf selecting how shared self-join streams are materialized
 #: (see :func:`materialize_shared`): ``persist`` (default, lazy) |
-#: ``eager`` | ``off``.  A ``materialize=`` keyword on the public pair
-#: operators overrides the conf per call.
+#: ``eager``.  A ``materialize=`` keyword on the public pair operators
+#: overrides the conf per call.
 MATERIALIZE_CONF = "spark.ab_metadata_pusher.dedup.materialize"
 
 #: Frames persisted by :func:`materialize_shared` in ``persist`` mode.
@@ -64,9 +64,9 @@ def _materialize_mode(mode: str | None, conf_get) -> str:
     if mode is None:
         mode = conf_get(MATERIALIZE_CONF, None)
     mode = "persist" if mode is None else str(mode).lower()
-    if mode not in ("eager", "persist", "off"):
+    if mode not in ("eager", "persist"):
         raise ValueError(
-            f"materialize mode must be eager|persist|off, got {mode!r}")
+            f"materialize mode must be eager|persist, got {mode!r}")
     if mode == "eager":
         for k in ("spark.dynamicAllocation.enabled",
                   "spark.decommission.enabled"):
@@ -108,16 +108,12 @@ def materialize_shared(df: DataFrame, mode: str | None = None) -> DataFrame:
       audited plan shape, no cache-entry accumulation across bench
       loops).  Auto-demoted to ``persist`` on elastic clusters, with a
       WARNING — see :func:`_materialize_mode`.
-    * ``off`` — return the plan unchanged: pure lazy lineage, downstream
-      predicates push below, upstream recomputes once per reference.
 
     Under ``eager`` the checkpoint truncates lineage, so downstream
     filters do NOT push below the materialization point — pre-filter
-    the input or use ``off``/``persist`` when that matters.
+    the input or use ``persist`` when that matters.
     """
     mode = _materialize_mode(mode, df.sparkSession.conf.get)
-    if mode == "off":
-        return df
     if mode == "persist":
         from pyspark import StorageLevel
         out = df.persist(StorageLevel.MEMORY_AND_DISK)

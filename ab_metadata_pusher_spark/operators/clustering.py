@@ -57,8 +57,7 @@ def assign_clusters(corpus: DataFrame,
                     centroids: list[tuple[int, list[float]]],
                     id_col: str = "vec_id",
                     emb_col: str = "embedding",
-                    keep_emb: bool = False,
-                    shape: str = "auto") -> DataFrame:
+                    keep_emb: bool = False) -> DataFrame:
     """Map-only nearest-centroid assignment by Euclidean distance.
 
     Ties break toward the lower cluster id (strict ``<`` while folding in
@@ -67,14 +66,13 @@ def assign_clusters(corpus: DataFrame,
     ``keep_emb`` carries the embedding column through (the Lloyd-update
     caller wants it so the update needs no corpus re-join).
 
-    ``shape``: same two physical tiers as similarity._assign_cells and
-    the same crossover constant — the literal tier is O(k x dim) plan
-    text and per-row Catalyst folds, which degrade superlinearly past
-    a few hundred centroids (scripts/ivf_cells_probe.py), while a
-    SemDeDup-scale k-means wants thousands of clusters.  ``auto``
-    keeps the bit-exact literal tier for every oracle-gated query
-    (k <= 8) and crosses to the numpy argmin tier on
-    ASSIGN_CELLS_LITERAL_MAX doubles.
+    Same two physical tiers as similarity._assign_cells and the same
+    crossover constant — the literal tier is O(k x dim) plan text and
+    per-row Catalyst folds, which degrade superlinearly past a few
+    hundred centroids (SCALE.md), while a SemDeDup-scale k-means wants
+    thousands of clusters.  Every oracle-gated query (k <= 8) keeps
+    the bit-exact literal tier; past ASSIGN_CELLS_LITERAL_MAX doubles
+    the numpy argmin tier runs.
     """
     from ab_metadata_pusher_spark.operators.similarity import (
         ASSIGN_CELLS_LITERAL_MAX,
@@ -82,11 +80,7 @@ def assign_clusters(corpus: DataFrame,
     centroids = sorted(centroids)
     if not centroids:
         raise ValueError("assign_clusters: empty centroid list")
-    if shape not in ("auto", "literal", "arrow"):
-        raise ValueError(f"unknown assign_clusters shape: {shape!r}")
-    if shape == "arrow" or (shape == "auto" and
-                            len(centroids) * len(centroids[0][1])
-                            > ASSIGN_CELLS_LITERAL_MAX):
+    if len(centroids) * len(centroids[0][1]) > ASSIGN_CELLS_LITERAL_MAX:
         return _assign_clusters_arrow(corpus, centroids, id_col, emb_col,
                                       keep_emb)
     cents = _centroid_literal(centroids)
@@ -185,33 +179,19 @@ def _assign_clusters_arrow(corpus: DataFrame,
 def update_centroids(corpus: DataFrame, assigned: DataFrame,
                      id_col: str = "vec_id",
                      emb_col: str = "embedding",
-                     dim: int | None = None,
-                     shape: str = "auto") -> list[tuple[int, list[float]]]:
-    """Lloyd update: per-cluster element-wise mean.  Two physical
-    shapes, selected by ``shape`` (``auto``/``exploded``/``wide``):
+                     dim: int | None = None) -> list[tuple[int, list[float]]]:
+    """Lloyd update: per-cluster element-wise mean.  posexplode to
+    (cluster, pos, val) and aggregate per (cluster, pos): the map side
+    inflates to corpus x dim internal rows, but partial aggregation
+    combines them to partitions x k x dim scalars BEFORE the exchange,
+    and the generated code is constant-size regardless of width.
 
-    * **exploded** (the ``auto`` choice): posexplode to (cluster, pos,
-      val) and aggregate per (cluster, pos).  The map side inflates to
-      corpus x dim internal rows, but partial aggregation combines them
-      to partitions x k x dim scalars BEFORE the exchange, and the
-      generated code is constant-size regardless of width.
-    * **wide**: one cluster-keyed aggregate with ``dim`` per-dimension
-      ``avg`` columns — no row inflation, but one aggregate expression
-      per dimension, which exits whole-stage codegen past
-      ``spark.sql.codegen.maxFields`` (default 100) into interpreted
-      per-expression eval, and pays superlinear plan/compile time.
-
-    Measured (scripts/lloyd_dim_probe.py, r9, local[32], min-of-reps
-    warm): exploded wins at EVERY probed point — dim 8-2048 x rows
-    20k-2M — e.g. dim 64/2M rows 0.57s vs 1.33s, dim 256/2M rows 3.45s
-    vs 5.38s (wide cold 37s), dim 2048/20k rows 0.72s vs 20.5s.  The r8
-    rebuild that made wide the only shape was a measured pessimization
-    on the fixture's dim-64 corpus (0.27s vs 1.30s per update at
-    sf0.1) and is the likely real component of the r8 driver-record
-    slowdown on embedding_kmeans/dedup_semantic.  Both shapes exchange
-    the same k x dim partials, so the 100 TB story is unchanged;
-    ``wide`` stays available for narrow-dim callers that want zero row
-    inflation and accept the codegen-fields bound.
+    The wide form (one cluster-keyed aggregate with ``dim`` avg
+    columns, no row inflation) lost at EVERY probed point, dim 8-2048 x
+    rows 20k-2M (SCALE.md; probe script lloyd_dim_probe.py, last in
+    commit 3a5bcd2): past ``spark.sql.codegen.maxFields`` it exits
+    whole-stage codegen and pays superlinear plan/compile time — e.g.
+    dim 64/2M rows 0.57s vs 1.33s, dim 2048/20k rows 0.72s vs 20.5s.
 
     When ``assigned`` already carries ``emb_col`` (assign_clusters with
     ``keep_emb=True`` — assignment is a map-only projection OF the
@@ -235,16 +215,6 @@ def update_centroids(corpus: DataFrame, assigned: DataFrame,
     joined = joined.filter(F.col(emb_col).isNotNull())
     if dim is None:
         dim = len(joined.select(emb_col).first()[0])
-    if shape not in ("auto", "exploded", "wide"):
-        raise ValueError(f"unknown Lloyd update shape: {shape!r}")
-    if shape == "wide":
-        means = joined.groupBy("cluster").agg(
-            *[F.avg(F.col(emb_col)[i].cast("double")).alias(f"_s{i}")
-              for i in range(dim)])
-        return [(int(r["cluster"]),
-                 [float(r[f"_s{i}"]) for i in range(dim)])
-                for r in means.collect()
-                if all(r[f"_s{i}"] is not None for i in range(dim))]
     per_pos = (joined
                .select("cluster", F.posexplode(F.col(emb_col))
                        .alias("_pos", "_val"))

@@ -560,7 +560,7 @@ def hamming_pairs(hashes: DataFrame, hash_col: str, max_hamming: int,
     Materialization contract: the blocking index is shared by both
     self-join sides via :func:`_materialize_shared` (default lazy — no
     job at construction; see ``MATERIALIZE_CONF`` for the eager /
-    persist / off modes).
+    persist modes).
     """
     nb = max_hamming + 1
     bounds = [round(j * bits / nb) for j in range(nb + 1)]

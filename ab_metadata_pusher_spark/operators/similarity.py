@@ -71,123 +71,24 @@ def cosine_prenorm(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return dot(a, b) / (na * nb)
 
 
-#: Candidate-volume crossover for the corpus-scale kNN-self scoring
-#: tier, plus its env override (``auto`` | ``fold`` | ``pandas``).  The
-#: higher-order ``cosine_prenorm`` fold is CodegenFallback: Catalyst
-#: evaluates it INTERPRETED, allocating three boxed-double arrays per
-#: pair, and its first execution pays a JIT ramp that measured up to
-#: ~50x the hot CPU on the 4M-candidate quality_label_full stream
-#: (r14, scripts/qlf_solo_probe.py: first-run stage CPU 2702 s vs 48 s
-#: hot, 245-330 s GC spikes, needing 3-4 full executions to converge —
-#: and a loaded JIT compile queue, i.e. a session that has already run
-#: many plan shapes, stretches the ramp further: 22-26 s pristine
-#: first runs vs 51 s mid-bench).  The numpy tier is native code with
-#: NO ramp (cold == warm) and reproduces the fold BIT-FOR-BIT
-#: (elementwise product then SEQUENTIAL per-dim accumulation — the
-#: same cast/multiply/add rounding order; 0/3 998 000 candidate
-#: mismatches in scripts/cosine_scoring_probe.py, full-head outputs
-#: equal in scripts/qlf_cold_scoring_probe.py), at ~1.0x the fold's
-#: HOT throughput (r13 probe) — so past the crossover it trades
-#: nothing warm for a bounded first execution.  Below the crossover
-#: the fold stays: every oracle-gated query scores bounded candidate
-#: sets and keeps its audited JVM-only plan.  Degenerate-input caveat
-#: (same class as _assign_cells_arrow): a NULL *element* inside an
-#: embedding reaches numpy as NaN, so the pandas tier yields NaN where
-#: the fold yields NULL — fixture corpora and the bench heads carry
-#: neither.
-#:
-#: r14, second cut: past the same crossover ``auto`` now selects the
-#: ``cellpairs`` tier — the guide-§8 shape.  The per-PAIR tiers (fold
-#: and pandas alike) materialize both embeddings on every candidate row
-#: of the cell join, so the scoring stage carries ~2·dim doubles per
-#: CANDIDATE (4 GB of Arrow traffic / boxed folds for
-#: quality_label_full's 4M pairs at sf0.1, measured 200-450 s of task
-#: CPU in scripts/qlf_solo_probe.py).  ``cellpairs`` replaces the cell
-#: equi-join + per-pair scoring with a per-CELL cogroup: each vector
-#: crosses the boundary once per (cell, side) — nprobe+1 times total
-#: instead of once per candidate — and the within-cell score matrix is
-#: one vectorized numpy pass whose per-pair accumulation order is the
-#: fold's exactly (sequential per-dim adds of the elementwise
-#: products; division by the JVM-computed norm product — IEEE-754
-#: correctly-rounded ops match the JVM bit-for-bit).  The kNN form
-#: additionally prunes each (query, cell) group to the candidates
-#: that can still reach the global top-k (everything >= the group's
-#: k-th value — a superset of the final winners, so the downstream
-#: window rank is unchanged), which deletes the 4M-row WindowGroupLimit
-#: scan as well.  env accepts auto | fold | pandas | cellpairs.
-COSINE_SCORING_ENV = "SPARK_GRAFT_COSINE_SCORING"
-SCORING_PANDAS_MIN_CANDIDATES = 1_000_000
-
-
-def _scoring_tier(est_candidates: int) -> str:
-    """Resolve the corpus-scale scoring tier: env override first, else
-    ``auto`` = the JVM fold below ``SCORING_PANDAS_MIN_CANDIDATES``
-    estimated candidate pairs and ``cellpairs`` past it."""
-    import os
-
-    mode = os.environ.get(COSINE_SCORING_ENV, "auto").lower()
-    if mode not in ("auto", "fold", "pandas", "cellpairs"):
-        logger.warning("%s=%r not in auto|fold|pandas|cellpairs — "
-                       "using auto", COSINE_SCORING_ENV, mode)
-        mode = "auto"
-    if mode != "auto":
-        return mode
-    return ("cellpairs"
-            if est_candidates >= SCORING_PANDAS_MIN_CANDIDATES else "fold")
-
-
-def _dot_seq_pandas(dim: int):
-    """Arrow-batched dot product reproducing the JVM fold's accumulation
-    order exactly (see COSINE_SCORING_ENV note above)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def dot_seq(qa, ca):
-        import numpy as np
-        import pandas as pd
-
-        n = len(qa)
-        ok = np.ones(n, dtype=bool)
-        try:  # fast path: uniform, null-free batch stacks directly
-            qm = np.asarray(list(qa), dtype=np.float64)
-            cm = np.asarray(list(ca), dtype=np.float64)
-            if qm.shape != (n, dim) or cm.shape != (n, dim):
-                raise ValueError
-        except (ValueError, TypeError):  # ragged / NULL rows: row loop
-            qm = np.zeros((n, dim), dtype=np.float64)
-            cm = np.zeros((n, dim), dtype=np.float64)
-            for r in range(n):
-                q, c = qa.iloc[r], ca.iloc[r]
-                if q is None or c is None or len(q) != dim \
-                        or len(c) != dim:
-                    ok[r] = False
-                    continue
-                qm[r] = np.asarray(q, dtype=np.float64)
-                cm[r] = np.asarray(c, dtype=np.float64)
-        prod = qm * cm
-        acc = np.zeros(n, dtype=np.float64)
-        for i in range(dim):  # sequential per-dim == the fold's order
-            acc = acc + prod[:, i]
-        res = pd.Series(acc)
-        res[~ok] = None
-        return res
-
-    dot_seq.__annotations__ = {"qa": pd.Series, "ca": pd.Series,
-                               "return": pd.Series}
-    return pandas_udf(dot_seq, "double")
-
-
-def _candidate_cosine(a: Column, b: Column, na: Column, nb: Column,
-                      dim: int, est_candidates: int) -> Column:
-    """Per-PAIR tiered candidate cosine (fold / pandas).  The
-    ``cellpairs`` tier is not a Column — it replaces the surrounding
-    cell join — so callers dispatch on :func:`_scoring_tier` BEFORE
-    building the join and only reach here for the per-pair tiers;
-    ``cellpairs`` resolving here (a caller that cannot restructure)
-    falls back to the fold."""
-    if _scoring_tier(est_candidates) == "pandas":
-        return _dot_seq_pandas(dim)(a, b) / (na * nb)
-    return cosine_prenorm(a, b, na, nb)
+#: Candidate-volume crossover for corpus-scale cosine scoring.  Below
+#: it the JVM ``cosine_prenorm`` fold scores each candidate pair, so
+#: every oracle-gated query (bounded candidate sets) keeps its audited
+#: JVM-only plan.  The fold is CodegenFallback (interpreted, three
+#: boxed arrays per pair) and its first execution pays a JIT ramp that
+#: measured up to ~50x the hot CPU on the 4M-candidate
+#: quality_label_full stream (OPTIMIZATION_r14.md).  Past the crossover
+#: the ``cellpairs`` tier replaces the cell join with a per-CELL
+#: cogroup: each vector crosses the Python boundary once per (cell,
+#: side) instead of once per candidate, and the within-cell score
+#: matrix reproduces the fold BIT-FOR-BIT — elementwise products added
+#: sequentially per dimension, then divided by the JVM-computed norm
+#: product, the same correctly-rounded IEEE-754 ops in the same order.
+#: The kNN form also prunes each (query, cell) group to a superset of
+#: the pairs that can reach the global top-k (``_cellpair_knn_scores``),
+#: so the downstream window rank is unchanged.  Tests force a tier by
+#: patching this constant.
+CELLPAIRS_MIN_CANDIDATES = 1_000_000
 
 
 def _seq_dot_matrix(qm, cm, dim: int):
@@ -537,7 +438,7 @@ def ann_lsh_knn_self(corpus: DataFrame, k: int = 5, *,
     re-ran the corpus scan + 2·n_tables·n_planes signed projections per
     alias); it goes through the same strategy selector as the dedup
     pair operators (default lazy persist; ``materialize=`` or the
-    ``MATERIALIZE_CONF`` session conf select eager/off).
+    ``MATERIALIZE_CONF`` session conf select eager).
     """
     from ab_metadata_pusher_spark.operators._shared import (
         materialize_shared as _materialize_shared,
@@ -723,9 +624,10 @@ def ivf_centroid_list(corpus: DataFrame, n_cells: int = 8,
 #: Physical-shape crossover for _assign_cells, in centroid DOUBLES
 #: (k x dim).  The plan-literal shape is bit-exact with the DuckDB
 #: oracles and pays zero Python, but its parse/codegen cost grows
-#: superlinearly with the literal (measured, scripts/ivf_cells_probe.py
-#: at dim 64, 5k rows, warm: k=8 0.65s, k=256 4.0s, k=1024 15.2s,
-#: k=4096 minutes at 20k rows), and per-row argmin through Catalyst
+#: superlinearly with the literal (measured, SCALE.md — probe script
+#: ivf_cells_probe.py, last in commit 3a5bcd2 — at dim 64, 5k rows,
+#: warm: k=8 0.65s, k=256 4.0s, k=1024 15.2s, k=4096 minutes at 20k
+#: rows), and per-row argmin through Catalyst
 #: higher-order functions runs ~30M mul-adds/s however the centroids
 #: ship.  Past the threshold the Arrow tier takes over: one numpy
 #: matmul per batch (k=256 0.29s, k=4096 0.72s, k=16384 2.2s) — the
@@ -737,16 +639,14 @@ ASSIGN_CELLS_LITERAL_MAX = 8192
 
 def _assign_cells(df: DataFrame,
                   cents: DataFrame | list[tuple[int, list[float]]],
-                  id_col: str, emb_col: str, nprobe: int,
-                  shape: str = "auto") -> DataFrame:
+                  id_col: str, emb_col: str, nprobe: int) -> DataFrame:
     """Attach the ``nprobe`` nearest cells to each vector — MAP-ONLY.
 
-    ``shape``: ``literal`` inlines the centroids into the plan (below),
-    ``arrow`` runs a vectorized numpy matmul per Arrow batch
-    (:func:`_assign_cells_arrow`), ``auto`` picks by
-    ``ASSIGN_CELLS_LITERAL_MAX``.  Both tiers share the contract:
-    cosine ranking, ties to the lower cell, degenerate (zero-norm /
-    non-finite) similarity ranks LAST.
+    Up to ``ASSIGN_CELLS_LITERAL_MAX`` centroid doubles the centroids
+    are inlined into the plan (below); past it a vectorized numpy
+    matmul runs per Arrow batch (:func:`_assign_cells_arrow`).  Both
+    tiers share the contract: cosine ranking, ties to the lower cell,
+    degenerate (zero-norm / non-finite) similarity ranks LAST.
 
     The centroid table is k x dim doubles (driver-sized by contract), so
     it is inlined into the plan as an array-of-structs literal and each
@@ -778,11 +678,7 @@ def _assign_cells(df: DataFrame,
         rows = [(int(c), [float(x) for x in vec]) for c, vec in cents]
     if not rows:
         raise ValueError("_assign_cells: empty centroid table")
-    if shape not in ("auto", "literal", "arrow"):
-        raise ValueError(f"unknown _assign_cells shape: {shape!r}")
-    if shape == "arrow" or (shape == "auto" and
-                            len(rows) * len(rows[0][1])
-                            > ASSIGN_CELLS_LITERAL_MAX):
+    if len(rows) * len(rows[0][1]) > ASSIGN_CELLS_LITERAL_MAX:
         return _assign_cells_arrow(df, rows, emb_col, nprobe)
 
     def _norm(vec: list[float]) -> float:
@@ -819,7 +715,7 @@ def _assign_cells_arrow(df: DataFrame, rows: list[tuple[int, list[float]]],
     Still MAP-ONLY (mapInPandas adds no exchange) and still driver-sized
     state: the k x dim centroid matrix rides the task closure.  Per
     batch: ``E @ M.T`` (BLAS — measured ~60x faster than per-row
-    Catalyst higher-order folds at k=4096, scripts/ivf_cells_probe.py),
+    Catalyst higher-order folds at k=4096, SCALE.md),
     then a lexsort on (negated cosine, cell id) whose ordering matches
     the literal tier's struct sort: ties to the lower cell, degenerate
     (zero-norm / non-finite) similarity mapped to +inf so it ranks
@@ -921,7 +817,7 @@ def ann_ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
 #: linear in corpus size when cells grow with the corpus.
 _IVF_KNN_CELL_TARGET = 512
 #: Learned-cell count ceiling: 4096 x dim doubles is the upper end of
-#: what the Arrow assignment tier was probed at (ivf_cells_probe).
+#: what the Arrow assignment tier was probed at (SCALE.md).
 _IVF_KNN_CELLS_CAP = 4096
 
 
@@ -1006,24 +902,21 @@ def ann_ivf_knn_self(corpus: DataFrame, k: int = 5, *,
                       F.col("embedding").alias("q_emb"),
                       l2_norm(F.col("embedding")).alias("q_norm")),
         cents, "query_id", "q_emb", nprobe=nprobe)
-    # Expected candidate volume = nprobe * occupancy per query: past the
-    # tier crossover the scoring runs per CELL (cogroup; each vector
-    # crosses once per probed cell instead of once per candidate — see
-    # COSINE_SCORING_ENV) — with n_vectors unknown the estimate stays 0
-    # and every oracle-gated caller keeps the audited join+fold plan.
+    # Expected candidate volume = nprobe * occupancy per query: past
+    # CELLPAIRS_MIN_CANDIDATES the scoring runs per CELL — with
+    # n_vectors unknown the estimate stays 0 and every oracle-gated
+    # caller keeps the audited join+fold plan.
     est_cand = (nprobe * n_vectors * n_vectors // max(n_cells, 1)
                 if n_vectors else 0)
-    dim = len(cents[0][1]) if cents else 0
-    if _scoring_tier(est_cand) == "cellpairs":
-        scored = _cellpair_knn_scores(query, build, dim, k)
+    if est_cand >= CELLPAIRS_MIN_CANDIDATES:
+        scored = _cellpair_knn_scores(query, build, len(cents[0][1]), k)
     else:
         scored = (
             query.join(build, "cell")
             .filter(F.col("query_id") != F.col("neighbor_id"))
             .withColumn("cosine_sim",
-                        _candidate_cosine(F.col("q_emb"), F.col("c_emb"),
-                                          F.col("q_norm"), F.col("c_norm"),
-                                          dim, est_cand)))
+                        cosine_prenorm(F.col("q_emb"), F.col("c_emb"),
+                                       F.col("q_norm"), F.col("c_norm"))))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id"))
     return (
@@ -1065,21 +958,18 @@ def semantic_dedup_pairs(corpus: DataFrame, threshold: float,
     assigned = _assign_cells(
         corpus.select("vec_id", "embedding"), cents,
         "vec_id", "embedding", nprobe=1)
-    # Expected within-cell pair volume is Σ|cell|²/2 ≈ n²/(2k): past the
-    # tier crossover the pairwise scoring runs per CELL (one grouped
-    # pass; each vector crosses the boundary once instead of once per
-    # candidate pair — see COSINE_SCORING_ENV) — the oracle-gated head
-    # passes n_vectors=None, keeps est 0, and stays on its audited
-    # JVM-only join+fold plan.
+    # Expected within-cell pair volume is Σ|cell|²/2 ≈ n²/(2k): past
+    # CELLPAIRS_MIN_CANDIDATES the pairwise scoring runs per CELL — the
+    # oracle-gated head passes n_vectors=None, keeps est 0, and stays on
+    # its audited JVM-only join+fold plan.
     est_pairs = (n_vectors * n_vectors // (2 * max(n_cells, 1))
                  if n_vectors else 0)
-    dim = len(cents[0][1]) if cents else 0
-    if _scoring_tier(est_pairs) == "cellpairs":
+    if est_pairs >= CELLPAIRS_MIN_CANDIDATES:
         pairs = _cellpair_semantic_scores(
             assigned.select("vec_id", "embedding",
                             l2_norm(F.col("embedding")).alias("nv"),
                             "cell"),
-            dim, threshold)
+            len(cents[0][1]), threshold)
         return (pairs.filter(F.col("cs") >= threshold)
                 .select("vec_a", "vec_b", "cell",
                         F.round("cs", 6).alias("cosine_sim")))
@@ -1091,9 +981,8 @@ def semantic_dedup_pairs(corpus: DataFrame, threshold: float,
                         l2_norm(F.col("embedding")).alias("nvb"), "cell")
     return (a.join(b, "cell")
             .filter(F.col("vec_a") < F.col("vec_b"))
-            .withColumn("cs", _candidate_cosine(
-                F.col("va"), F.col("vb"),
-                F.col("nva"), F.col("nvb"), dim, est_pairs))
+            .withColumn("cs", cosine_prenorm(
+                F.col("va"), F.col("vb"), F.col("nva"), F.col("nvb")))
             .filter(F.col("cs") >= threshold)
             .select("vec_a", "vec_b", "cell",
                     F.round("cs", 6).alias("cosine_sim")))

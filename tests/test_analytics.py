@@ -18,6 +18,15 @@ def _events(spark, rows):
         rows, "user_id bigint, ts timestamp_ntz, event_type string")
 
 
+def _force_assign_tier(monkeypatch, tier: str) -> None:
+    """Force the literal or Arrow cell/cluster assignment tier through
+    its crossover constant (the only tier switch the code has)."""
+    from ab_metadata_pusher_spark.operators import similarity as S
+
+    monkeypatch.setattr(S, "ASSIGN_CELLS_LITERAL_MAX",
+                        0 if tier == "arrow" else 1 << 62)
+
+
 def test_funnel_ignores_steps_before_prior(spark):
     # click@1 precedes the first view@2 -> only click@3 counts
     ev = _events(spark, [(1, _ts(1), "click"), (1, _ts(2), "view"),
@@ -88,7 +97,7 @@ def test_kmeans_separable_clusters(spark):
 def test_update_centroids_null_tolerant(spark):
     """r8 ADVICE: NULL embeddings / NULL elements must not skew the
     mean, and an all-NULL cluster must drop instead of raising
-    TypeError(float(None)).  Both physical shapes obey the contract."""
+    TypeError(float(None))."""
     from ab_metadata_pusher_spark.operators.clustering import (
         update_centroids,
     )
@@ -96,29 +105,10 @@ def test_update_centroids_null_tolerant(spark):
         [(0, 0, [2.0, 4.0]), (1, 0, [4.0, None]), (2, 0, None),
          (3, 1, None)],
         "vec_id bigint, cluster int, embedding array<double>")
-    for shape in ("exploded", "wide"):
-        got = dict(update_centroids(e, e, dim=2, shape=shape))
-        # cluster 0: dim0 mean over {2,4}=3, dim1 over {4} alone=4
-        # (the NULL element and NULL row contribute to neither)
-        assert got == {0: [3.0, 4.0]}, (shape, got)
-
-
-def test_update_centroids_shapes_agree(spark):
-    """The wide and exploded Lloyd shapes are the same aggregation in
-    two physical plans — identical output on a dense corpus."""
-    from ab_metadata_pusher_spark.operators.clustering import (
-        assign_clusters, seed_centroids, update_centroids,
-    )
-    pts = [(i, [float(i % 7), float(i % 5), float(i % 3)])
-           for i in range(40)]
-    e = spark.createDataFrame(
-        pts, "vec_id bigint, embedding array<double>")
-    assigned = assign_clusters(e, seed_centroids(e, 3), keep_emb=True)
-    a = dict(update_centroids(e, assigned, dim=3, shape="exploded"))
-    b = dict(update_centroids(e, assigned, dim=3, shape="wide"))
-    assert a.keys() == b.keys()
-    for c in a:
-        assert a[c] == [round(x, 12) for x in b[c]] or a[c] == b[c]
+    got = dict(update_centroids(e, e, dim=2))
+    # cluster 0: dim0 mean over {2,4}=3, dim1 over {4} alone=4
+    # (the NULL element and NULL row contribute to neither)
+    assert got == {0: [3.0, 4.0]}, got
 
 
 def test_double_literals_nonfinite_and_empty(spark):
@@ -172,7 +162,7 @@ def test_assign_cells_zero_norm_ranks_last(spark):
     assert got == {(10, 1), (10, 2), (11, 0), (11, 1)}
 
 
-def test_assign_cells_tiers_agree(spark):
+def test_assign_cells_tiers_agree(spark, monkeypatch):
     """The literal and arrow tiers implement one contract: identical
     (vec_id, cell) picks on tie-free data, including nprobe truncation.
 
@@ -193,13 +183,15 @@ def test_assign_cells_tiers_agree(spark):
     df = spark.createDataFrame(rows,
                                "vec_id bigint, embedding array<double>")
     for nprobe in (1, 3):
-        lit = {(r["vec_id"], r["cell"])
-               for r in _assign_cells(df, cents, "vec_id", "embedding",
-                                      nprobe, shape="literal").collect()}
-        arr = {(r["vec_id"], r["cell"])
-               for r in _assign_cells(df, cents, "vec_id", "embedding",
-                                      nprobe, shape="arrow").collect()}
-        assert lit == arr and len(lit) == 80 * nprobe, f"nprobe={nprobe}"
+        picks = {}
+        for tier in ("literal", "arrow"):
+            _force_assign_tier(monkeypatch, tier)
+            picks[tier] = {
+                (r["vec_id"], r["cell"])
+                for r in _assign_cells(df, cents, "vec_id", "embedding",
+                                       nprobe).collect()}
+        assert picks["literal"] == picks["arrow"] \
+            and len(picks["literal"]) == 80 * nprobe, f"nprobe={nprobe}"
 
 
 def test_assign_cells_arrow_zero_norm_and_dispatch(spark, monkeypatch):
@@ -212,12 +204,13 @@ def test_assign_cells_arrow_zero_norm_and_dispatch(spark, monkeypatch):
     df = spark.createDataFrame(
         [(10, [1.0, 0.1]), (11, [0.0, 0.0])],
         "vec_id bigint, embedding array<double>")
+    _force_assign_tier(monkeypatch, "arrow")
     got = {(r["vec_id"], r["cell"])
            for r in S._assign_cells(df, cents, "vec_id", "embedding",
-                                    nprobe=2, shape="arrow").collect()}
+                                    nprobe=2).collect()}
     assert got == {(10, 1), (10, 2), (11, 0), (11, 1)}
 
-    # auto picks arrow once k x dim exceeds the threshold
+    # arrow runs once k x dim exceeds the threshold
     monkeypatch.setattr(S, "ASSIGN_CELLS_LITERAL_MAX", 5)
     plan = S._assign_cells(df, cents, "vec_id", "embedding", nprobe=1)
     assert "MapInPandas" in plan._jdf.queryExecution().toString()
@@ -226,7 +219,7 @@ def test_assign_cells_arrow_zero_norm_and_dispatch(spark, monkeypatch):
     assert "MapInPandas" not in plan._jdf.queryExecution().toString()
 
 
-def test_assign_tiers_degenerate_embeddings_agree(spark):
+def test_assign_tiers_degenerate_embeddings_agree(spark, monkeypatch):
     """r9 ADVICE: the arrow tiers crashed on NULL / ragged / null-element
     embeddings (np.asarray over a ragged list) while the literal tiers
     degrade gracefully.  Both tiers now share the degenerate contract:
@@ -242,22 +235,24 @@ def test_assign_tiers_degenerate_embeddings_agree(spark):
         "vec_id bigint, embedding array<double>")
 
     cells = {}
-    for shape in ("literal", "arrow"):
-        cells[shape] = sorted(
+    for tier in ("literal", "arrow"):
+        _force_assign_tier(monkeypatch, tier)
+        cells[tier] = sorted(
             (r["vec_id"], r["cell"])
             for r in _assign_cells(df, cents, "vec_id", "embedding",
-                                   nprobe=2, shape=shape).collect())
+                                   nprobe=2).collect())
     assert cells["literal"] == cells["arrow"]
     # degenerate rows tie to the two lowest cells
     assert [c for v, c in cells["arrow"] if v == 11] == [0, 1]
     assert [c for v, c in cells["arrow"] if v == 13] == [0, 1]
 
     clus = {}
-    for shape in ("literal", "arrow"):
-        clus[shape] = sorted(
+    for tier in ("literal", "arrow"):
+        _force_assign_tier(monkeypatch, tier)
+        clus[tier] = sorted(
             (r["vec_id"], r["cluster"],
              None if r["dist"] is None else round(r["dist"], 6))
-            for r in assign_clusters(df, cents, shape=shape).collect())
+            for r in assign_clusters(df, cents).collect())
     assert clus["literal"] == clus["arrow"]
     by_id = {v: (c, d) for v, c, d in clus["arrow"]}
     for degenerate in (11, 12, 13, 14):
@@ -309,7 +304,7 @@ def test_loop_width_scales_with_edges_and_caps_at_cores():
 def test_assign_clusters_tiers_agree(spark, monkeypatch):
     """assign_clusters mirrors _assign_cells' two tiers (same crossover
     constant): identical (id, cluster) picks and round-6 dists on
-    tie-free data, and auto dispatch crosses to MapInPandas past the
+    tie-free data, and dispatch crosses to MapInPandas past the
     threshold."""
     import random
 
@@ -323,11 +318,12 @@ def test_assign_clusters_tiers_agree(spark, monkeypatch):
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(60)]
     df = spark.createDataFrame(rows,
                                "vec_id bigint, embedding array<double>")
+    _force_assign_tier(monkeypatch, "literal")
     lit = {(r["vec_id"], r["cluster"], round(r["dist"], 6))
-           for r in assign_clusters(df, cents, shape="literal").collect()}
+           for r in assign_clusters(df, cents).collect()}
+    _force_assign_tier(monkeypatch, "arrow")
     arr = {(r["vec_id"], r["cluster"], round(r["dist"], 6))
-           for r in assign_clusters(df, cents, shape="arrow",
-                                    keep_emb=True).collect()}
+           for r in assign_clusters(df, cents, keep_emb=True).collect()}
     assert lit == arr and len(lit) == 60
 
     monkeypatch.setattr(S, "ASSIGN_CELLS_LITERAL_MAX", 5)

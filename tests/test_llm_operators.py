@@ -787,10 +787,10 @@ def test_materialize_mode_decision_table():
     # unset -> lazy persist (no construction-time job, recompute-safe)
     assert _materialize_mode(None, conf({})) == "persist"
     # conf selects; parameter overrides conf
-    for m in ("eager", "persist", "off"):
+    for m in ("eager", "persist"):
         assert _materialize_mode(None, conf({MATERIALIZE_CONF: m})) == m
     assert _materialize_mode(
-        "off", conf({MATERIALIZE_CONF: "eager"})) == "off"
+        "persist", conf({MATERIALIZE_CONF: "eager"})) == "persist"
     # eager demotes to persist on elastic clusters: localCheckpoint
     # blocks are non-replicated executor-local state — losing one
     # mid-job under decommissioning is a job failure
@@ -800,8 +800,9 @@ def test_materialize_mode_decision_table():
     assert _materialize_mode(
         "eager", conf({"spark.decommission.enabled": "true"})) == "persist"
     assert _materialize_mode("eager", conf({})) == "eager"
-    with pytest.raises(ValueError, match="eager|persist|off"):
-        _materialize_mode("bogus", conf({}))
+    for bad in ("bogus", "off"):
+        with pytest.raises(ValueError, match="eager|persist"):
+            _materialize_mode(bad, conf({}))
 
 
 def test_pair_operators_run_no_job_at_construction(spark):
@@ -844,7 +845,7 @@ def test_pair_operators_run_no_job_at_construction(spark):
 
 
 def test_materialize_modes_agree(spark):
-    """eager / persist / off are execution strategies, not semantics:
+    """eager / persist are execution strategies, not semantics:
     identical pair results on every mode (parameter and conf paths)."""
     from ab_metadata_pusher_spark.operators.dedup import (
         MATERIALIZE_CONF, jaccard_pairs,
@@ -854,19 +855,18 @@ def test_materialize_modes_agree(spark):
          (3, "x y z w v u t"), (4, "a b c d e f g")],
         "doc_id long, text string")
     results = {}
-    for mode in ("eager", "persist", "off"):
+    for mode in ("eager", "persist"):
         results[mode] = sorted(
             (r.sid_a, r.sid_b, r.jaccard)
             for r in jaccard_pairs(docs, 0.5, materialize=mode).collect())
     try:
-        spark.conf.set(MATERIALIZE_CONF, "off")
-        results["conf-off"] = sorted(
+        spark.conf.set(MATERIALIZE_CONF, "eager")
+        results["conf-eager"] = sorted(
             (r.sid_a, r.sid_b, r.jaccard)
             for r in jaccard_pairs(docs, 0.5).collect())
     finally:
         spark.conf.unset(MATERIALIZE_CONF)
-    assert results["eager"] == results["persist"] == results["off"] \
-        == results["conf-off"]
+    assert results["eager"] == results["persist"] == results["conf-eager"]
     assert results["eager"]  # non-empty: (1,2) and (1,4) at least
 
 
@@ -918,8 +918,8 @@ def test_release_materialized_unpersists(spark):
     assert _PERSISTED[0].storageLevel.useMemory
     assert release_materialized(spark) == 1
     assert _PERSISTED == []
-    # eager and off modes register nothing
-    jaccard_pairs(docs, 0.5, materialize="off")
+    # eager mode registers nothing
+    jaccard_pairs(docs, 0.5, materialize="eager")
     assert _PERSISTED == []
     # a different session's frames are kept when filtering by session
     jaccard_pairs(docs, 0.5, materialize="persist")
@@ -1166,21 +1166,19 @@ def test_ivf_knn_self_warns_when_probing_every_cell(spark, caplog):
 
 def test_candidate_cosine_tier_selection_and_bit_exactness(
         spark, monkeypatch):
-    """r14: the corpus-scale cosine-scoring tier.  The interpreted
-    `cosine_prenorm` fold pays a first-execution JIT ramp the bench and
-    driver always measure cold (up to ~50x hot CPU on the 4M-candidate
-    quality_label_full stream), so past
-    `SCORING_PANDAS_MIN_CANDIDATES` estimated pairs the scoring runs as
-    an Arrow-batched numpy dot that reproduces the fold's accumulation
-    order BIT-FOR-BIT.  Pin (a) the tier switch: est below threshold /
-    n_vectors unknown -> fold (no Python node in the plan), past it ->
-    cellpairs (r14 second cut: per-cell cogroup, each vector crosses
-    the boundary once per cell instead of once per candidate), env
-    forces any tier; (b) bit-exact equality of all three tiers' full
-    outputs, including NULL-embedding rows."""
+    """The corpus-scale cosine-scoring tiers.  The interpreted
+    `cosine_prenorm` fold pays a first-execution JIT ramp, so past
+    `CELLPAIRS_MIN_CANDIDATES` estimated pairs the scoring runs per
+    cell (cogroup; each vector crosses the boundary once per cell
+    instead of once per candidate) in numpy that reproduces the fold's
+    accumulation order BIT-FOR-BIT.  Pin (a) the tier switch: est below
+    the constant / n_vectors unknown -> fold (no Python node in the
+    plan), past it -> cellpairs, and patching the constant forces
+    either tier; (b) bit-exact equality of both tiers' full outputs,
+    including NULL-embedding rows."""
+    from ab_metadata_pusher_spark.operators import similarity as S
     from ab_metadata_pusher_spark.operators.similarity import (
-        COSINE_SCORING_ENV, SCORING_PANDAS_MIN_CANDIDATES,
-        ann_ivf_knn_self, semantic_dedup_pairs,
+        CELLPAIRS_MIN_CANDIDATES, ann_ivf_knn_self, semantic_dedup_pairs,
     )
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -1191,42 +1189,44 @@ def test_candidate_cosine_tier_selection_and_bit_exactness(
     def _any_python(plan):
         return "ArrowEvalPython" in plan or "InPandas" in plan
 
-    # auto + bounded candidate volume (50 vectors): JVM-only fold plan
-    monkeypatch.delenv(COSINE_SCORING_ENV, raising=False)
+    def force(tier):
+        monkeypatch.setattr(S, "CELLPAIRS_MIN_CANDIDATES",
+                            0 if tier == "cellpairs" else 1 << 62)
+
+    # bounded candidate volume (50 vectors): JVM-only fold plan
     assert not _any_python(plan_of(ann_ivf_knn_self(emb, k=3,
                                                      n_vectors=50)))
     # the oracle-gated SemDeDup head passes n_vectors=None: fold
     assert not _any_python(plan_of(semantic_dedup_pairs(emb, 0.5,
                                                         n_cells=8)))
-    # auto + estimated volume past the crossover: per-cell cogroup tier
-    big = SCORING_PANDAS_MIN_CANDIDATES * 10
+    # estimated volume past the crossover: per-cell cogroup tier
+    big = CELLPAIRS_MIN_CANDIDATES * 10
     assert "FlatMapCoGroupsInPandas" in plan_of(
         ann_ivf_knn_self(emb, k=3, n_vectors=big, n_cells=8, nprobe=2))
     assert "FlatMapGroupsInPandas" in plan_of(
         semantic_dedup_pairs(emb, 0.5, n_cells=8, n_vectors=big))
-    # env forces any tier regardless of the estimate
-    monkeypatch.setenv(COSINE_SCORING_ENV, "fold")
+    # the constant forces either tier regardless of the estimate
+    force("fold")
     assert not _any_python(plan_of(ann_ivf_knn_self(
         emb, k=3, n_vectors=big, n_cells=8, nprobe=2)))
-    monkeypatch.setenv(COSINE_SCORING_ENV, "pandas")
-    assert "ArrowEvalPython" in plan_of(
-        ann_ivf_knn_self(emb, k=3, n_vectors=50))
-    monkeypatch.setenv(COSINE_SCORING_ENV, "cellpairs")
+    force("cellpairs")
     assert "FlatMapCoGroupsInPandas" in plan_of(
         ann_ivf_knn_self(emb, k=3, n_vectors=50))
+    assert "FlatMapGroupsInPandas" in plan_of(
+        semantic_dedup_pairs(emb, 0.5, n_cells=8))
 
-    # bit-exact: full kNN + SemDeDup outputs equal across all three
-    # tiers, with a NULL-embedding row present (fold -> NULL cosine;
-    # the numpy tiers must match, not NaN-poison the batch — and the
-    # cellpairs kNN pruning must still emit the NULL pairs a query
-    # with fewer than k sortable candidates needs)
+    # bit-exact: full kNN + SemDeDup outputs equal across both tiers,
+    # with a NULL-embedding row present (fold -> NULL cosine; cellpairs
+    # must match, not NaN-poison the group — and its kNN pruning must
+    # still emit the NULL pairs a query with fewer than k sortable
+    # candidates needs)
     with_null = emb.select("vec_id", "embedding", "label").unionByName(
         spark.createDataFrame([(9_999, None, 0)],
                               "vec_id bigint, embedding array<float>, "
                               "label int"))
     outs = {}
-    for tier in ("fold", "pandas", "cellpairs"):
-        monkeypatch.setenv(COSINE_SCORING_ENV, tier)
+    for tier in ("fold", "cellpairs"):
+        force(tier)
         outs[tier] = (
             sorted(tuple(r) for r in ann_ivf_knn_self(
                 emb, k=3, n_vectors=50).collect()),
@@ -1236,5 +1236,5 @@ def test_candidate_cosine_tier_selection_and_bit_exactness(
                 with_null.select("vec_id", "embedding"), k=3,
                 n_vectors=50, n_cells=4, nprobe=2).collect()),
         )
-    assert outs["fold"] == outs["pandas"] == outs["cellpairs"]
+    assert outs["fold"] == outs["cellpairs"]
     assert all(outs["fold"])
