@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from ab_metadata_pusher_spark.observability import capture_plan_segment
 
 __all__ = [
-    "double_array_lit",
+    "double_array_lit", "emb_matrix",
     "MATERIALIZE_CONF", "materialize_shared", "release_materialized",
     "spread_if_narrow", "hash_build_guard",
 ]
@@ -386,3 +386,40 @@ def double_array_lit(values) -> "Column":
     if not vals:
         return F.expr("CAST(array() AS array<double>)")
     return F.expr("array({})".format(", ".join(map(double_sql, vals))))
+
+
+def emb_matrix(arr, dim: int):
+    """Decode an Arrow ``list<float|double>`` embedding column into an
+    ``(n x dim)`` float64 matrix plus a boolean validity mask.
+
+    This is the embedding contract of every Python-side vector kernel.
+    A row is INVALID when its list is NULL, its length is not ``dim``,
+    or an element is NULL — the rows on which the JVM folds
+    (``zip_with``/``aggregate``) turn NULL — and its matrix row is
+    zero-filled, so kernels mask it out of their outputs instead of
+    crashing the batch.  NaN elements are values: they stay in the
+    matrix and propagate as they do in the folds.  float elements widen
+    to double exactly, the same cast the folds apply.  ``arr`` may be a
+    ``pyarrow`` Array or ChunkedArray (a Table column); a batch with no
+    invalid row reshapes the flattened child array directly."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    n = len(arr)
+    # flatten() drops NULL lists, so a NULL row contributes 0 values
+    lens = pc.list_value_length(arr).fill_null(0).to_numpy()
+    ok = (lens == dim) & arr.is_valid().to_numpy(zero_copy_only=False)
+    flat = arr.flatten()
+    if flat.null_count:
+        row_of = np.repeat(np.arange(n), lens)
+        ok[row_of[flat.is_null().to_numpy(zero_copy_only=False)]] = False
+    vals = flat.to_numpy(zero_copy_only=False).astype(np.float64,
+                                                        copy=False)
+    if ok.all():
+        return vals.reshape(n, dim), ok
+    m = np.zeros((n, dim), dtype=np.float64)
+    m[ok] = vals[np.repeat(ok, lens)].reshape(-1, dim)
+    return m, ok

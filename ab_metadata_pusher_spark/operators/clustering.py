@@ -22,7 +22,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ab_metadata_pusher_spark.operators._shared import double_sql
+from ab_metadata_pusher_spark.operators._shared import (
+    double_sql, emb_matrix,
+)
 from ab_metadata_pusher_spark.operators.similarity import _dbl
 
 __all__ = ["seed_centroids", "assign_clusters", "update_centroids",
@@ -121,13 +123,16 @@ def _assign_clusters_arrow(corpus: DataFrame,
     literal tier's left fold (argmin still ties to the lower cluster
     id within its own values).
 
-    Degenerate rows (NULL / ragged / null-element embeddings) follow
-    the literal tier's contract instead of crashing the batch (r9
-    ADVICE): every distance is NULL, so array_min ties every struct to
-    the LOWEST cluster id and sqrt(NULL) is NULL — here the row is
-    masked out of the matmul and emitted as (lowest cluster id, NULL
-    dist) directly."""
+    Embeddings invalid under :func:`_shared.emb_matrix` follow the
+    literal tier's contract instead of crashing the batch (r9 ADVICE):
+    every distance is NULL, so array_min ties every struct to the
+    LOWEST cluster id and sqrt(NULL) is NULL — here the row is masked
+    out of the matmul and emitted as (lowest cluster id, NULL dist)
+    directly.  A NaN element is a value, not NULL: every distance is
+    NaN, argmin takes the first (lowest) cluster and ``dist`` stays
+    NaN, as in the literal tier."""
     import numpy as np
+    import pyarrow as pa
 
     ids = np.asarray([c for c, _ in centroids], dtype=np.int64)
     mat = np.asarray([v for _, v in centroids], dtype=np.float64)
@@ -141,22 +146,8 @@ def _assign_clusters_arrow(corpus: DataFrame,
     out_schema = ", ".join(out_cols)
 
     def fn(batches):
-        import pandas as pd
-
-        dim = mat.shape[1]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vals = list(pdf[emb_col])
-            ok = np.fromiter(
-                (v is not None and len(v) == dim
-                 and not any(x is None for x in v) for v in vals),
-                dtype=bool, count=len(vals))
-            emb = np.zeros((len(vals), dim), dtype=np.float64)
-            if ok.any():
-                emb[ok] = np.asarray(
-                    [vals[i] for i in np.flatnonzero(ok)],
-                    dtype=np.float64)
+        for batch in batches:
+            emb, ok = emb_matrix(batch.column(emb_col), mat.shape[1])
             d2 = ((emb * emb).sum(axis=1)[:, None]
                   - 2.0 * (emb @ mat.T) + c2[None, :])
             pick = np.argmin(d2, axis=1)  # first (lowest) index on ties
@@ -164,16 +155,14 @@ def _assign_clusters_arrow(corpus: DataFrame,
             dist = np.sqrt((diff * diff).sum(axis=1))
             cluster = ids[pick].astype(np.int32)
             cluster[~ok] = degenerate_cluster
-            out = {id_col: pdf[id_col].to_numpy(),
-                   "cluster": cluster,
-                   "dist": pd.array(np.where(ok, dist, np.nan),
-                                    dtype="Float64")}
-            out["dist"][~ok] = pd.NA  # NULL, not NaN, on the wire
+            cols = {id_col: batch.column(id_col),
+                    "cluster": pa.array(cluster),
+                    "dist": pa.array(dist, mask=~ok)}
             if keep_emb:
-                out[emb_col] = pdf[emb_col]
-            yield pd.DataFrame(out)
+                cols[emb_col] = batch.column(emb_col)
+            yield pa.RecordBatch.from_pydict(cols)
 
-    return corpus.mapInPandas(fn, out_schema)
+    return corpus.mapInArrow(fn, out_schema)
 
 
 def update_centroids(corpus: DataFrame, assigned: DataFrame,

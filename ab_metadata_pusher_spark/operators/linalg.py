@@ -20,9 +20,11 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ab_metadata_pusher_spark.operators._shared import emb_matrix
 
 __all__ = ["gramian_partials", "covariance", "pca_eigh"]
 
@@ -35,28 +37,32 @@ def gramian_partials(df: DataFrame, vec_col: str, d: int) -> DataFrame:
     Output rows: ``(i, j, sum x_i*x_j)`` for the d x d Gramian,
     ``(i, -1, sum x_i)`` for the first moments, ``(-1, -1, n)`` for the
     count.  All values accumulate in float64 regardless of the column's
-    element type, so engines agree bit-for-bit on each product.
+    element type, so engines agree bit-for-bit on each product.  Rows
+    invalid under :func:`_shared.emb_matrix` (NULL, wrong length, NULL
+    element) are skipped and not counted in ``n`` — SQL aggregate
+    semantics.
     """
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         S = np.zeros((d, d))
         m = np.zeros(d)
         n = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array(pdf[vec_col].to_list(), dtype=np.float64)
+        for batch in batches:
+            X, ok = emb_matrix(batch.column(0), d)
+            if not ok.all():
+                X = X[ok]
             S += X.T @ X
             m += X.sum(axis=0)
             n += len(X)
         ii, jj = np.indices((d, d))
-        out = pd.DataFrame({
-            "i": np.concatenate([ii.ravel(), np.arange(d), [-1]]),
-            "j": np.concatenate([jj.ravel(), np.full(d, -1), [-1]]),
-            "s": np.concatenate([S.ravel(), m, [float(n)]]),
+        yield pa.RecordBatch.from_pydict({
+            "i": pa.array(np.concatenate([ii.ravel(), np.arange(d), [-1]]),
+                          pa.int32()),
+            "j": pa.array(np.concatenate([jj.ravel(), np.full(d, -1), [-1]]),
+                          pa.int32()),
+            "s": pa.array(np.concatenate([S.ravel(), m, [float(n)]])),
         })
-        yield out.astype({"i": "int32", "j": "int32", "s": "float64"})
 
-    partials = df.select(vec_col).mapInPandas(fold, _PARTIAL_SCHEMA)
+    partials = df.select(vec_col).mapInArrow(fold, _PARTIAL_SCHEMA)
     return partials.groupBy("i", "j").agg(F.sum("s").alias("s"))
 
 

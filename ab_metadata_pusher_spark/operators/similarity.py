@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ab_metadata_pusher_spark.operators._shared import (
-    double_array_lit, double_sql,
+    double_array_lit, double_sql, emb_matrix,
 )
 
 logger = logging.getLogger(__name__)
@@ -107,29 +107,6 @@ def _seq_dot_matrix(qm, cm, dim: int):
     return acc
 
 
-def _emb_matrix(series, dim: int):
-    """Stack a pandas Series of embedding arrays into (n x dim) float64
-    + validity mask, zero-filling invalid rows (NULL / ragged / NULL
-    element) — same validation contract as ``_assign_clusters_arrow``."""
-    import numpy as np
-
-    n = len(series)
-    ok = np.ones(n, dtype=bool)
-    try:  # fast path: uniform, null-free batch stacks directly
-        m = np.asarray(list(series), dtype=np.float64)
-        if m.shape != (n, dim):
-            raise ValueError
-    except (ValueError, TypeError):
-        m = np.zeros((n, dim), dtype=np.float64)
-        for r in range(n):
-            v = series.iloc[r]
-            if v is None or len(v) != dim or any(x is None for x in v):
-                ok[r] = False
-                continue
-            m[r] = np.asarray(v, dtype=np.float64)
-    return m, ok
-
-
 def _cellpair_knn_scores(query: DataFrame, build: DataFrame,
                          dim: int, k: int) -> DataFrame:
     """Guide-§8 kNN candidate scoring: cogroup by cell, ship each
@@ -138,15 +115,21 @@ def _cellpair_knn_scores(query: DataFrame, build: DataFrame,
     ``_seq_dot_matrix``), and emit only the pairs that can still reach
     the global top-``k``.
 
+    A pair's cosine is NULL where the fold's is: an embedding invalid
+    under :func:`_shared.emb_matrix` on either side, or a zero norm
+    product (the fold's division by zero — NULL without ANSI mode;
+    under ANSI the fold raises DIVIDE_BY_ZERO).  Every other cosine,
+    NaN included, crosses the Arrow boundary unchanged.
+
     Pruning is a SUPERSET filter, so the downstream window rank sees
     every eventual winner: a pair in the query's global top-k has at
     most k-1 pairs above it globally, hence at most k-1 above it inside
     its own cell, hence cosine >= the group's k-th value (ties at the
     boundary are kept, not split).  NaN sorts LARGEST in Spark, so it
-    maps to +inf for the cut; NULL cosines (invalid embeddings) sort
-    LAST under ``desc``, so their pairs are emitted only when the query
-    has fewer than k sortable candidates in the cell (otherwise k
-    sortable pairs already outrank every NULL globally).
+    maps to +inf for the cut; NULL cosines sort LAST under ``desc``, so
+    their pairs are emitted only when the query has fewer than k
+    sortable candidates in the cell (otherwise k sortable pairs already
+    outrank every NULL globally).
 
     Input contracts: ``query`` = (query_id, q_emb, q_norm, cell) with
     at most one row per (query_id, cell) — ``_assign_cells`` explodes
@@ -154,7 +137,7 @@ def _cellpair_knn_scores(query: DataFrame, build: DataFrame,
     Self-pairs (query_id == neighbor_id) are dropped here, exactly as
     the join tiers' filter does before the window."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     qid_t = dict((f.name, f.dataType.simpleString())
                  for f in query.schema)["query_id"]
@@ -163,25 +146,18 @@ def _cellpair_knn_scores(query: DataFrame, build: DataFrame,
     out_schema = (f"`query_id` {qid_t}, `neighbor_id` {nid_t}, "
                   "`cosine_sim` double")
 
-    def fn(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(lpdf) or not len(rpdf):
-            return pd.DataFrame({
-                "query_id": lpdf["query_id"][:0] if len(lpdf.columns)
-                else pd.Series(dtype="int64"),
-                "neighbor_id": rpdf["neighbor_id"][:0]
-                if len(rpdf.columns) else pd.Series(dtype="int64"),
-                "cosine_sim": pd.Series(dtype="float64")})
-        qm, okq = _emb_matrix(lpdf["q_emb"], dim)
-        cm, okb = _emb_matrix(rpdf["c_emb"], dim)
-        qn = lpdf["q_norm"].to_numpy(dtype=np.float64)
-        cn = rpdf["c_norm"].to_numpy(dtype=np.float64)
-        qids = lpdf["query_id"].to_numpy()
-        bids = rpdf["neighbor_id"].to_numpy()
+    def fn(lt: pa.Table, rt: pa.Table) -> pa.Table:
+        qm, okq = emb_matrix(lt.column("q_emb"), dim)
+        cm, okb = emb_matrix(rt.column("c_emb"), dim)
+        qids = lt.column("query_id").to_numpy()
+        bids = rt.column("neighbor_id").to_numpy()
+        den = np.multiply.outer(lt.column("q_norm").to_numpy(),
+                                rt.column("c_norm").to_numpy())
         with np.errstate(divide="ignore", invalid="ignore"):
-            cos = _seq_dot_matrix(qm, cm, dim) / np.multiply.outer(qn, cn)
+            cos = _seq_dot_matrix(qm, cm, dim) / den
         not_self = qids[:, None] != bids[None, :]
-        both_ok = okq[:, None] & okb[None, :]
-        valid = both_ok & not_self
+        sortable = okq[:, None] & okb[None, :] & (den != 0)
+        valid = sortable & not_self
         # Spark orders NaN above every double: +inf for the cut.
         filled = np.where(valid, np.where(np.isnan(cos), np.inf, cos),
                           -np.inf)
@@ -191,18 +167,16 @@ def _cellpair_knn_scores(query: DataFrame, build: DataFrame,
         else:
             vk = np.full(filled.shape[0], -np.inf)
         keep = valid & (filled >= vk[:, None])
-        n_sortable = valid.sum(axis=1)
-        keep |= (~both_ok & not_self) & (n_sortable < k)[:, None]
+        keep |= (~sortable & not_self) & (valid.sum(axis=1) < k)[:, None]
         qi, bi = np.nonzero(keep)
-        cs = pd.array(cos[qi, bi], dtype="Float64")
-        cs[~(okq[qi] & okb[bi])] = pd.NA  # NULL, not NaN, on the wire
-        return pd.DataFrame({"query_id": qids[qi],
-                             "neighbor_id": bids[bi],
-                             "cosine_sim": cs})
+        return pa.table({
+            "query_id": lt.column("query_id").take(qi),
+            "neighbor_id": rt.column("neighbor_id").take(bi),
+            "cosine_sim": pa.array(cos[qi, bi], mask=~sortable[qi, bi])})
 
     return (query.groupBy("cell")
             .cogroup(build.groupBy("cell"))
-            .applyInPandas(fn, out_schema))
+            .applyInArrow(fn, out_schema))
 
 
 def _cellpair_semantic_scores(assigned: DataFrame, dim: int,
@@ -213,32 +187,34 @@ def _cellpair_semantic_scores(assigned: DataFrame, dim: int,
     numpy, and only pairs passing the threshold leave Python (the same
     ``>=`` on the same doubles as the JVM filter; NaN is kept because
     Spark orders NaN above every double, so the JVM filter keeps it
-    too, and NULL cosines are dropped because a NULL comparison
-    filters).  Emits (vec_a < vec_b, cell, cs); the caller applies the
+    too).  Pairs whose cosine the fold makes NULL (see
+    ``_cellpair_knn_scores``) are dropped, because a NULL comparison
+    filters.  Emits (vec_a < vec_b, cell, cs); the caller applies the
     JVM threshold filter again (a no-op belt) and the output rounding."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     types = {f.name: f.dataType.simpleString() for f in assigned.schema}
     out_schema = (f"`vec_a` {types['vec_id']}, `vec_b` {types['vec_id']}, "
                   f"`cell` {types['cell']}, `cs` double")
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        ids = pdf["vec_id"].to_numpy()
-        em, ok = _emb_matrix(pdf["embedding"], dim)
-        nv = pdf["nv"].to_numpy(dtype=np.float64)
+    def fn(t: pa.Table) -> pa.Table:
+        ids = t.column("vec_id").to_numpy()
+        em, ok = emb_matrix(t.column("embedding"), dim)
+        nv = t.column("nv").to_numpy()
+        den = np.multiply.outer(nv, nv)
         with np.errstate(divide="ignore", invalid="ignore"):
-            cos = _seq_dot_matrix(em, em, dim) / np.multiply.outer(nv, nv)
-        pair = (ids[:, None] < ids[None, :]) & ok[:, None] & ok[None, :]
-        with np.errstate(invalid="ignore"):
-            keep = pair & ((cos >= threshold) | np.isnan(cos))
+            cos = _seq_dot_matrix(em, em, dim) / den
+            keep = ((ids[:, None] < ids[None, :]) & ok[:, None]
+                    & ok[None, :] & (den != 0)
+                    & ((cos >= threshold) | np.isnan(cos)))
         ai, bi = np.nonzero(keep)
-        return pd.DataFrame({"vec_a": ids[ai], "vec_b": ids[bi],
-                             "cell": pdf["cell"].to_numpy()[ai],
-                             "cs": cos[ai, bi]})
+        return pa.table({"vec_a": t.column("vec_id").take(ai),
+                         "vec_b": t.column("vec_id").take(bi),
+                         "cell": t.column("cell").take(ai),
+                         "cs": pa.array(cos[ai, bi])})
 
-    return assigned.groupBy("cell").applyInPandas(fn, out_schema)
+    return assigned.groupBy("cell").applyInArrow(fn, out_schema)
 
 
 def topk_cosine_bruteforce(corpus: DataFrame, queries: DataFrame,
@@ -712,25 +688,26 @@ def _assign_cells_arrow(df: DataFrame, rows: list[tuple[int, list[float]]],
                         emb_col: str, nprobe: int) -> DataFrame:
     """Large-k cell assignment: one numpy matmul per Arrow batch.
 
-    Still MAP-ONLY (mapInPandas adds no exchange) and still driver-sized
+    Still MAP-ONLY (mapInArrow adds no exchange; every input column
+    passes through the Arrow batch untouched) and still driver-sized
     state: the k x dim centroid matrix rides the task closure.  Per
     batch: ``E @ M.T`` (BLAS — measured ~60x faster than per-row
     Catalyst higher-order folds at k=4096, SCALE.md),
     then a lexsort on (negated cosine, cell id) whose ordering matches
     the literal tier's struct sort: ties to the lower cell, degenerate
     (zero-norm / non-finite) similarity mapped to +inf so it ranks
-    last.  NULL / ragged / null-element embeddings take the same +inf
-    path instead of crashing the batch (r9 ADVICE): the literal tier's
-    NULL fold makes every ``_negcs`` NULL, which sorts like the all-NaN
-    case — ties break to the lowest cell ids — so degenerate rows are
-    masked out of the matmul and handed the all-inf row.  Trade vs the
-    literal tier: float accumulation order differs
+    last.  Embeddings invalid under :func:`_shared.emb_matrix` take the
+    same +inf path instead of crashing the batch (r9 ADVICE): the
+    literal tier's NULL fold makes every ``_negcs`` NULL, which sorts
+    like the all-NaN case — ties break to the lowest cell ids.  Trade
+    vs the literal tier: float accumulation order differs
     (BLAS vs left fold) and even MATHEMATICALLY identical centroids can
     land 1 ULP apart (different matmul output columns take different
     SIMD/remainder paths), so near-exact cosine ties can pick different
     cells — which is why the oracle-gated small-k queries stay on the
     exact tier and the crossover is a constant, not a heuristic."""
     import numpy as np
+    import pyarrow as pa
 
     cents = sorted(rows)
     cell_ids = np.asarray([c for c, _ in cents], dtype=np.int64)
@@ -742,34 +719,20 @@ def _assign_cells_arrow(df: DataFrame, rows: list[tuple[int, list[float]]],
         for f in df.schema.fields) + ", `cell` bigint"
 
     def fn(batches):
-        dim = mat.shape[1]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vals = list(pdf[emb_col])
-            ok = np.fromiter(
-                (v is not None and len(v) == dim
-                 and not any(x is None for x in v) for v in vals),
-                dtype=bool, count=len(vals))
-            emb = np.zeros((len(vals), dim), dtype=np.float64)
-            if ok.any():
-                emb[ok] = np.asarray(
-                    [vals[i] for i in np.flatnonzero(ok)],
-                    dtype=np.float64)
+        for batch in batches:
+            emb, ok = emb_matrix(batch.column(emb_col), mat.shape[1])
             vnorm = np.sqrt((emb * emb).sum(axis=1))
             with np.errstate(divide="ignore", invalid="ignore"):
                 negcs = -(emb @ mat.T) / (vnorm[:, None] * cnorm[None, :])
             negcs = np.where(np.isfinite(negcs), negcs, np.inf)
             negcs[~ok] = np.inf
-            n = negcs.shape[0]
             order = np.lexsort(
                 (np.broadcast_to(cell_ids, negcs.shape), negcs),
                 axis=1)[:, :n_out]
-            rep = pdf.loc[pdf.index.repeat(n_out)].reset_index(drop=True)
-            rep["cell"] = cell_ids[order].ravel()
-            yield rep
+            rep = batch.take(np.repeat(np.arange(batch.num_rows), n_out))
+            yield rep.append_column("cell", pa.array(cell_ids[order].ravel()))
 
-    return df.mapInPandas(fn, out_schema)
+    return df.mapInArrow(fn, out_schema)
 
 
 def ann_ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,

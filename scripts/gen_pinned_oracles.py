@@ -88,7 +88,7 @@ def _independent_pca_rows(sf_dir: str) -> list[tuple]:
     eigenvalues/ratios of the population covariance
     cov(i,j) = E[x_i x_j] - E[x_i] E[x_j] over ``embeddings.embedding``
     in float64 (plans/llm_queries.py q_embedding_pca_variance).  One
-    whole-corpus numpy pass — no Gramian partials, no mapInPandas, no
+    whole-corpus numpy pass — no Gramian partials, no mapInArrow, no
     Spark session anywhere."""
     t = pq.read_table(f"{sf_dir}/embeddings.parquet", columns=["embedding"])
     X = np.array(t.column("embedding").to_pylist(), dtype=np.float64)

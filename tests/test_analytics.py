@@ -213,10 +213,12 @@ def test_assign_cells_arrow_zero_norm_and_dispatch(spark, monkeypatch):
     # arrow runs once k x dim exceeds the threshold
     monkeypatch.setattr(S, "ASSIGN_CELLS_LITERAL_MAX", 5)
     plan = S._assign_cells(df, cents, "vec_id", "embedding", nprobe=1)
-    assert "MapInPandas" in plan._jdf.queryExecution().toString()
+    assert "MapInArrow" in plan._jdf.queryExecution().toString()
     monkeypatch.setattr(S, "ASSIGN_CELLS_LITERAL_MAX", 8192)
     plan = S._assign_cells(df, cents, "vec_id", "embedding", nprobe=1)
-    assert "MapInPandas" not in plan._jdf.queryExecution().toString()
+    qe = plan._jdf.queryExecution().toString()
+    assert not any(node in qe for node in (
+        "InPandas", "InArrow", "ArrowEvalPython", "BatchEvalPython"))
 
 
 def test_assign_tiers_degenerate_embeddings_agree(spark, monkeypatch):
@@ -224,14 +226,17 @@ def test_assign_tiers_degenerate_embeddings_agree(spark, monkeypatch):
     embeddings (np.asarray over a ragged list) while the literal tiers
     degrade gracefully.  Both tiers now share the degenerate contract:
     _assign_cells ties every cell to the lowest ids; assign_clusters
-    emits (lowest cluster id, NULL dist)."""
+    emits (lowest cluster id, NULL dist).  A NaN element is a value,
+    not NULL: it ties to the lowest ids too, and its dist is NaN in
+    both tiers (the Arrow boundary must not turn it into NULL)."""
     from ab_metadata_pusher_spark.operators.clustering import assign_clusters
     from ab_metadata_pusher_spark.operators.similarity import _assign_cells
 
     cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [-1.0, 0.5])]
     df = spark.createDataFrame(
         [(10, [1.0, 0.1]), (11, None), (12, [0.5]),
-         (13, [None, 1.0]), (14, [0.2, 0.9, 0.4])],
+         (13, [None, 1.0]), (14, [0.2, 0.9, 0.4]),
+         (15, [float("nan"), 1.0])],
         "vec_id bigint, embedding array<double>")
 
     cells = {}
@@ -245,18 +250,22 @@ def test_assign_tiers_degenerate_embeddings_agree(spark, monkeypatch):
     # degenerate rows tie to the two lowest cells
     assert [c for v, c in cells["arrow"] if v == 11] == [0, 1]
     assert [c for v, c in cells["arrow"] if v == 13] == [0, 1]
+    assert [c for v, c in cells["arrow"] if v == 15] == [0, 1]
 
     clus = {}
     for tier in ("literal", "arrow"):
         _force_assign_tier(monkeypatch, tier)
         clus[tier] = sorted(
             (r["vec_id"], r["cluster"],
-             None if r["dist"] is None else round(r["dist"], 6))
+             # NaN != NaN: compare it as a token
+             None if r["dist"] is None
+             else "NaN" if r["dist"] != r["dist"] else round(r["dist"], 6))
             for r in assign_clusters(df, cents).collect())
     assert clus["literal"] == clus["arrow"]
     by_id = {v: (c, d) for v, c, d in clus["arrow"]}
     for degenerate in (11, 12, 13, 14):
         assert by_id[degenerate] == (0, None)
+    assert by_id[15] == (0, "NaN")
 
 
 def test_lpa_alignments_agree(spark):
@@ -304,7 +313,7 @@ def test_loop_width_scales_with_edges_and_caps_at_cores():
 def test_assign_clusters_tiers_agree(spark, monkeypatch):
     """assign_clusters mirrors _assign_cells' two tiers (same crossover
     constant): identical (id, cluster) picks and round-6 dists on
-    tie-free data, and dispatch crosses to MapInPandas past the
+    tie-free data, and dispatch crosses to MapInArrow past the
     threshold."""
     import random
 
@@ -328,7 +337,7 @@ def test_assign_clusters_tiers_agree(spark, monkeypatch):
 
     monkeypatch.setattr(S, "ASSIGN_CELLS_LITERAL_MAX", 5)
     plan = assign_clusters(df, cents)
-    assert "MapInPandas" in plan._jdf.queryExecution().toString()
+    assert "MapInArrow" in plan._jdf.queryExecution().toString()
 
 
 def test_kmeans_tie_breaks_to_lower_cluster(spark):

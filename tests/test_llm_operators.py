@@ -592,6 +592,19 @@ def test_pca_matches_direct_numpy_covariance(spark, sf_dir):
     assert np.allclose(got["explained_ratio"].to_numpy(),
                        ref[:8] / total, atol=1e-4)
 
+    # NULL and ragged rows are skipped and not counted, as SQL
+    # aggregates skip NULLs: the partials equal numpy's on X alone
+    d = X.shape[1]
+    vecs = emb.select("embedding")
+    hostile = vecs.unionByName(spark.createDataFrame(
+        [(None,), ([1.0] * (d - 1),)], vecs.schema))
+    s = {(r.i, r.j): r.s for r in
+         L.gramian_partials(hostile, "embedding", d).collect()}
+    assert s[(-1, -1)] == len(X)
+    assert np.allclose([s[(i, -1)] for i in range(d)], X.sum(axis=0))
+    assert np.allclose([[s[(i, j)] for j in range(d)] for i in range(d)],
+                       X.T @ X)
+
 
 def test_phash_blocked_join_equals_bruteforce(spark, sf_dir):
     """The pigeonhole Hamming join must be lossless for 64-bit pHashes
@@ -1169,13 +1182,14 @@ def test_candidate_cosine_tier_selection_and_bit_exactness(
     """The corpus-scale cosine-scoring tiers.  The interpreted
     `cosine_prenorm` fold pays a first-execution JIT ramp, so past
     `CELLPAIRS_MIN_CANDIDATES` estimated pairs the scoring runs per
-    cell (cogroup; each vector crosses the boundary once per cell
+    cell (Arrow cogroup; each vector crosses the boundary once per cell
     instead of once per candidate) in numpy that reproduces the fold's
     accumulation order BIT-FOR-BIT.  Pin (a) the tier switch: est below
     the constant / n_vectors unknown -> fold (no Python node in the
     plan), past it -> cellpairs, and patching the constant forces
-    either tier; (b) bit-exact equality of both tiers' full outputs,
-    including NULL-embedding rows."""
+    either tier; (b) bit-exact equality of both tiers' full outputs on
+    hostile embeddings: NULL, zero-norm, NaN element, NULL element and
+    ragged rows."""
     from ab_metadata_pusher_spark.operators import similarity as S
     from ab_metadata_pusher_spark.operators.similarity import (
         CELLPAIRS_MIN_CANDIDATES, ann_ivf_knn_self, semantic_dedup_pairs,
@@ -1187,7 +1201,8 @@ def test_candidate_cosine_tier_selection_and_bit_exactness(
         return df._jdf.queryExecution().executedPlan().toString()
 
     def _any_python(plan):
-        return "ArrowEvalPython" in plan or "InPandas" in plan
+        return any(node in plan for node in (
+            "InPandas", "InArrow", "ArrowEvalPython", "BatchEvalPython"))
 
     def force(tier):
         monkeypatch.setattr(S, "CELLPAIRS_MIN_CANDIDATES",
@@ -1201,40 +1216,61 @@ def test_candidate_cosine_tier_selection_and_bit_exactness(
                                                         n_cells=8)))
     # estimated volume past the crossover: per-cell cogroup tier
     big = CELLPAIRS_MIN_CANDIDATES * 10
-    assert "FlatMapCoGroupsInPandas" in plan_of(
+    assert "FlatMapCoGroupsInArrow" in plan_of(
         ann_ivf_knn_self(emb, k=3, n_vectors=big, n_cells=8, nprobe=2))
-    assert "FlatMapGroupsInPandas" in plan_of(
+    assert "FlatMapGroupsInArrow" in plan_of(
         semantic_dedup_pairs(emb, 0.5, n_cells=8, n_vectors=big))
     # the constant forces either tier regardless of the estimate
     force("fold")
     assert not _any_python(plan_of(ann_ivf_knn_self(
         emb, k=3, n_vectors=big, n_cells=8, nprobe=2)))
     force("cellpairs")
-    assert "FlatMapCoGroupsInPandas" in plan_of(
+    assert "FlatMapCoGroupsInArrow" in plan_of(
         ann_ivf_knn_self(emb, k=3, n_vectors=50))
-    assert "FlatMapGroupsInPandas" in plan_of(
+    assert "FlatMapGroupsInArrow" in plan_of(
         semantic_dedup_pairs(emb, 0.5, n_cells=8))
 
-    # bit-exact: full kNN + SemDeDup outputs equal across both tiers,
-    # with a NULL-embedding row present (fold -> NULL cosine; cellpairs
-    # must match, not NaN-poison the group — and its kNN pruning must
-    # still emit the NULL pairs a query with fewer than k sortable
-    # candidates needs)
-    with_null = emb.select("vec_id", "embedding", "label").unionByName(
-        spark.createDataFrame([(9_999, None, 0)],
-                              "vec_id bigint, embedding array<float>, "
-                              "label int"))
-    outs = {}
-    for tier in ("fold", "cellpairs"):
-        force(tier)
-        outs[tier] = (
-            sorted(tuple(r) for r in ann_ivf_knn_self(
-                emb, k=3, n_vectors=50).collect()),
-            sorted(tuple(r) for r in semantic_dedup_pairs(
-                with_null, 0.2, n_cells=4).collect()),
-            sorted(tuple(r) for r in ann_ivf_knn_self(
-                with_null.select("vec_id", "embedding"), k=3,
-                n_vectors=50, n_cells=4, nprobe=2).collect()),
-        )
+    # bit-exact: full kNN + SemDeDup outputs equal across both tiers on
+    # hostile rows.  The fold's cosine is NULL for a NULL / NULL-element
+    # / ragged embedding (zip_with pads with NULL) and for a zero norm
+    # product, and NaN for a NaN element; cellpairs must emit the same
+    # NULLs and NaNs (NaN ranks FIRST in the kNN window and passes the
+    # SemDeDup threshold), and its kNN pruning must still emit the NULL
+    # pairs a query with fewer than k sortable candidates needs.  Under
+    # ANSI mode the fold raises DIVIDE_BY_ZERO on the zero-norm row, so
+    # the comparison runs with legacy division (zero divisor -> NULL).
+    nan = float("nan")
+    hostile = emb.select("vec_id", "embedding", "label").unionByName(
+        spark.createDataFrame(
+            [(9_995, [0.0] * 64, 0), (9_996, [nan] + [0.1] * 63, 0),
+             (9_997, [None] + [0.1] * 63, 0), (9_998, [0.1] * 65, 0),
+             (9_999, None, 0)],
+            "vec_id bigint, embedding array<float>, label int"))
+
+    def rows(df):
+        # NaN != NaN: compare it as a token (sorting never reaches the
+        # cosine column, the leading ids are unique per row)
+        return sorted(tuple("NaN" if v != v else v for v in r)
+                      for r in df.collect())
+
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        outs = {}
+        for tier in ("fold", "cellpairs"):
+            force(tier)
+            outs[tier] = (
+                rows(ann_ivf_knn_self(emb, k=3, n_vectors=50)),
+                rows(semantic_dedup_pairs(hostile, 0.2, n_cells=4)),
+                rows(ann_ivf_knn_self(
+                    hostile.select("vec_id", "embedding"), k=3,
+                    n_vectors=50, n_cells=4, nprobe=2)),
+            )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
     assert outs["fold"] == outs["cellpairs"]
     assert all(outs["fold"])
+    _, sem, knn = outs["fold"]
+    # the hostile rows reach the outputs as NaN and NULL cosines
+    assert any(r[3] == "NaN" for r in sem)
+    assert {"NaN", None} <= {r[2] for r in knn}
