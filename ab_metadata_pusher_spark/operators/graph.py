@@ -6,11 +6,17 @@ imported at job/sample_mysql_aws_sqs_job.py:9; the LABEL/KEY column contract
 declared at publisher/aws_sqs_csv_puiblisher.py:43-51; key shape
 ``{database}://{cluster}.{schema}/{table}[/{column}]``).
 
-Here the flattening is a pure DataFrame plan: ``explode`` the columns array,
-synthesize keys with ``concat_ws``/``concat``, union per-label frames by
-name.  Properties are really typed (sort_order int, is_view boolean) —
-the reference's ``:UNQUOTED`` CSV-header typing hack is only re-created in
-the legacy CSV writer (sinks/staging.py), never in the engine.
+Here the flattening is one ``Generate``: each output is a single
+``inline(concat(...))`` SQL expression over the table_metadata rows
+(``array(...)`` for the Table node, ``IF(description != '', ...)`` for its
+description, ``transform(columns, ...)`` for the Column nodes and edges,
+``transform(filter(columns, ...), ...)`` for the column descriptions), so
+the plan carries no ``Union`` and no second read of the upstream
+aggregation: one plan per output, built with one driver->JVM call, whose
+only shuffle is table_metadata's own ``Exchange``.  Properties are really
+typed (sort_order int, is_view boolean) — the reference's ``:UNQUOTED``
+CSV-header typing hack is only re-created in the legacy CSV writer
+(sinks/staging.py), never in the engine.
 
 Node labels: Table, Column, Description.  Description nodes exist only for
 non-empty descriptions, keyed ``<parent_key>/_description`` — matching the
@@ -19,9 +25,11 @@ Databuilder graph shape (SURVEY.md §1.1b).
 Relations (FIXTURES.md B4): Table-[COLUMN/COLUMN_OF]->Column and
 parent-[DESCRIPTION/DESCRIPTION_OF]->Description.
 
-Scale note: both outputs derive from one exploded frame; Catalyst reuses the
-scan, there is no shuffle at all (narrow ops only), and key synthesis is
-whole-stage-codegen string concat.
+Precondition: one input row per table key.  table_metadata groups by the
+table identity plus (description, is_view), and every source here (the
+parquet catalog, the JDBC catalog shapes) emits one such pair per table,
+so each Table node and table-description edge is emitted exactly once
+without a de-duplicating shuffle.
 """
 
 from __future__ import annotations
@@ -57,104 +65,68 @@ def column_key(table_key_col: Column, col_name: Column) -> Column:
     return F.concat(table_key_col, F.lit("/"), col_name)
 
 
-def _exploded(tm: DataFrame) -> DataFrame:
-    """One row per column with table context + both keys, computed once."""
-    tkey = table_key().alias("table_key")
-    return (
-        tm.select("database", "cluster", "schema", "table_name",
-                  F.col("description").alias("table_description"),
-                  "is_view", tkey,
-                  F.explode("columns").alias("col"))
-        .select("*",
-                column_key(F.col("table_key"), F.col("col.name")).alias("col_key"))
-    )
+#: ``table_key()``/``column_key()`` spelled in SQL over a table_metadata row
+#: (``c`` is the lambda variable bound to one element of ``columns``).
+_TKEY = "concat(database, '://', cluster, '.', schema, '/', table_name)"
+_CKEY = f"concat({_TKEY}, '/', c.name)"
 
 
-def _node(df: DataFrame, label: str, key: Column, name: Column,
-          description: Column, col_type: Column | None = None,
-          sort_order: Column | None = None,
-          is_view: Column | None = None) -> DataFrame:
-    return df.select(
-        F.lit(label).alias("label"),
-        key.alias("key"),
-        name.alias("name"),
-        description.alias("description"),
-        (col_type if col_type is not None
-         else F.lit(None).cast("string")).alias("col_type"),
-        (sort_order if sort_order is not None
-         else F.lit(None).cast("int")).alias("sort_order"),
-        (is_view if is_view is not None
-         else F.lit(None).cast("boolean")).alias("is_view"),
-    )
+def _node_struct(label: str, key: str, name: str, description: str,
+                 col_type: str = "CAST(NULL AS STRING)",
+                 sort_order: str = "CAST(NULL AS INT)",
+                 is_view: str = "CAST(NULL AS BOOLEAN)") -> str:
+    return (f"named_struct('label', '{label}', 'key', {key}, 'name', {name}, "
+            f"'description', {description}, 'col_type', {col_type}, "
+            f"'sort_order', {sort_order}, 'is_view', {is_view})")
+
+
+def _edge_struct(start_label: str, start_key: str, end_label: str,
+                 end_key: str, rel_type: str, reverse_type: str) -> str:
+    return (f"named_struct('start_label', '{start_label}', "
+            f"'start_key', {start_key}, 'end_label', '{end_label}', "
+            f"'end_key', {end_key}, 'type', '{rel_type}', "
+            f"'reverse_type', '{reverse_type}')")
+
+
+_DESCRIBED_COLUMNS = "filter(columns, c -> c.description != '')"
+
+_NODES_SQL = f"""inline(concat(
+  array({_node_struct("Table", _TKEY, "table_name", "description",
+                      is_view="is_view")}),
+  IF(description != '',
+     array({_node_struct("Description", f"concat({_TKEY}, '/_description')",
+                         "'_description'", "description")}),
+     array()),
+  transform(columns, c -> {_node_struct(
+      "Column", _CKEY, "c.name", "c.description", col_type="c.col_type",
+      sort_order="c.sort_order")}),
+  transform({_DESCRIBED_COLUMNS}, c -> {_node_struct(
+      "Description", f"concat({_CKEY}, '/_description')", "'_description'",
+      "c.description")})))"""
+
+_RELATIONS_SQL = f"""inline(concat(
+  transform(columns, c -> {_edge_struct(
+      "Table", _TKEY, "Column", _CKEY, "COLUMN", "COLUMN_OF")}),
+  IF(description != '',
+     array({_edge_struct("Table", _TKEY, "Description",
+                         f"concat({_TKEY}, '/_description')",
+                         "DESCRIPTION", "DESCRIPTION_OF")}),
+     array()),
+  transform({_DESCRIBED_COLUMNS}, c -> {_edge_struct(
+      "Column", _CKEY, "Description", f"concat({_CKEY}, '/_description')",
+      "DESCRIPTION", "DESCRIPTION_OF")})))"""
 
 
 def to_nodes(tm: DataFrame) -> DataFrame:
-    """All graph nodes as one typed DataFrame (FIXTURES.md B3)."""
-    ex = _exploded(tm)
-
-    tables = tm.select("database", "cluster", "schema", "table_name",
-                       "description", "is_view", table_key().alias("key"))
-    table_nodes = _node(
-        tables.drop_duplicates(["key"]), "Table",
-        F.col("key"), F.col("table_name"), F.col("description"),
-        is_view=F.col("is_view"))
-
-    column_nodes = _node(
-        ex, "Column",
-        F.col("col_key"), F.col("col.name"), F.col("col.description"),
-        col_type=F.col("col.col_type"), sort_order=F.col("col.sort_order"))
-
-    table_desc_nodes = _node(
-        tables.filter(F.col("description") != ""), "Description",
-        F.concat(F.col("key"), F.lit("/_description")),
-        F.lit("_description"), F.col("description"))
-
-    col_desc_nodes = _node(
-        ex.filter(F.col("col.description") != ""), "Description",
-        F.concat(F.col("col_key"), F.lit("/_description")),
-        F.lit("_description"), F.col("col.description"))
-
-    return (table_nodes
-            .unionByName(column_nodes)
-            .unionByName(table_desc_nodes)
-            .unionByName(col_desc_nodes))
-
-
-def _relation(df: DataFrame, start_label: str, start_key: Column,
-              end_label: str, end_key: Column,
-              rel_type: str, reverse_type: str) -> DataFrame:
-    return df.select(
-        F.lit(start_label).alias("start_label"),
-        start_key.alias("start_key"),
-        F.lit(end_label).alias("end_label"),
-        end_key.alias("end_key"),
-        F.lit(rel_type).alias("type"),
-        F.lit(reverse_type).alias("reverse_type"),
-    )
+    """All graph nodes as one typed DataFrame (FIXTURES.md B3): per table
+    row, its Table node, its description node, its Column nodes and their
+    description nodes."""
+    return tm.selectExpr(_NODES_SQL)
 
 
 def to_relations(tm: DataFrame) -> DataFrame:
     """All graph relationships as one DataFrame (FIXTURES.md B4)."""
-    ex = _exploded(tm)
-
-    table_column = _relation(
-        ex, "Table", F.col("table_key"), "Column", F.col("col_key"),
-        "COLUMN", "COLUMN_OF")
-
-    table_desc = _relation(
-        ex.select("table_key", "table_description").drop_duplicates(["table_key"])
-          .filter(F.col("table_description") != ""),
-        "Table", F.col("table_key"),
-        "Description", F.concat(F.col("table_key"), F.lit("/_description")),
-        "DESCRIPTION", "DESCRIPTION_OF")
-
-    col_desc = _relation(
-        ex.filter(F.col("col.description") != ""),
-        "Column", F.col("col_key"),
-        "Description", F.concat(F.col("col_key"), F.lit("/_description")),
-        "DESCRIPTION", "DESCRIPTION_OF")
-
-    return table_column.unionByName(table_desc).unionByName(col_desc)
+    return tm.selectExpr(_RELATIONS_SQL)
 
 
 def degrees(relations: DataFrame) -> DataFrame:

@@ -18,7 +18,19 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "DEFAULT_CONFIG"]
+__all__ = ["get_spark", "DEFAULT_CONFIG", "driver_memory_for"]
+
+#: Cap on the local-mode driver heap default, in GiB.
+DRIVER_MEMORY_CAP_GIB = 48
+
+
+def driver_memory_for(physical_bytes: int) -> str:
+    """Default ``spark.driver.memory`` for a host with ``physical_bytes``
+    of RAM: half of it in whole GiB, capped at 48g and never below 1g —
+    a fixed 48g heap lets the JVM grow past what a small host has."""
+    half_gib = physical_bytes // (2 * 2 ** 30)
+    return f"{max(1, min(DRIVER_MEMORY_CAP_GIB, half_gib))}g"
+
 
 DEFAULT_CONFIG: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -30,10 +42,13 @@ DEFAULT_CONFIG: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     # Local-mode driver JVM heap: Spark's 1g default OOMs legitimate
     # hundred-million-row shuffles (measured: the graph wedge aggregation
-    # at sf0.1) on a 128 GiB box.  Only effective before the JVM starts —
+    # at sf0.1) on a 128 GiB box; the default is half the host's RAM up
+    # to 48g (driver_memory_for).  Only effective before the JVM starts —
     # i.e. for the FIRST session in the process — and ignored with a
     # warning on a real cluster where spark-submit owns the setting.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", driver_memory_for(
+            os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))),
     # WIDTH ASSUMPTION (r10 ADVICE): the shuffle-hash hints in
     # operators/dedup.py (shingle self-join) and the triangle intersect
     # joins bound their per-task hash build by 1/width of the build

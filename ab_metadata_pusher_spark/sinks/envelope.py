@@ -35,29 +35,27 @@ SQS_HARD_LIMIT = 256 * 1024
 DEFAULT_MAX_BYTES = SQS_HARD_LIMIT - 4 * 1024
 
 
+def _encode(value: Any) -> str:
+    # Compact, sorted keys, raw UTF-8: non-ASCII is emitted as-is, not
+    # \uXXXX-escaped, so a body's byte length is what actually goes over
+    # the wire (SQS limits are byte limits) and what a raw-UTF-8 consumer
+    # (or the DuckDB to_json oracle in sink_envelope_chunking) measures.
+    return json.dumps(value, separators=(",", ":"), sort_keys=True,
+                      ensure_ascii=False, default=str)
+
+
 def _record_size(record: dict[str, Any]) -> int:
     # +1 for the comma separator in a JSON array; sizes are UTF-8 bytes
     # (SQS limits are byte limits, and non-ASCII inflates past len(str)).
-    # ensure_ascii=False keeps that statement true: the default \uXXXX
-    # escaping would charge 6 ASCII bytes per escaped char while
-    # serializing DIFFERENT bytes than a raw-UTF-8 consumer (or the
-    # DuckDB to_json oracle in sink_envelope_chunking) measures.
-    return len(json.dumps(record, separators=(",", ":"), sort_keys=True,
-                          ensure_ascii=False, default=str)
-               .encode("utf-8")) + 1
+    return len(_encode(record).encode("utf-8")) + 1
 
 
 def envelope_json(nodes: list[dict[str, Any]], relations: list[dict[str, Any]],
                   chunk: int, of: int, tag: str) -> str:
     """Serialize one envelope deterministically (sorted keys, compact,
-    raw UTF-8 — non-ASCII is emitted as-is, not \\uXXXX-escaped, so the
-    byte accounting in ``_record_size``/``pack_envelopes`` matches what
-    actually goes over the wire)."""
-    return json.dumps(
-        {"nodes": nodes, "relations": relations, "chunk": chunk, "of": of,
-         "tag": tag},
-        separators=(",", ":"), sort_keys=True, ensure_ascii=False,
-        default=str)
+    raw UTF-8)."""
+    return _encode({"nodes": nodes, "relations": relations, "chunk": chunk,
+                    "of": of, "tag": tag})
 
 
 def pack_envelopes(nodes: Iterable[dict[str, Any]],
@@ -65,6 +63,11 @@ def pack_envelopes(nodes: Iterable[dict[str, Any]],
                    tag: str,
                    max_bytes: int = DEFAULT_MAX_BYTES) -> Iterator[str]:
     """Greedy-pack records into JSON envelope strings, each <= max_bytes.
+
+    Each record is serialized once: its JSON text is both what is charged
+    against the budget (UTF-8 bytes + 1 for the array comma) and what is
+    spliced into the body, so a body is byte-identical to
+    ``envelope_json`` over the same records without a second encode.
 
     A single record larger than ``max_bytes`` raises ValueError — the
     caller must split the record (the reference would instead fail at the
@@ -75,9 +78,9 @@ def pack_envelopes(nodes: Iterable[dict[str, Any]],
     if budget <= 0:
         raise ValueError(f"max_bytes={max_bytes} leaves no record budget")
 
-    chunks: list[tuple[list[dict], list[dict]]] = []
-    cur_nodes: list[dict] = []
-    cur_rels: list[dict] = []
+    chunks: list[tuple[list[str], list[str]]] = []
+    cur_nodes: list[str] = []
+    cur_rels: list[str] = []
     cur_size = 0
 
     def flush() -> None:
@@ -88,19 +91,23 @@ def pack_envelopes(nodes: Iterable[dict[str, Any]],
 
     for kind, records in (("nodes", nodes), ("relations", relations)):
         for record in records:
-            size = _record_size(record)
+            text = _encode(record)
+            size = len(text.encode("utf-8")) + 1  # _record_size, one encode
             if size > budget:
                 raise ValueError(
                     f"single {kind} record of {size} bytes exceeds the "
                     f"{budget}-byte envelope budget; split the record")
             if cur_size + size > budget:
                 flush()
-            (cur_nodes if kind == "nodes" else cur_rels).append(record)
+            (cur_nodes if kind == "nodes" else cur_rels).append(text)
             cur_size += size
     flush()
 
     total = len(chunks)
+    tag_json = _encode(tag)
     for i, (ns, rs) in enumerate(chunks):
-        body = envelope_json(ns, rs, i, total, tag)
+        # envelope_json's sorted key order: chunk, nodes, of, relations, tag
+        body = (f'{{"chunk":{i},"nodes":[{",".join(ns)}],"of":{total},'
+                f'"relations":[{",".join(rs)}],"tag":{tag_json}}}')
         assert len(body.encode("utf-8")) <= max_bytes, "packing invariant violated"
         yield body

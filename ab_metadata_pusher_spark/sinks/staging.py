@@ -18,6 +18,7 @@ re-publish without re-extracting (job/customized_job.py:65-67).  Here:
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 
@@ -26,6 +27,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 __all__ = ["StagingArea"]
+
+#: Schema sidecar of an empty nodes write (underscore prefix: Spark
+#: readers skip it, like ``_SUCCESS``).
+_EMPTY_SCHEMA = "_empty_schema.json"
 
 _NUMERIC_TYPES = (T.IntegerType, T.LongType, T.DoubleType, T.FloatType,
                   T.BooleanType, T.ShortType, T.ByteType, T.DecimalType)
@@ -64,8 +69,18 @@ class StagingArea:
         pointer flips only after BOTH writes succeed."""
         version = uuid.uuid4().hex[:12]
         vdir = self._version_dir(version)
-        (nodes.write.mode("overwrite").partitionBy("label")
-         .parquet(os.path.join(vdir, "nodes")))
+        nodes_dir = os.path.join(vdir, "nodes")
+        nodes.write.mode("overwrite").partitionBy("label").parquet(nodes_dir)
+        if not any(n.startswith("label=") for n in os.listdir(nodes_dir)):
+            # An empty frame writes no label= partition, and parquet has
+            # no schema to infer from none: keep the read-back schema
+            # (partition column last) in a sidecar Spark readers ignore.
+            schema = T.StructType(
+                [f for f in nodes.schema if f.name != "label"]
+                + [nodes.schema["label"]])
+            with open(os.path.join(nodes_dir, _EMPTY_SCHEMA), "w",
+                      encoding="utf-8") as f:
+                f.write(schema.json())
         (relations.write.mode("overwrite")
          .parquet(os.path.join(vdir, "relationships")))
         os.makedirs(self.base_dir, exist_ok=True)
@@ -75,7 +90,13 @@ class StagingArea:
         os.replace(tmp, self._current)
 
     def read_nodes(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(os.path.join(self._resolve(), "nodes"))
+        path = os.path.join(self._resolve(), "nodes")
+        sidecar = os.path.join(path, _EMPTY_SCHEMA)
+        if os.path.exists(sidecar):
+            with open(sidecar, encoding="utf-8") as f:
+                schema = T.StructType.fromJson(json.load(f))
+            return spark.read.schema(schema).parquet(path)
+        return spark.read.parquet(path)
 
     def read_relations(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(

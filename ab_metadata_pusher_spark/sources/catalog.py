@@ -16,6 +16,8 @@ the pipeline (operators/metadata.py) is source-agnostic.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -67,6 +69,9 @@ _CATALOG_SCHEMA = T.StructType([
     T.StructField("is_view", T.BooleanType(), False),
 ])
 
+#: Arrow type of each _CATALOG_SCHEMA column, in order.
+_ARROW_COLUMN_TYPES = [pa.string()] * 8 + [pa.int32(), pa.bool_()]
+
 
 #: arrow type name -> Spark DDL simpleString, matching exactly what
 #: sources/fixtures.load_table yields (incl. the nanos->NTZ conversion).
@@ -102,10 +107,10 @@ def catalog_columns(spark: SparkSession, sf_dir: str,
     Footers are read driver-side with pyarrow (a pure metadata operation —
     one ``spark.read.parquet(...).schema`` per table launches a Spark job
     each and dominated the flagship query's wall-clock; tested equal in
-    tests/test_catalog_introspection.py).
+    tests/test_catalog_introspection.py).  The rows reach Spark as one
+    Arrow table, a local relation: reading the frame runs no Python worker
+    and no extra Spark job, however many plans read it.
     """
-    import pyarrow.parquet as pq
-
     rows = []
     for table in tables:
         # directory-shaped tables (every production table) introspect
@@ -125,9 +130,10 @@ def catalog_columns(spark: SparkSession, sf_dir: str,
                 i,
                 False,
             ))
-    # Catalog metadata is intrinsically tiny (one row per column).  Build the
-    # backing RDD as a single slice: the default path pickles the list into
-    # defaultParallelism near-empty Python partitions, so every downstream
-    # union branch pays a fleet of Python-worker round-trips per evaluation.
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, numSlices=1), _CATALOG_SCHEMA)
+    # Transpose the finished tuples rather than appending to per-column
+    # lists in the loop above: the transpose peaks lower on the driver.
+    columns = list(zip(*rows)) or [()] * len(_ARROW_COLUMN_TYPES)
+    arrow = pa.table([pa.array(c, type=t)
+                      for c, t in zip(columns, _ARROW_COLUMN_TYPES)],
+                     names=_CATALOG_SCHEMA.names)
+    return spark.createDataFrame(arrow, _CATALOG_SCHEMA)

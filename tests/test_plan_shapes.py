@@ -374,3 +374,35 @@ def test_hash_build_guard_strict_flips_shj_to_smj(
         caplog.clear()
         assert shingle_ops() == ["ShuffledHashJoin"]
         assert not caplog.records
+
+
+def test_metadata_graph_is_one_generate_over_a_local_scan(spark, sf_dir):
+    """to_nodes/to_relations each run as ONE Generate over
+    table_metadata's single shuffle: no Union (each union branch re-ran
+    the aggregation and its Exchange), and the catalog is a
+    LocalTableScan, so no pickled-RDD scan or Python worker runs."""
+    import re
+
+    from ab_metadata_pusher_spark.operators.graph import (
+        to_nodes, to_relations,
+    )
+    from ab_metadata_pusher_spark.operators.metadata import table_metadata
+    from ab_metadata_pusher_spark.sources.catalog import catalog_columns
+
+    tm = table_metadata(catalog_columns(spark, sf_dir))
+    for build in (to_nodes, to_relations):
+        df = build(tm)
+        df.collect()
+        # the executed (final adaptive) plan, without its initial plan
+        final = (df._jdf.queryExecution().executedPlan().toString()
+                 .split("== Initial Plan ==")[0])
+        node = r"^[\s:+|-]*(?:\*\(\d+\) )?"
+        shuffles = re.findall(node + r"(?:Reused)?Exchange\b", final, re.M)
+        assert len(shuffles) == 1, (build.__name__, final)
+        assert len(re.findall(node + r"Generate\b", final, re.M)) == 1, (
+            build.__name__, final)
+        assert "Union" not in final, (build.__name__, final)
+        assert "LocalTableScan" in final, (build.__name__, final)
+        assert not re.search(
+            r"ExistingRDD|PythonRDD|InPandas|InArrow|ArrowEvalPython|"
+            r"BatchEvalPython", final), (build.__name__, final)

@@ -41,15 +41,29 @@ class StubSqsClient:
 
 # -- envelope ---------------------------------------------------------------
 
+#: Text that JSON must escape or that is multi-byte in UTF-8: quotes,
+#: backslashes, control characters, U+2028 (legal in JSON, not in JS
+#: source), non-ASCII up to 4-byte code points — and NULL values.
+_HOSTILE_TEXT = st.one_of(st.none(), st.text(
+    alphabet=st.one_of(st.sampled_from('"\\\x1f\u2028é漢😀'),
+                       st.characters()),
+    max_size=20))
+
+
 @settings(max_examples=30, deadline=None)
 @given(st.lists(st.integers(min_value=1, max_value=9000), max_size=60),
-       st.lists(st.integers(min_value=1, max_value=9000), max_size=60))
-def test_pack_envelopes_properties(node_sizes, rel_sizes):
-    nodes = [{"key": f"n{i}", "pad": "x" * s} for i, s in enumerate(node_sizes)]
-    rels = [{"start_key": f"r{i}", "pad": "y" * s}
+       st.lists(st.integers(min_value=1, max_value=9000), max_size=60),
+       st.lists(_HOSTILE_TEXT, min_size=1, max_size=8),
+       st.sampled_from(["t1", 'tag "é\\\u2028\x1f"']))
+def test_pack_envelopes_properties(node_sizes, rel_sizes, texts, tag):
+    nodes = [{"key": f"n{i}", "pad": "x" * s,
+              "text": texts[i % len(texts)]}
+             for i, s in enumerate(node_sizes)]
+    rels = [{"start_key": f"r{i}", "pad": "y" * s,
+             "text": texts[-1 - i % len(texts)]}
             for i, s in enumerate(rel_sizes)]
     max_bytes = 16 * 1024
-    bodies = list(pack_envelopes(nodes, rels, tag="t1", max_bytes=max_bytes))
+    bodies = list(pack_envelopes(nodes, rels, tag=tag, max_bytes=max_bytes))
 
     # every chunk under the bound
     assert all(len(b.encode()) <= max_bytes for b in bodies)
@@ -58,7 +72,10 @@ def test_pack_envelopes_properties(node_sizes, rel_sizes):
     for i, b in enumerate(bodies):
         env = json.loads(b)
         assert env["chunk"] == i and env["of"] == len(bodies)
-        assert env["tag"] == "t1"
+        assert env["tag"] == tag
+        # each body is exactly envelope_json's serialization of its records
+        assert b == envelope_json(env["nodes"], env["relations"], i,
+                                  len(bodies), tag)
         out_nodes.extend(env["nodes"])
         out_rels.extend(env["relations"])
     assert out_nodes == nodes and out_rels == rels
@@ -83,7 +100,13 @@ def test_pack_envelopes_counts_real_utf8_bytes():
     # consumer (including the sink_envelope_chunking DuckDB oracle).
     rec = {"key": "café"}  # {"key":"café"} -> 14 ASCII + 2-byte é
     from ab_metadata_pusher_spark.sinks.envelope import _record_size
-    assert _record_size(rec) == len('{"key":"caf"}'.encode()) + 2 + 1
+    charge = len('{"key":"caf"}'.encode()) + 2 + 1
+    assert _record_size(rec) == charge
+    overhead = len(envelope_json([], [], 0, 10 ** 9, "t").encode())
+    # the record fits a budget of exactly its charge, and not one less
+    assert len(list(pack_envelopes([rec], [], "t", overhead + charge))) == 1
+    with pytest.raises(ValueError, match=f"record of {charge} bytes"):
+        list(pack_envelopes([rec], [], "t", overhead + charge - 1))
 
     # multibyte text still packs under the bound, measured in bytes
     nodes = [{"key": f"n{i}", "pad": "é" * 700} for i in range(8)]
@@ -101,6 +124,80 @@ def test_pack_envelopes_counts_real_utf8_bytes():
 def _graph(spark, sf_dir):
     tm = table_metadata(catalog_columns(spark, sf_dir))
     return to_nodes(tm), to_relations(tm)
+
+
+def test_empty_catalog_publishes_nothing(spark, sf_dir, tmp_path):
+    """No tables: an empty catalog with the exact schema, an empty graph,
+    and a pipeline run that stages both empty frames and sends 0
+    messages."""
+    from ab_metadata_pusher_spark.operators.graph import NODE_COLUMNS
+    from ab_metadata_pusher_spark.sources.catalog import _CATALOG_SCHEMA
+
+    cat = catalog_columns(spark, sf_dir, tables=())
+    assert cat.schema == _CATALOG_SCHEMA and cat.count() == 0
+    tm = table_metadata(cat)
+    nodes, relations = to_nodes(tm), to_relations(tm)
+    assert nodes.count() == 0 and relations.count() == 0
+
+    stub = StubSqsClient()
+    publisher = SqsPublisher("https://queue/test.fifo", lambda: stub)
+    staging = StagingArea(str(tmp_path / "s"))
+    result = Pipeline(
+        identifier="empty", staging=staging,
+        extract=lambda sp: (nodes, relations),
+        publish=lambda n, r: publisher.publish_collected(n, r, "t"),
+    ).run(spark)
+    assert result.staged and result.published
+    assert result.staged_rows == {"nodes": 0, "relations": 0}
+    assert result.publish_report.messages_sent == 0 and stub.batches == []
+    # the empty staged frame reads back like a non-empty one: the
+    # partition column last
+    assert staging.read_nodes(spark).columns == (
+        [c for c in NODE_COLUMNS if c != "label"] + ["label"])
+
+
+def test_graph_rows_from_hand_built_catalog(spark):
+    """Literal expected rows for the edge cases of the flattening: an
+    empty table description (no Description node or edge), a
+    single-column table, and a column description with quotes and
+    non-ASCII characters."""
+    from ab_metadata_pusher_spark.sources.catalog import _CATALOG_SCHEMA
+
+    desc = 'says "héllo" — ünïcode \\ ok'
+    cat = spark.createDataFrame([
+        ("spark", "testdata", "main", "Solo", "", "Only_Col", "int", None,
+         1, False),
+        ("spark", "testdata", "main", "docs", "doc's table", "id",
+         "bigint", None, 1, True),
+        ("spark", "testdata", "main", "docs", "doc's table", "body",
+         "string", desc, 2, True),
+    ], _CATALOG_SCHEMA)
+    tm = table_metadata(cat)
+    solo, docs = "spark://testdata.main/solo", "spark://testdata.main/docs"
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    assert rows(to_nodes(tm)) == sorted([
+        ("Table", solo, "solo", "", None, None, False),
+        ("Column", f"{solo}/only_col", "only_col", "", "int", 1, None),
+        ("Table", docs, "docs", "doc's table", None, None, True),
+        ("Description", f"{docs}/_description", "_description",
+         "doc's table", None, None, None),
+        ("Column", f"{docs}/id", "id", "", "bigint", 1, None),
+        ("Column", f"{docs}/body", "body", desc, "string", 2, None),
+        ("Description", f"{docs}/body/_description", "_description", desc,
+         None, None, None),
+    ], key=repr)
+    assert rows(to_relations(tm)) == sorted([
+        ("Table", solo, "Column", f"{solo}/only_col", "COLUMN", "COLUMN_OF"),
+        ("Table", docs, "Column", f"{docs}/id", "COLUMN", "COLUMN_OF"),
+        ("Table", docs, "Column", f"{docs}/body", "COLUMN", "COLUMN_OF"),
+        ("Table", docs, "Description", f"{docs}/_description",
+         "DESCRIPTION", "DESCRIPTION_OF"),
+        ("Column", f"{docs}/body", "Description",
+         f"{docs}/body/_description", "DESCRIPTION", "DESCRIPTION_OF"),
+    ], key=repr)
 
 
 def test_sqs_publish_collected(spark, sf_dir):
