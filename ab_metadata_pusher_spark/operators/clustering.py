@@ -130,7 +130,10 @@ def _assign_clusters_arrow(corpus: DataFrame,
     out of the matmul and emitted as (lowest cluster id, NULL dist)
     directly.  A NaN element is a value, not NULL: every distance is
     NaN, argmin takes the first (lowest) cluster and ``dist`` stays
-    NaN, as in the literal tier."""
+    NaN, as in the literal tier.  A centroid with a NaN coordinate is
+    at NaN distance from every row, which ranks after every number
+    (array_min's order), so it wins only a row whose distances are all
+    NaN."""
     import numpy as np
     import pyarrow as pa
 
@@ -150,7 +153,12 @@ def _assign_clusters_arrow(corpus: DataFrame,
             emb, ok = emb_matrix(batch.column(emb_col), mat.shape[1])
             d2 = ((emb * emb).sum(axis=1)[:, None]
                   - 2.0 * (emb @ mat.T) + c2[None, :])
-            pick = np.argmin(d2, axis=1)  # first (lowest) index on ties
+            # NaN ranks last, as in array_min; first (lowest) index on
+            # ties.  An all-NaN row keeps column 0.
+            nan = np.isnan(d2)
+            pick = np.argmin(np.where(nan, np.inf, d2), axis=1)
+            at_nan = nan[np.arange(len(pick)), pick]
+            pick[at_nan] = np.argmax(~nan[at_nan], axis=1)
             diff = emb - mat[pick]
             dist = np.sqrt((diff * diff).sum(axis=1))
             cluster = ids[pick].astype(np.int32)

@@ -804,13 +804,13 @@ def q_sink_envelope_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ab_metadata_pusher_spark.sinks.envelope import (
         _record_size, pack_envelopes,
     )
+    from ab_metadata_pusher_spark.sinks.sqs import collect_records
 
     tm = table_metadata(catalog_columns(spark, sf_dir))
     nodes = to_nodes(tm).orderBy("label", "key")
     rels = to_relations(tm).orderBy("start_key", "end_key")
-    node_recs = [r.asDict() for r in nodes.collect()]
-    rel_recs = [r.asDict() for r in rels.collect()]
-    bodies = list(pack_envelopes(node_recs, rel_recs, _CHUNK_TAG,
+    bodies = list(pack_envelopes(collect_records(nodes),
+                                 collect_records(rels), _CHUNK_TAG,
                                  _CHUNK_MAX_BYTES))
     payloads: list[int] = []
     n_records = 0

@@ -16,7 +16,11 @@ dead ``JOB_PUBLISH_TAG``.  This sink fixes all three:
 Two execution modes:
 
 * ``publish_collected`` — driver-side, for metadata-sized outputs
-  (reference parity: the whole graph of a database's catalog is small);
+  (reference parity: the whole graph of a database's catalog is small).
+  Each frame crosses to the driver as one Arrow collect
+  (:func:`collect_records`), not as pickled Rows; its columns must be
+  string, integral, boolean or floating, the types whose Arrow records
+  equal ``Row.asDict`` and so pack into the same bodies;
 * ``publish_distributed`` — ``foreachPartition``: each executor packs and
   sends its partition, so 100 TB of records never transit the driver.
   Clients are constructed per-partition via the injectable factory.
@@ -34,12 +38,13 @@ from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from ab_metadata_pusher_spark.sinks.envelope import (
     DEFAULT_MAX_BYTES, pack_envelopes,
 )
 
-__all__ = ["SqsPublisher", "PublishReport"]
+__all__ = ["SqsPublisher", "PublishReport", "collect_records"]
 
 logger = logging.getLogger(__name__)
 
@@ -53,8 +58,30 @@ class PublishReport:
     bytes_sent: int
 
 
+#: Column types whose Arrow records equal ``Row.asDict``.  Others do
+#: not (a timestamp comes back tz-aware, binary as ``bytes``, a map as a
+#: list of pairs) and would change the JSON bodies.
+_RECORD_TYPES = (T.StringType, T.ByteType, T.ShortType, T.IntegerType,
+                 T.LongType, T.BooleanType, T.FloatType, T.DoubleType)
+
+
 def _dedup_id(body: str) -> str:
     return hashlib.sha256(body.encode("utf-8")).hexdigest()
+
+
+def collect_records(frame: DataFrame) -> list[dict[str, Any]]:
+    """The frame's rows as dicts, in order, through one Arrow collect.
+
+    Equal to ``[r.asDict(recursive=True) for r in frame.collect()]`` for
+    the flat string/integral/boolean/floating frames this accepts;
+    raises ``TypeError`` naming the first column of any other type."""
+    for field in frame.schema:
+        if not isinstance(field.dataType, _RECORD_TYPES):
+            raise TypeError(
+                f"collect_records: column {field.name!r} has type "
+                f"{field.dataType.simpleString()}; only string, integral, "
+                "boolean and floating columns keep Row.asDict's records")
+    return frame.toArrow().to_pylist()
 
 
 class SqsPublisher:
@@ -122,10 +149,16 @@ class SqsPublisher:
                           tag: str) -> PublishReport:
         """Collect + pack + send from the driver.  Correct choice when the
         output is metadata-sized (the reference's regime); raises early if
-        a single record exceeds the envelope budget."""
-        node_recs = [r.asDict(recursive=True) for r in nodes.collect()]
-        rel_recs = [r.asDict(recursive=True) for r in relations.collect()]
-        bodies = pack_envelopes(node_recs, rel_recs, tag, self.max_bytes)
+        a single record exceeds the envelope budget.
+
+        Each frame is collected once as Arrow and turned into records
+        by :func:`collect_records`, so both frames may hold only string,
+        integral, boolean and floating columns (a graph frame does);
+        any other column type raises ``TypeError`` before anything is
+        sent."""
+        bodies = pack_envelopes(collect_records(nodes),
+                                collect_records(relations),
+                                tag, self.max_bytes)
         report = self.send_bodies(self.client_factory(), bodies)
         logger.info("published %d messages in %d batches (%d bytes) tag=%s",
                     report.messages_sent, report.batches_sent,

@@ -28,12 +28,23 @@ from pyspark.sql import types as T
 
 __all__ = ["StagingArea"]
 
-#: Schema sidecar of an empty nodes write (underscore prefix: Spark
-#: readers skip it, like ``_SUCCESS``).
-_EMPTY_SCHEMA = "_empty_schema.json"
+#: Schema sidecar of a staged frame (underscore prefix: Spark readers
+#: skip it, like ``_SUCCESS``).
+_SCHEMA = "_schema.json"
 
 _NUMERIC_TYPES = (T.IntegerType, T.LongType, T.DoubleType, T.FloatType,
                   T.BooleanType, T.ShortType, T.ByteType, T.DecimalType)
+
+
+def _write_schema(path: str, schema: T.StructType,
+                  name: str = _SCHEMA) -> None:
+    with open(os.path.join(path, name), "w", encoding="utf-8") as f:
+        f.write(schema.json())
+
+
+def _read_schema(sidecar: str) -> T.StructType:
+    with open(sidecar, encoding="utf-8") as f:
+        return T.StructType.fromJson(json.load(f))
 
 
 class StagingArea:
@@ -46,6 +57,12 @@ class StagingArea:
     re-publishable artifact — readers keep resolving the last fully
     committed version (the restartability contract EP3 depends on; the
     reference got this for free by never overwriting mid-job).
+
+    Every ``write`` also leaves a ``_schema.json`` sidecar beside each
+    frame's parquet, before the pointer flips, so the read-back takes
+    its schema from the sidecar and launches no Spark job (schema
+    inference reads the parquet footers in a job per frame).  A version
+    staged without sidecars reads back by inference.
     """
 
     def __init__(self, base_dir: str) -> None:
@@ -65,42 +82,41 @@ class StagingArea:
             return self._version_dir(f.read().strip())
 
     def write(self, nodes: DataFrame, relations: DataFrame) -> None:
-        """Partitioned-by-label parquet under a new version; the CURRENT
-        pointer flips only after BOTH writes succeed."""
+        """Partitioned-by-label parquet under a new version, each frame
+        with its schema sidecar; the CURRENT pointer flips only after
+        BOTH writes succeed."""
         version = uuid.uuid4().hex[:12]
         vdir = self._version_dir(version)
         nodes_dir = os.path.join(vdir, "nodes")
         nodes.write.mode("overwrite").partitionBy("label").parquet(nodes_dir)
-        if not any(n.startswith("label=") for n in os.listdir(nodes_dir)):
-            # An empty frame writes no label= partition, and parquet has
-            # no schema to infer from none: keep the read-back schema
-            # (partition column last) in a sidecar Spark readers ignore.
-            schema = T.StructType(
-                [f for f in nodes.schema if f.name != "label"]
-                + [nodes.schema["label"]])
-            with open(os.path.join(nodes_dir, _EMPTY_SCHEMA), "w",
-                      encoding="utf-8") as f:
-                f.write(schema.json())
-        (relations.write.mode("overwrite")
-         .parquet(os.path.join(vdir, "relationships")))
+        # partitionBy matches the column case-insensitively and reads it
+        # back last, under the name it was given
+        data = [f for f in nodes.schema if f.name.lower() != "label"]
+        label = [f for f in nodes.schema if f.name.lower() == "label"][0]
+        _write_schema(nodes_dir, T.StructType(
+            data + [T.StructField("label", label.dataType)]))
+        relations_dir = os.path.join(vdir, "relationships")
+        relations.write.mode("overwrite").parquet(relations_dir)
+        _write_schema(relations_dir, relations.schema)
         os.makedirs(self.base_dir, exist_ok=True)
         tmp = self._current + f".tmp.{version}"
         with open(tmp, "w", encoding="utf-8") as f:
             f.write(version)
         os.replace(tmp, self._current)
 
+    def _read_staged(self, spark: SparkSession, name: str) -> DataFrame:
+        path = os.path.join(self._resolve(), name)
+        sidecar = os.path.join(path, _SCHEMA)
+        if not os.path.exists(sidecar):
+            # staged before sidecars existed: infer from the footers
+            return spark.read.parquet(path)
+        return spark.read.schema(_read_schema(sidecar)).parquet(path)
+
     def read_nodes(self, spark: SparkSession) -> DataFrame:
-        path = os.path.join(self._resolve(), "nodes")
-        sidecar = os.path.join(path, _EMPTY_SCHEMA)
-        if os.path.exists(sidecar):
-            with open(sidecar, encoding="utf-8") as f:
-                schema = T.StructType.fromJson(json.load(f))
-            return spark.read.schema(schema).parquet(path)
-        return spark.read.parquet(path)
+        return self._read_staged(spark, "nodes")
 
     def read_relations(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(
-            os.path.join(self._resolve(), "relationships"))
+        return self._read_staged(spark, "relationships")
 
     # -- interchange formats (ORC / JSON-lines) ----------------------------
 
@@ -122,17 +138,13 @@ class StagingArea:
             path = os.path.join(self.base_dir, f"{name}_{fmt}")
             df.write.mode("overwrite").format(fmt).save(path)
             if fmt == "json":
-                sidecar = os.path.join(path, "_engine_schema.json")
-                with open(sidecar, "w", encoding="utf-8") as f:
-                    f.write(df.schema.json())
+                _write_schema(path, df.schema, "_engine_schema.json")
 
     def _read_interchange(self, spark: SparkSession, name: str,
                           fmt: str) -> DataFrame:
         path = os.path.join(self.base_dir, f"{name}_{fmt}")
         if fmt == "json":
-            sidecar = os.path.join(path, "_engine_schema.json")
-            with open(sidecar, encoding="utf-8") as f:
-                schema = T.StructType.fromJson(__import__("json").load(f))
+            schema = _read_schema(os.path.join(path, "_engine_schema.json"))
             return spark.read.schema(schema).json(path)
         return spark.read.format(fmt).load(path)
 

@@ -314,7 +314,7 @@ def test_assign_clusters_tiers_agree(spark, monkeypatch):
     """assign_clusters mirrors _assign_cells' two tiers (same crossover
     constant): identical (id, cluster) picks and round-6 dists on
     tie-free data, and dispatch crosses to MapInArrow past the
-    threshold."""
+    threshold.  A NaN-coordinate centroid ranks last in both."""
     import random
 
     from ab_metadata_pusher_spark.operators import similarity as S
@@ -334,6 +334,17 @@ def test_assign_clusters_tiers_agree(spark, monkeypatch):
     arr = {(r["vec_id"], r["cluster"], round(r["dist"], 6))
            for r in assign_clusters(df, cents, keep_emb=True).collect()}
     assert lit == arr and len(lit) == 60
+
+    # A centroid with a NaN coordinate (update_centroids can emit one
+    # from a NaN-element row) is at NaN distance from every row; both
+    # tiers rank NaN last, so it wins nothing.
+    nan_cents = cents + [(1 + len(cents), [float("nan")] + [0.0] * 7)]
+    picks = {}
+    for tier in ("literal", "arrow"):
+        _force_assign_tier(monkeypatch, tier)
+        picks[tier] = {(r["vec_id"], r["cluster"], round(r["dist"], 6))
+                       for r in assign_clusters(df, nan_cents).collect()}
+    assert picks["literal"] == picks["arrow"] == lit
 
     monkeypatch.setattr(S, "ASSIGN_CELLS_LITERAL_MAX", 5)
     plan = assign_clusters(df, cents)

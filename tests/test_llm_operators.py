@@ -1236,9 +1236,9 @@ def test_candidate_cosine_tier_selection_and_bit_exactness(
     # product, and NaN for a NaN element; cellpairs must emit the same
     # NULLs and NaNs (NaN ranks FIRST in the kNN window and passes the
     # SemDeDup threshold), and its kNN pruning must still emit the NULL
-    # pairs a query with fewer than k sortable candidates needs.  Under
-    # ANSI mode the fold raises DIVIDE_BY_ZERO on the zero-norm row, so
-    # the comparison runs with legacy division (zero divisor -> NULL).
+    # pairs a query with fewer than k sortable candidates needs.  The
+    # comparison runs under the session's own ANSI setting: the fold's
+    # try_divide gives NULL on the zero-norm row either way.
     nan = float("nan")
     hostile = emb.select("vec_id", "embedding", "label").unionByName(
         spark.createDataFrame(
@@ -1253,21 +1253,16 @@ def test_candidate_cosine_tier_selection_and_bit_exactness(
         return sorted(tuple("NaN" if v != v else v for v in r)
                       for r in df.collect())
 
-    ansi = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try:
-        outs = {}
-        for tier in ("fold", "cellpairs"):
-            force(tier)
-            outs[tier] = (
-                rows(ann_ivf_knn_self(emb, k=3, n_vectors=50)),
-                rows(semantic_dedup_pairs(hostile, 0.2, n_cells=4)),
-                rows(ann_ivf_knn_self(
-                    hostile.select("vec_id", "embedding"), k=3,
-                    n_vectors=50, n_cells=4, nprobe=2)),
-            )
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    outs = {}
+    for tier in ("fold", "cellpairs"):
+        force(tier)
+        outs[tier] = (
+            rows(ann_ivf_knn_self(emb, k=3, n_vectors=50)),
+            rows(semantic_dedup_pairs(hostile, 0.2, n_cells=4)),
+            rows(ann_ivf_knn_self(
+                hostile.select("vec_id", "embedding"), k=3,
+                n_vectors=50, n_cells=4, nprobe=2)),
+        )
     assert outs["fold"] == outs["cellpairs"]
     assert all(outs["fold"])
     _, sem, knn = outs["fold"]

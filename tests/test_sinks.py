@@ -18,7 +18,7 @@ from ab_metadata_pusher_spark.sinks.envelope import (
     SQS_HARD_LIMIT, envelope_json, pack_envelopes,
 )
 from ab_metadata_pusher_spark.sinks.kafka import build_kafka_rows
-from ab_metadata_pusher_spark.sinks.sqs import SqsPublisher
+from ab_metadata_pusher_spark.sinks.sqs import SqsPublisher, collect_records
 from ab_metadata_pusher_spark.sinks.staging import StagingArea
 from ab_metadata_pusher_spark.sources.catalog import catalog_columns
 from ab_metadata_pusher_spark.sources.jdbc import (
@@ -221,6 +221,37 @@ def test_sqs_publish_collected(spark, sf_dir):
     assert total_nodes == nodes.count()
     assert total_rels == relations.count()
 
+    # The Arrow records equal Row.asDict on every accepted column type,
+    # hostile values included, so the bodies are those of the Rows.
+    nan = float("nan")
+    hostile = spark.createDataFrame(
+        [("a\"b\\c\u2028é漢😀", 1, 2**40, True, 0.1, 0.1),
+         (None, None, None, None, None, None),
+         ("", -2**31, -2**63, False, nan, nan),
+         ("x" * 50, 7, 7, None, float("inf"), -1e300)],
+        "s string, i int, l bigint, b boolean, f float, d double")
+
+    def token(recs):
+        return [{k: "NaN" if v != v else v for k, v in r.items()}
+                for r in recs]
+
+    row_recs = [r.asDict(recursive=True) for r in hostile.collect()]
+    assert token(collect_records(hostile)) == token(row_recs)
+    stub = StubSqsClient()
+    pub = SqsPublisher("https://queue/test.fifo", lambda: stub,
+                       max_bytes=600)
+    pub.publish_collected(hostile, hostile.limit(3), tag="r2")
+    sent = [e["MessageBody"] for b in stub.batches for e in b["Entries"]]
+    assert len(sent) > 1
+    assert sent == list(pack_envelopes(row_recs, row_recs[:3], "r2", 600))
+
+    # Types whose Arrow records differ from Row.asDict are refused.
+    for col, expr in (("ts", "timestamp'2024-01-02 03:04:05'"),
+                      ("bin", "CAST('ab' AS BINARY)"), ("m", "map('k', 1)")):
+        other = hostile.selectExpr("s", f"{expr} AS {col}")
+        with pytest.raises(TypeError, match=repr(col)):
+            pub.publish_collected(other, hostile, tag="r3")
+
 
 def test_sqs_publish_small_max_bytes_chunks(spark, sf_dir):
     nodes, relations = _graph(spark, sf_dir)
@@ -254,6 +285,43 @@ def test_staging_parquet_roundtrip(spark, sf_dir, tmp_path):
     # partitionBy(label) produced label-pruned directories
     labels = [r.label for r in back_nodes.select("label").distinct().collect()]
     assert set(labels) == {"Table", "Column", "Description"}
+
+
+def test_staging_read_back_launches_no_job(spark, sf_dir, tmp_path):
+    """The read-back takes its schema from the sidecar each write leaves:
+    no Spark job, the inferred schema exactly, and a version without
+    sidecars (staged before they existed) still reads by inference."""
+    import os
+
+    nodes, relations = _graph(spark, sf_dir)
+    area = StagingArea(str(tmp_path / "stage"))
+    area.write(nodes, relations)
+    sc = spark.sparkContext
+    sc.setJobGroup("staging_read_back", "staging_read_back")
+    try:
+        back = (area.read_nodes(spark), area.read_relations(spark))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(
+        "staging_read_back")) == []
+
+    version = area._resolve()
+    dirs = [os.path.join(version, n) for n in ("nodes", "relationships")]
+    inferred = [spark.read.parquet(d) for d in dirs]
+    assert [df.schema for df in back] == [df.schema for df in inferred]
+    rows = [sorted(df.collect()) for df in back]
+    for d in dirs:
+        os.remove(os.path.join(d, "_schema.json"))
+    again = (area.read_nodes(spark), area.read_relations(spark))
+    assert [df.schema for df in again] == [df.schema for df in inferred]
+    assert [sorted(df.collect()) for df in again] == rows
+    assert [len(r) for r in rows] == [nodes.count(), relations.count()]
+
+    # partitionBy("label") also takes a LABEL column, and reads it back
+    # as label
+    area.write(nodes.withColumnRenamed("label", "LABEL"), relations)
+    assert area.read_nodes(spark).schema == spark.read.parquet(
+        os.path.join(area._resolve(), "nodes")).schema
 
 
 def test_staging_legacy_csv_contract(spark, sf_dir, tmp_path):
