@@ -183,12 +183,13 @@ def update_centroids(corpus: DataFrame, assigned: DataFrame,
     combines them to partitions x k x dim scalars BEFORE the exchange,
     and the generated code is constant-size regardless of width.
 
-    The wide form (one cluster-keyed aggregate with ``dim`` avg
-    columns, no row inflation) lost at EVERY probed point, dim 8-2048 x
-    rows 20k-2M (SCALE.md; probe script lloyd_dim_probe.py, last in
-    commit 3a5bcd2): past ``spark.sql.codegen.maxFields`` it exits
-    whole-stage codegen and pays superlinear plan/compile time — e.g.
-    dim 64/2M rows 0.57s vs 1.33s, dim 2048/20k rows 0.72s vs 20.5s.
+    The wide form (one cluster-keyed aggregate with ``dim`` avg columns,
+    no row inflation) lost at EVERY probed point, dim 8-2048 x rows
+    20k-2M (SCALE.md; probe script
+    lloyd_dim_probe.py, last in commit 3a5bcd2): past
+    ``spark.sql.codegen.maxFields`` it exits whole-stage codegen and
+    pays superlinear plan/compile time — e.g. dim 64/2M rows 0.57s vs
+    1.33s, dim 2048/20k rows 0.72s vs 20.5s.
 
     When ``assigned`` already carries ``emb_col`` (assign_clusters with
     ``keep_emb=True`` — assignment is a map-only projection OF the

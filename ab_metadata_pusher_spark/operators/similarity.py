@@ -806,13 +806,13 @@ def ann_ivf_knn_self(corpus: DataFrame, k: int = 5, *,
     patterns.
 
     Chosen over ``ann_lsh_knn_self`` for the scale path by MEASUREMENT
-    (r11, scripts/knn_recall_probe.py): this corpus's true 5-NN sit at
-    cosine ~0.42 (65°, s=0.64), where hyperplane collision probability
-    s^p collapses — the sized+capped LSH self measured recall@5 = 0.08
-    at x10 while IVF probing reached ~4x the recall at the same
-    candidate budget (data-learned cells follow the actual cluster
-    structure; random hyperplanes cannot).  The oracle-gated registry
-    queries keep the pinned LSH form.
+    (r11, knn_recall_probe.py, last in commit 9bc81c2): this corpus's
+    true 5-NN sit at cosine ~0.42 (65°, s=0.64), where hyperplane
+    collision probability s^p collapses — the sized+capped LSH self
+    measured recall@5 = 0.08 at x10 while IVF probing reached ~4x the
+    recall at the same candidate budget (data-learned cells follow the
+    actual cluster structure; random hyperplanes cannot).  The
+    oracle-gated registry queries keep the pinned LSH form.
 
     Plan: centroids are learned driver-side (``ivf_centroid_list`` —
     deterministic, k x dim, the ``ml.clustering.KMeans`` contract), the

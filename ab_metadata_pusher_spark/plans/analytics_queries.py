@@ -374,8 +374,8 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: nodes have degree ≥ √(2m)).  The reorientation costs two |E|-row
 #: aggregation exchanges on top of the one corpus-sized shuffle, so it
 #: only pays once real skew exists: flip when the longest out-list
-#: exceeds this factor × √(2m).  Measured at factor 4
-#: (scripts/triangle_orientation_probe.py, min-of-3 warm): the
+#: exceeds this factor × √(2m).  Measured at factor 4 (min-of-3 warm,
+#: triangle_orientation_probe.py, last in commit 9bc81c2): the
 #: mildly-skewed sf0.1 fixture stays id (max out-list 199 vs bound
 #: 6186; the degree form would cost 1.6× THERE — the flip being
 #: conditional is the point), while hub-concentrated power-law graphs
@@ -463,7 +463,8 @@ def _triangles_run(spark: SparkSession, pairs: DataFrame,
     # a sort-merge join must sort that payload — at the third measured
     # decade (x100 of sf0.1, ~55M edges) the sort spills and the query
     # goes superlinear: 270.7 s SMJ vs 46.8 s shuffle-hash, outputs
-    # equal (scripts/triangle_scale_probe.py; x1 cost +0.1 s, noise).
+    # equal (x1 cost +0.1 s, noise;
+    # triangle_scale_probe.py, last in commit 9bc81c2).
     # Hash join streams the probe side unsorted; the build side is the
     # adjacency itself (Σdeg longs / #partitions per task), which any
     # partition sizing that survives the sort also fits.  Broadcast
@@ -602,10 +603,10 @@ _LPA_ITERS = 3
 _LPA_SHUFFLE_W = 16
 #: edge rows per loop partition: 1.1M/16 — the measured r4 floor
 #: restated as a density, so the width GROWS with the edge set instead
-#: of staying a fixture constant.  The r10 multi-decade study caught
-#: the constant: at x100 of sf0.1 (~110M rows) width 16 ran the loop
-#: on half the 32-core box — 161.5 s vs 95.0/82.6/77.0 s at widths
-#: 32/64/128, outputs hash-equal (scripts/lpa_width_probe.py).
+#: of staying a fixture constant.  The r10 multi-decade study caught the
+#: constant: at x100 of sf0.1 (~110M rows) width 16 ran the loop on half
+#: the 32-core box — 161.5 s vs 95.0/82.6/77.0 s at widths 32/64/128,
+#: outputs hash-equal (lpa_width_probe.py, last in commit 9bc81c2).
 _LOOP_EDGE_ROWS_PER_PART = 70_000
 #: width ceiling as a multiple of cluster parallelism: past ~4 tasks
 #: per core the probe's gains flatten (82.6 -> 77.0 s from 2x to 4x)
@@ -626,11 +627,11 @@ def _loop_width(n_rows: int, parallelism: int) -> int:
 #: the |V|-row label frame keeps every round exchange-free and WON at
 #: every in-container size the probe could reach (shuffled/broadcast =
 #: 1.13-2.21x up to |V|=8e6, ~128 MB of (long, long) rows,
-#: scripts/lpa_alignment_probe.py) — so the flip is a RESOURCE bound,
-#: not a perf crossover: past this per-round broadcast footprint the
-#: build side risks executor/driver memory pressure and the loop
-#: switches to the b-aligned shuffle form (labels shuffle into the
-#: join; rounds pay the (a, lab) aggregation exchange instead).
+#: lpa_alignment_probe.py, last in commit 9bc81c2) — so the flip is a
+#: RESOURCE bound, not a perf crossover: past this per-round broadcast
+#: footprint the build side risks executor/driver memory pressure and
+#: the loop switches to the b-aligned shuffle form (labels shuffle into
+#: the join; rounds pay the (a, lab) aggregation exchange instead).
 _LPA_BROADCAST_MAX_BYTES = 512 << 20
 #: bytes per (long v, long lab) label row in the broadcast relation,
 #: incl. per-row overhead (unsafe row + hashed-relation slack, ~2x raw)
@@ -683,23 +684,24 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join key ``b`` instead and pay the (a, lab) aggregation shuffle
     — you can co-locate either the join or the aggregations, and while
     labels broadcast, aligning the aggregations wins.  The crossover is
-    MEASURED, not prose (scripts/lpa_alignment_probe.py, min-of-N on
-    synthetic degree-20 graphs, all-distinct labels — the broadcast's
-    worst case): shuffled/broadcast = 2.21x at |V|=1e5, 1.51x at 1e6,
-    1.13x at 4e6, 1.35x at 8e6 — broadcast wins at every measured size
-    up to ~128 MB of (long, long) label rows, with no crossover
-    reachable cleanly in one JVM, so the flip is a RESOURCE bound and
-    since r9 it is CODE, not prose: ``_lpa_run`` counts |V| once (off
-    the checkpointed initial label frame) and switches to the shuffled
-    alignment past ``_LPA_BROADCAST_MAX_BYTES`` (SCALE.md round-7
-    entry; both alignments are equality-tested).  (A third variant
-    — adjacency arrays + a 1-row label MAP + in-row mode — was A/B
-    tested and REJECTED: element_at on MapType is a linear scan, 17x
+    MEASURED, not prose (lpa_alignment_probe.py, last in commit 9bc81c2;
+    min-of-N on synthetic degree-20 graphs, all-distinct labels — the
+    broadcast's worst case): shuffled/broadcast = 2.21x at |V|=1e5,
+    1.51x at 1e6, 1.13x at 4e6, 1.35x at 8e6 — broadcast wins at every
+    measured size up to ~128 MB of (long, long) label rows, with no
+    crossover reachable cleanly in one JVM, so the flip is a RESOURCE
+    bound and since r9 it is CODE, not prose: ``_lpa_run`` counts |V|
+    once (off the checkpointed initial label frame) and switches to the
+    shuffled alignment past ``_LPA_BROADCAST_MAX_BYTES`` (SCALE.md
+    round-7 entry; both alignments are equality-tested).  (A third
+    variant — adjacency arrays + a 1-row label MAP + in-row mode — was
+    A/B tested and REJECTED: element_at on MapType is a linear scan, 17x
     slower at |V|=20k.)  The oracle unrolls the same fixed iteration
     count as CTE stages."""
     # Raw (multiset) pair stream: the dedup rides _lpa_run's alignment
     # repartition instead of paying its own full-stream exchange (r14,
-    # scripts/lpa_dedup_ride_probe.py — one fewer exchange and job).
+    # lpa_dedup_ride_probe.py, last in commit 9bc81c2 — one fewer
+    # exchange and job).
     e0 = _cooccur_edges(spark, sf_dir, dedup=False)
     # |V| <= |part|: a parquet-footer read prices the broadcast-vs-
     # shuffle alignment with NO Spark job (r13 — the job this hint
@@ -746,12 +748,13 @@ def _lpa_run(spark: SparkSession, e0: DataFrame, iters: int,
     ``distinct()`` placed after the repartition adds no exchange —
     callers holding a raw (multiset) pair stream save the dedup's own
     full-stream exchange (jobs 16 -> 15, min 2.86 -> 2.53 s paired at
-    sf0.1, scripts/lpa_dedup_ride_probe.py; symmetrize-then-dedup is
-    set-equal to dedup-then-symmetrize, crc-checked there; the loop
-    width is then sized from the pre-dedup symmetrized count, an upper
-    bound in the same _loop_width input class).  The default keeps the
-    historical contract: e0 taken as-is, label counts weighted by edge
-    multiplicity if the caller passes a multigraph."""
+    sf0.1, lpa_dedup_ride_probe.py, last in commit 9bc81c2;
+    symmetrize-then-dedup is set-equal to dedup-then-symmetrize,
+    crc-checked there; the loop width is then sized from the pre-dedup
+    symmetrized count, an upper bound in the same _loop_width input
+    class).  The default keeps the historical contract: e0 taken as-is,
+    label counts weighted by edge multiplicity if the caller passes a
+    multigraph."""
     if align not in ("auto", "broadcast", "shuffle"):
         raise ValueError(f"unknown LPA alignment: {align!r}")
     if iters < 1:

@@ -3883,11 +3883,12 @@ def q_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate-join reshape (one hash-agg exchange with ``min(sid)`` as
     the df=1 owner, map-only per-doc totals off a second tokenize
     pass) was built and MEASURED 2.2-2.6x SLOWER at both sf0.1 and the
-    x10 replica (r14, scripts/novelty_shape_probe.py: 2.45 s vs
-    6.50 s min at sf0.1, 3.54 s vs 7.66 s at x10, outputs crc-equal) —
-    the near-unique shingle keys give the hash aggregate no map-side
-    reduction while WindowExec rides the exchange's existing sort, and
-    the second tokenize pass is not free — so the window form stays."""
+    x10 replica (r14, novelty_shape_probe.py, last in commit 9bc81c2:
+    2.45 s vs 6.50 s min at sf0.1, 3.54 s vs 7.66 s at x10, outputs
+    crc-equal) — the near-unique shingle keys give the hash aggregate no
+    map-side reduction while WindowExec rides the exchange's existing
+    sort, and the second tokenize pass is not free — so the window form
+    stays."""
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents")

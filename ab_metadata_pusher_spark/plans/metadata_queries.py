@@ -311,10 +311,11 @@ d AS (SELECT coalesce(a.table_name, b.table_name) AS table_name,
         ON a.table_name = b.table_name AND a.col_name = b.col_name)
 SELECT * FROM d WHERE status IS NOT NULL
 """,
-    # G.metadata.schema_drift: this query subsumes the retired
-    # metadata_schema_drift (same added/removed/type_changed contract
-    # over two snapshots) — the covers tag moved here at retirement so
-    # the coverage matrix keeps the row (r5 ADVICE).
+    # G.metadata.schema_drift: this query subsumes the retired and
+    # deleted metadata_schema_drift plan (same added/removed/type_changed
+    # contract over two snapshots) — the covers tag moved here so the
+    # coverage matrix keeps the row (r5 ADVICE); tests/test_registry.py
+    # keeps the retired name out of the frozen registry.
     covers=("G.metadata.diff", "G.metadata.schema_drift", "B5"),
 )
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -486,80 +487,6 @@ def q_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ab_metadata_pusher_spark.operators.profile import profile_columns
     from ab_metadata_pusher_spark.sources.fixtures import load_table
     return profile_columns(load_table(spark, sf_dir, "customer"))
-
-
-#: RETIRED from the registry in round 5 — the 1:1 swap that admits
-#: sink_envelope_chunking while keeping registration frozen at 239
-#: (r4 VERDICT ask #8): this query was a never-scored near-duplicate of
-#: the driver-green metadata_snapshot_diff (same full-outer-join
-#: added/removed/type_changed drift semantics over the same catalog).
-#: The plan and this oracle stay verified locally by
-#: tests/test_retired_queries.py.
-SCHEMA_DRIFT_ORACLE = ("WITH " + catalog_values_cte() + """,
-old AS (SELECT table_name, col_name, col_type FROM catalog_columns),
-new AS (
-  SELECT table_name, col_name,
-         CASE WHEN table_name = 'orders' AND col_name = 'o_totalprice'
-              THEN 'decimal(18,2)' ELSE col_type END AS col_type
-  FROM catalog_columns
-  WHERE NOT (table_name = 'customer' AND col_name = 'c_mktsegment')
-  UNION ALL
-  SELECT 'orders', 'o_new_flag', 'boolean'
-)
-SELECT coalesce(o.table_name, n.table_name) AS table_name,
-       coalesce(o.col_name, n.col_name) AS col_name,
-       o.col_type AS old_type, n.col_type AS new_type,
-       CASE WHEN o.col_name IS NULL THEN 'added'
-            WHEN n.col_name IS NULL THEN 'removed'
-            ELSE 'type_changed' END AS change
-FROM old o
-FULL OUTER JOIN new n
-  ON o.table_name = n.table_name AND o.col_name = n.col_name
-WHERE o.col_name IS NULL OR n.col_name IS NULL OR o.col_type <> n.col_type
-""")
-
-
-def q_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-level schema drift between two catalog snapshots: type
-    changes, added and removed columns from ONE full-outer join on
-    (table, column) — the type-aware companion to metadata_snapshot_diff
-    (which diffs graph nodes by key only).  The 'new' snapshot applies
-    deterministic mutations (a type change, a drop, an addition) so both
-    engines derive the same drift set.
-
-    At 100 TB of *data* this is still catalog-sized work — schema drift
-    detection is the cheap gate that stops a pipeline BEFORE it reads
-    petabytes with a wrong-type assumption."""
-    cat = catalog_columns(spark, sf_dir)
-    old = cat.select("table_name", "col_name", "col_type")
-    mutated_type = F.when(
-        (F.col("table_name") == "orders") & (F.col("col_name") == "o_totalprice"),
-        F.lit("decimal(18,2)")).otherwise(F.col("col_type"))
-    added = spark.createDataFrame(
-        [("orders", "o_new_flag", "boolean")],
-        "table_name string, col_name string, col_type string")
-    new = (old
-           .filter(~((F.col("table_name") == "customer")
-                     & (F.col("col_name") == "c_mktsegment")))
-           .withColumn("col_type", mutated_type)
-           .unionByName(added))
-    o, n = old.alias("o"), new.alias("n")
-    joined = o.join(
-        n, (F.col("o.table_name") == F.col("n.table_name"))
-        & (F.col("o.col_name") == F.col("n.col_name")), "full_outer")
-    change = (F.when(F.col("o.col_name").isNull(), "added")
-              .when(F.col("n.col_name").isNull(), "removed")
-              .otherwise("type_changed"))
-    return (joined
-            .filter(F.col("o.col_name").isNull() | F.col("n.col_name").isNull()
-                    | (F.col("o.col_type") != F.col("n.col_type")))
-            .select(F.coalesce(F.col("o.table_name"), F.col("n.table_name"))
-                    .alias("table_name"),
-                    F.coalesce(F.col("o.col_name"), F.col("n.col_name"))
-                    .alias("col_name"),
-                    F.col("o.col_type").alias("old_type"),
-                    F.col("n.col_type").alias("new_type"),
-                    change.alias("change")))
 
 
 #: Candidate (child_table, child_col, parent_table, parent_col) pairs the

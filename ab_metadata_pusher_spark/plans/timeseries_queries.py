@@ -11,9 +11,7 @@ from pyspark.sql import functions as F
 from ab_metadata_pusher_spark.operators.asof import (
     asof_join, asof_join_cogrouped,
 )
-from ab_metadata_pusher_spark.operators.sessionize import (
-    sessionize, sessionize_pandas,
-)
+from ab_metadata_pusher_spark.operators.sessionize import sessionize
 from ab_metadata_pusher_spark.plans.registry import register
 from ab_metadata_pusher_spark.sources.fixtures import load_table
 
@@ -71,24 +69,10 @@ GROUP BY user_id, session_idx
 @register("sessionize_events", oracle=_SESSION_SQL,
           covers=("G.sessionize", "G.window.frame"))
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessions (30 min), JVM window formulation."""
+    """Gap-based sessions (30 min), JVM window formulation.  The
+    grouped-map applyInPandas formulation (``sessionize_pandas``) is not
+    registered; tests/test_timeseries.py checks it against this path."""
     return sessionize(load_table(spark, sf_dir, "events"), gap_seconds=1800)
-
-
-#: RETIRED from the registry in round 5 — the 1:1 swap that admits
-#: graph_link_prediction_capped while keeping registration frozen at 239
-#: (r4 VERDICT ask #8): a never-scored byte-identical A/B of the
-#: driver-green sessionize_events (same oracle, same output contract,
-#: pandas path instead of the JVM window).  The grouped-map
-#: applyInPandas surface stays registered via join_asof_cogrouped
-#: (cogroup().applyInPandas) and the stateful streaming queries; the
-#: pandas-vs-JVM sessionize A/B itself stays verified locally by
-#: tests/test_retired_queries.py against _SESSION_SQL.
-def q_sessionize_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Identical session contract via grouped-map applyInPandas — proves the
-    Arrow custom-operator path against the same SQL oracle."""
-    return sessionize_pandas(load_table(spark, sf_dir, "events"),
-                             gap_seconds=1800)
 
 
 @register("join_asof_cogrouped", oracle=_ASOF_SQL,

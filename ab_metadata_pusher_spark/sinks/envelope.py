@@ -21,6 +21,7 @@ without any AWS dependency; the Spark-facing side lives in sinks/sqs.py.
 from __future__ import annotations
 
 import json
+import re
 from collections.abc import Iterable, Iterator
 from typing import Any
 
@@ -35,13 +36,22 @@ SQS_HARD_LIMIT = 256 * 1024
 DEFAULT_MAX_BYTES = SQS_HARD_LIMIT - 4 * 1024
 
 
+#: A lone surrogate code point: a Python str can hold one, UTF-8 cannot.
+_SURROGATE = re.compile("[\ud800-\udfff]")
+
+
 def _encode(value: Any) -> str:
     # Compact, sorted keys, raw UTF-8: non-ASCII is emitted as-is, not
     # \uXXXX-escaped, so a body's byte length is what actually goes over
     # the wire (SQS limits are byte limits) and what a raw-UTF-8 consumer
     # (or the DuckDB to_json oracle in sink_envelope_chunking) measures.
-    return json.dumps(value, separators=(",", ":"), sort_keys=True,
+    # The one exception is a lone surrogate, which has no UTF-8 form: it
+    # keeps the \uXXXX escape that json.loads reads back to the same str.
+    text = json.dumps(value, separators=(",", ":"), sort_keys=True,
                       ensure_ascii=False, default=str)
+    if not text.isascii():
+        text = _SURROGATE.sub(lambda m: f"\\u{ord(m.group()):04x}", text)
+    return text
 
 
 def _record_size(record: dict[str, Any]) -> int:

@@ -233,11 +233,11 @@ def _quality_label_full(emb, emb_path):
     self-join over every vector, each label checked against its neighbor
     majority (the corpus-scale form of plans/llm_queries.py
     q_quality_label_consistency_ann, which keeps the oracle-pinned LSH
-    shape on its bounded slice).  IVF over LSH here is a MEASURED
-    choice (scripts/knn_recall_probe.py, SCALE.md r11): on this
+    shape on its bounded slice).  IVF over LSH here is a MEASURED choice
+    (knn_recall_probe.py, last in commit 9bc81c2; SCALE.md r11): on this
     embedding geometry (true 5-NN at cosine ~0.42) data-learned cells
-    reach 4-7x the recall of sized+capped hyperplane buckets at the
-    same candidate budget.  Cell count is data-sized from the parquet
+    reach 4-7x the recall of sized+capped hyperplane buckets at the same
+    candidate budget.  Cell count is data-sized from the parquet
     footer count; ``SPARK_GRAFT_IVF_NPROBE`` (default 8) is the
     recall/cost dial a deployment with a recall target turns — the
     measured nprobe in {8,16,32} x {x10,x100} curve is in SCALE.md

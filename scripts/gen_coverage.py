@@ -155,13 +155,12 @@ STATIC = [
      "test_streaming_query_listener_captures_progress"),
     # Orphaned by the r5 retirement of sessionize_events_pandas (the
     # 1:1 registry swap): the grouped-map applyInPandas surface stays
-    # implemented and oracle-verified, but outside the registry — the
-    # A/B runs against the SAME _SESSION_SQL oracle every pytest run.
+    # implemented outside the registry, checked every pytest run against
+    # the native sessionize that the driver-green sessionize_events runs.
     ("G.udf.apply_in_pandas",
-     "Grouped-map applyInPandas (pandas sessionize A/B, oracle-backed)",
+     "Grouped-map applyInPandas (pandas sessionize A/B)",
      "operators/sessionize.py sessionize_pandas",
-     "tests/test_retired_queries.py (vs _SESSION_SQL, the driver-green "
-     "sessionize_events oracle)"),
+     "tests/test_timeseries.py test_sessionize_pandas_equals_native"),
 ]
 
 

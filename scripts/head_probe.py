@@ -1,11 +1,12 @@
 """Warm-rep timing probe for any registry query, normalized against a
 stable reference query.
 
-Generalizes scripts/lpa_head_probe.py (the r9 LPA drift probe): the
-driver bench is single-sample, so a below-gate normalized drift needs
-N warm reps plus a stable untouched co-timed reference before it means
-anything.  Two runs of this probe against different code states compare
-on ``query / reference`` medians rather than raw seconds (machine and
+Generalizes the r9 LPA drift probe
+(lpa_head_probe.py, last in commit 9bc81c2): the driver bench is
+single-sample, so a below-gate normalized drift needs N warm reps plus
+a stable untouched co-timed reference before it means anything.  Two
+runs of this probe against different code states compare on
+``query / reference`` medians rather than raw seconds (machine and
 session factors cancel).
 
 Usage:

@@ -294,8 +294,9 @@ def test_loop_width_scales_with_edges_and_caps_at_cores():
     """The iterative-loop shuffle width is a data rule, not a fixture
     constant (r10 multi-decade study: width 16 at x100 ran LPA on half
     the box — 161.5 s vs 77.0 s at the 4x-cores cap, outputs equal,
-    scripts/lpa_width_probe.py).  Floor = the r4 fixture A/B; density =
-    that floor restated per edge row; cap = 4x default parallelism."""
+    lpa_width_probe.py, last in commit 9bc81c2).  Floor = the r4 fixture
+    A/B; density = that floor restated per edge row; cap = 4x default
+    parallelism."""
     from ab_metadata_pusher_spark.plans.analytics_queries import (
         _loop_width,
     )

@@ -112,9 +112,9 @@ def test_triangle_intersect_joins_are_shuffle_hash(spark, sf_dir):
     carrying both sorted-neighbor arrays, and sorting that payload is
     what sent graph_triangles superlinear at the third measured decade
     (x100 of sf0.1: 270.7 s SMJ vs 46.8 s shuffle-hash, outputs equal —
-    scripts/triangle_scale_probe.py, SCALE.md round-10 entry).  Scoped
-    to the joins keyed on the node columns a/b — other joins in the
-    plan may choose any strategy."""
+    triangle_scale_probe.py, last in commit 9bc81c2; SCALE.md round-10
+    entry).  Scoped to the joins keyed on the node columns a/b — other
+    joins in the plan may choose any strategy."""
     import re
 
     from ab_metadata_pusher_spark.operators._shared import (

@@ -17,6 +17,16 @@ def test_oracles_are_nonempty_sql():
         assert "SELECT" in sql.upper(), f"{name} oracle is not SQL"
 
 
+# Registration is frozen at 239 (r4 VERDICT ask #8).  The round-5
+# additions each replaced a retired near-duplicate 1:1; both retired
+# plans are deleted, and their names must not come back.
+def test_retired_names_stay_unregistered():
+    queries()  # force load
+    assert "metadata_schema_drift" not in REGISTRY
+    assert "sessionize_events_pandas" not in REGISTRY
+    assert len(REGISTRY) == 239, "registration freeze violated"
+
+
 def test_results_invariant_under_shuffle_width(spark):
     """Representative queries must produce IDENTICAL results whether the
     shuffle runs 3-wide or 8-wide — partition-layout determinism is what

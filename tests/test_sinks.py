@@ -8,7 +8,7 @@ from __future__ import annotations
 import json
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from ab_metadata_pusher_spark.operators.graph import to_nodes, to_relations
@@ -55,6 +55,8 @@ _HOSTILE_TEXT = st.one_of(st.none(), st.text(
        st.lists(st.integers(min_value=1, max_value=9000), max_size=60),
        st.lists(_HOSTILE_TEXT, min_size=1, max_size=8),
        st.sampled_from(["t1", 'tag "é\\\u2028\x1f"']))
+# a lone surrogate has no UTF-8 form (it once raised UnicodeEncodeError)
+@example(node_sizes=[], rel_sizes=[1], texts=["\ud800"], tag="t1")
 def test_pack_envelopes_properties(node_sizes, rel_sizes, texts, tag):
     nodes = [{"key": f"n{i}", "pad": "x" * s,
               "text": texts[i % len(texts)]}
