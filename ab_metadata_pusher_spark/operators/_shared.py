@@ -25,7 +25,7 @@ from ab_metadata_pusher_spark.observability import capture_plan_segment
 __all__ = [
     "double_array_lit", "emb_matrix",
     "MATERIALIZE_CONF", "materialize_shared", "release_materialized",
-    "spread_if_narrow", "hash_build_guard",
+    "fixpoint", "spread_if_narrow", "hash_build_guard",
 ]
 
 logger = logging.getLogger(__name__)
@@ -121,6 +121,41 @@ def materialize_shared(df: DataFrame, mode: str | None = None) -> DataFrame:
         return out
     capture_plan_segment(df)
     return df.localCheckpoint(eager=True)
+
+
+def fixpoint(state: DataFrame, step, *, rounds: int, probe=None,
+             until=None, width: int | None = None) -> DataFrame:
+    """The driver loop of the iterative graph operators:
+    ``state = step(state, i)`` for up to ``rounds`` rounds.
+
+    Every round ends in a lineage cut (``capture_plan_segment``, then
+    ``localCheckpoint``), so round r never re-executes rounds 1..r-1.
+    The cut is lazy when ``probe`` is given: ``probe(state)`` is then
+    the round's one action and materializes it.  Otherwise the cut is
+    eager.  The loop stops after a round where ``until(previous,
+    current)`` holds on the probe results (``previous`` is ``None``
+    after round 0).  ``width`` pins ``spark.sql.shuffle.partitions``
+    for the loop; the session's value is restored on any exit."""
+    conf = state.sparkSession.conf
+    key = "spark.sql.shuffle.partitions"
+    if width is not None:
+        saved = conf.get(key)
+        conf.set(key, str(width))
+    try:
+        last = None
+        for i in range(rounds):
+            state = step(state, i)
+            capture_plan_segment(state)
+            state = state.localCheckpoint(eager=probe is None)
+            if probe is not None:
+                cur = probe(state)
+                if until is not None and until(last, cur):
+                    break
+                last = cur
+        return state
+    finally:
+        if width is not None:
+            conf.set(key, saved)
 
 
 def release_materialized(spark=None) -> int:

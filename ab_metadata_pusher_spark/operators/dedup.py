@@ -21,16 +21,18 @@ Scale design (the 100 TB story):
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ab_metadata_pusher_spark.observability import capture_plan_segment
 from ab_metadata_pusher_spark.functions.hashing import (
     MERSENNE_P, md5_long, minhash_coeffs,
 )
 from ab_metadata_pusher_spark.operators._shared import (
     MATERIALIZE_CONF,
     _materialize_mode,  # noqa: F401  (re-export: unit tests target it here)
+    fixpoint,
     hash_build_guard,
     materialize_shared as _materialize_shared,
     release_materialized,
@@ -69,11 +71,12 @@ def cluster_labels(keys: DataFrame, key_cols: list[str],
         fam = star_edges(keys.select(id_col, kc).filter(
             F.col(kc).isNotNull()), kc, id_col)
         edges = fam if edges is None else edges.unionByName(fam)
-    labels = connected_components(
-        keys.select(F.col(id_col).alias("id")), edges,
-        shuffle_partitions=shuffle_partitions)
-    keys.unpersist()
-    return labels
+    try:
+        return connected_components(
+            keys.select(F.col(id_col).alias("id")), edges,
+            shuffle_partitions=shuffle_partitions)
+    finally:
+        keys.unpersist()
 
 
 def star_edges(keys: DataFrame, key_col: str,
@@ -93,8 +96,7 @@ def star_edges(keys: DataFrame, key_col: str,
 
 def connected_components(vertices: DataFrame, edges: DataFrame,
                          max_iter: int = 15,
-                         shuffle_partitions: int | None = None,
-                         checkpoint_every: int = 3) -> DataFrame:
+                         shuffle_partitions: int | None = None) -> DataFrame:
     """Min-label propagation ("hash-to-min") connected components.
 
     ``vertices``: one column ``id``.  ``edges``: ``src``/``dst``
@@ -109,11 +111,11 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     shuffle — join labels onto edges, union, groupBy-min — and the
     iteration count is the graph diameter, which for dedup graphs (star
     edges around key groups) is a small constant.  Convergence is detected
-    by the (monotonically decreasing) sum of labels going stable.  Every
-    ``checkpoint_every`` iterations the label frame is
-    ``localCheckpoint``-ed so plan lineage stays bounded however long the
-    loop runs; label frames carry two longs per vertex, so the shuffle is
-    narrow regardless of document size.
+    by the (monotonically decreasing) sum of labels going stable; that
+    sum is the :func:`fixpoint` probe, which materializes each round's
+    lineage cut, so plan lineage stays bounded at one job per round.
+    Label frames carry two longs per vertex, so the shuffle is narrow
+    regardless of document size.
 
     ``shuffle_partitions`` (optional) pins the shuffle width for the
     loop's lifetime: like streaming state stores, the label frame should
@@ -123,73 +125,45 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     measurement as streaming/events.py run_to_memory).  Size it to
     ~label_rows / 1e6 partitions on a real cluster.
 
-    Memory retention: ``labels.unpersist()`` frees cached iterations, but
-    is a no-op on frames produced by ``localCheckpoint`` (checkpoint RDD
-    blocks aren't registered with the cache manager); superseded
-    checkpoint blocks — one narrow (id, label) frame per
-    ``checkpoint_every`` iterations — are reclaimed by the
-    ContextCleaner on driver GC.  Bounded for this loop's diameter-bound
-    iteration counts; an unbounded loop would want to unpersist via the
-    checkpointed RDD handle instead.
+    The symmetrized edge cache is released on return and on a failing
+    round alike; superseded checkpoint blocks (one narrow frame per
+    round) are reclaimed by the ContextCleaner on driver GC.
     """
-    spark = vertices.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    prev_conf = spark.conf.get(conf_key)
-    if shuffle_partitions is not None:
-        spark.conf.set(conf_key, str(shuffle_partitions))
-    try:
-        both = (edges.select("src", "dst")
-                .unionByName(edges.select(F.col("dst").alias("src"),
-                                          F.col("src").alias("dst")))
-                .distinct())
-        # The edge list is re-joined every iteration; without caching, each
-        # iteration (and the final consumer) would replay the full upstream
-        # key-extraction lineage (fingerprint hashing etc.) — measured 10.6s
-        # -> 1.5s at sf0.1 with the cache.
-        both.persist()
-        labels = vertices.select(F.col("id"), F.col("id").alias("label"))
-        prev_sum = None
-        for i in range(max_iter):
-            if i == 0:
-                # Fused first round (r13): the initial labels are the
-                # identity map label(v) = v, so the propagation join
-                # contributes exactly one (dst, src) row per symmetrized
-                # edge — project the edge list directly instead of
-                # joining a |V|-row build side onto it.
-                prop = both.select(F.col("dst").alias("id"),
-                                   F.col("src").alias("label"))
-            else:
-                prop = (both.alias("e")
-                        .join(labels.alias("l"),
-                              F.col("e.src") == F.col("l.id"))
-                        .select(F.col("e.dst").alias("id"),
-                                F.col("l.label")))
-            new = (prop.unionByName(labels)
-                   .groupBy("id").agg(F.min("label").alias("label")))
-            if (i + 1) % checkpoint_every == 0:
-                # Truncate lineage: without this, each iteration's plan
-                # nests the previous one and optimizer/lineage cost grows
-                # with iteration count — the scale-killer for long loops.
-                # LAZY checkpoint (r13): the plan is truncated to a
-                # LogicalRDD immediately, but materialization rides the
-                # convergence aggregate below — one job per checkpoint
-                # round instead of two.
-                capture_plan_segment(new)
-                new = new.localCheckpoint(eager=False)
-            else:
-                new.persist()
-            cur_sum = new.agg(F.sum("label")).collect()[0][0]
-            labels.unpersist()
-            labels = new
-            if prev_sum is not None and cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        # labels is persisted and already materialized by the convergence
-        # action, so the edge cache can go.
-        both.unpersist()
-        return labels
+    both = (edges.select("src", "dst")
+            .unionByName(edges.select(F.col("dst").alias("src"),
+                                      F.col("src").alias("dst")))
+            .distinct())
+    # The edge list is re-joined every iteration; without caching, each
+    # iteration (and the final consumer) would replay the full upstream
+    # key-extraction lineage (fingerprint hashing etc.) — measured 10.6s
+    # -> 1.5s at sf0.1 with the cache.
+    both.persist()
+
+    def step(labels: DataFrame, i: int) -> DataFrame:
+        if i == 0:
+            # Fused first round (r13): the initial labels are the
+            # identity map label(v) = v, so the propagation join
+            # contributes exactly one (dst, src) row per symmetrized
+            # edge — project the edge list directly instead of joining
+            # a |V|-row build side onto it.
+            prop = both.select(F.col("dst").alias("id"),
+                               F.col("src").alias("label"))
+        else:
+            prop = (both.alias("e")
+                    .join(labels.alias("l"),
+                          F.col("e.src") == F.col("l.id"))
+                    .select(F.col("e.dst").alias("id"), F.col("l.label")))
+        return (prop.unionByName(labels)
+                .groupBy("id").agg(F.min("label").alias("label")))
+
+    try:  # the last probe materialized the labels: the cache can go
+        return fixpoint(
+            vertices.select(F.col("id"), F.col("id").alias("label")), step,
+            rounds=max_iter,
+            probe=lambda labels: labels.agg(F.sum("label")).collect()[0][0],
+            until=operator.eq, width=shuffle_partitions)
     finally:
-        spark.conf.set(conf_key, prev_conf)
+        both.unpersist()
 
 
 def exact_dedup_keep_min(df: DataFrame, text_col: str = "text",

@@ -37,7 +37,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ab_metadata_pusher_spark.observability import capture_plan_segment
 from ab_metadata_pusher_spark.operators._shared import nodeset_hint
 
 __all__ = [
@@ -196,8 +195,7 @@ def graph_components(relations: DataFrame) -> DataFrame:
 
 def pagerank(relations: DataFrame, iters: int = 3,
              damping: float = 0.85,
-             broadcast_ranks: bool | None = None,
-             checkpoint_every: int = 3) -> DataFrame:
+             broadcast_ranks: bool | None = None) -> DataFrame:
     """Fixed-iteration PageRank over a relations frame (start_key ->
     end_key directed edges): ``pr'(v) = (1-d)/N + d * sum_{u->v}
     pr(u)/out_deg(u)``, starting uniform at 1/N.  Dangling-node mass
@@ -220,9 +218,8 @@ def pagerank(relations: DataFrame, iters: int = 3,
     the shared node-set budget (``operators/_shared.nodeset_hint`` —
     the LPA/k-core/BFS resource rule): web-scale rank frames no longer
     fit one executor and flip to the shuffled form automatically; pass
-    True/False to override.  Lineage is truncated with
-    ``localCheckpoint`` every ``checkpoint_every`` iterations either
-    way.
+    True/False to override.  The loop cuts no lineage: at a few
+    iterations the unrolled plan stays small, and a cut costs a job.
     """
     edges = relations.select(F.col("start_key").alias("src"),
                              F.col("end_key").alias("dst"))
@@ -240,7 +237,7 @@ def pagerank(relations: DataFrame, iters: int = 3,
     e = edges.join(hint(out_deg), "src").persist()
     teleport = F.lit((1.0 - damping) / n)
     pr = nodes.withColumn("pr", F.lit(1.0 / n))
-    for i in range(iters):
+    for _ in range(iters):
         contribs = (e.join(hint(pr), e.src == pr.node_key)
                     .select(F.col("dst").alias("node_key"),
                             (F.col("pr") / F.col("out_deg")).alias("c"))
@@ -250,10 +247,4 @@ def pagerank(relations: DataFrame, iters: int = 3,
               .select("node_key",
                       (teleport + F.lit(damping)
                        * F.coalesce("in_mass", F.lit(0.0))).alias("pr")))
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            # Bound plan lineage: each unrolled iteration otherwise nests
-            # the previous plan, and optimizer time grows superlinearly
-            # with iteration count.  Values are unchanged.
-            capture_plan_segment(pr)
-            pr = pr.localCheckpoint(eager=True)
     return pr.select("node_key", F.round("pr", 6).alias("pagerank"))

@@ -13,13 +13,14 @@ check stronger (e.g. the funnel: one-pass array fold vs. three-join SQL).
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ab_metadata_pusher_spark.observability import capture_plan_segment
 from ab_metadata_pusher_spark.operators._shared import (
-    hash_build_guard, materialize_shared, nodeset_hint, parquet_rowcount,
-    _materialize_mode,
+    fixpoint, hash_build_guard, materialize_shared, nodeset_hint,
+    parquet_rowcount, _materialize_mode,
 )
 from ab_metadata_pusher_spark.operators import text as X
 from ab_metadata_pusher_spark.plans.registry import register
@@ -508,8 +509,8 @@ def q_graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     it by src so each frontier join co-locates, and checkpoint the
     visited set every few steps to cut lineage depth.  The
     frontier/visited build sides broadcast only WITHIN the
-    :func:`_nodeset_hint` budget (decided per step from the counts the
-    checkpoint discipline already pays for): a 3-hop neighborhood on a
+    :func:`_nodeset_hint` budget (decided per step from the frontier
+    counts the :func:`fixpoint` probe pays for): a 3-hop neighborhood on a
     dense 100 TB graph saturates toward |V|, at which point the
     anti-join flips to its shuffled form instead of OOMing the build —
     while the explicit hint below the budget still stops the planner
@@ -519,33 +520,33 @@ def q_graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (eh.select(F.col("a").alias("src"), F.col("b").alias("dst"))
              .union(eh.select(F.col("b"), F.col("a"))).cache())
     part = _t(spark, sf_dir, "part")
-    frontier = (part.filter(F.col("p_partkey") == 1)
-                .select(F.col("p_partkey").alias("node"),
-                        F.lit(0).alias("dist")))
-    visited = frontier
-    n_visited = 1
-    n_frontier = 1
-    for step in (1, 2, 3):
-        frontier = (edges.join(_nodeset_hint(n_frontier, 24)(frontier),
-                               edges.src == frontier.node)
-                    .select(F.col("dst").alias("node"),
-                            F.lit(step).alias("dist"))
-                    .distinct()
-                    .join(_nodeset_hint(n_visited, 24)(visited),
-                          "node", "left_anti"))
+    seed = (part.filter(F.col("p_partkey") == 1)
+            .select(F.col("p_partkey").alias("node"), F.lit(0).alias("dist")))
+    sizes = [1]  # frontier sizes, the seed's first; each probe adds one
+    visited = None
+
+    def expand(frontier: DataFrame, i: int) -> DataFrame:
         # each step's frontier feeds TWO consumers (next anti-join +
-        # visited union); checkpointing it keeps lineage depth constant
-        # per step instead of nesting every prior step's join chain
-        # twice.  Superseded frontier checkpoint blocks are reclaimed on
-        # driver GC (ContextCleaner), not eagerly — bounded for this
-        # max_steps-bound loop.
-        capture_plan_segment(frontier)
-        frontier = frontier.localCheckpoint(eager=True)
-        # count over the just-checkpointed blocks — no recompute
-        n_frontier = frontier.count()
-        n_visited += n_frontier
-        visited = visited.union(frontier)
-    return visited
+        # visited union); the kernel's cut keeps lineage depth constant
+        # per step instead of nesting every prior step's join chain twice
+        nonlocal visited
+        visited = frontier if visited is None else visited.union(frontier)
+        return (edges.join(_nodeset_hint(sizes[-1], 24)(frontier),
+                           edges.src == frontier.node)
+                .select(F.col("dst").alias("node"), F.lit(i + 1).alias("dist"))
+                .distinct()
+                .join(_nodeset_hint(sum(sizes), 24)(visited),
+                      "node", "left_anti"))
+
+    def probe(frontier: DataFrame) -> int:
+        sizes.append(frontier.count())
+        return sizes[-1]
+
+    try:
+        last = fixpoint(seed, expand, rounds=3, probe=probe)
+    finally:  # every frontier the result reads is a materialized cut
+        edges.unpersist()
+    return visited.union(last)
 
 
 @register(
@@ -770,30 +771,25 @@ def _lpa_run(spark: SparkSession, e0: DataFrame, iters: int,
     # r4 across widths {8,16,32} in fresh sessions: 16 is the floor at
     # both sf0.01 (2.24s vs 2.42s) and sf0.1 (7.65s vs 8.97s warm) —
     # 8 under-parallelizes the first |E|-sized (v,lab) reduce.
-    conf_key = "spark.sql.shuffle.partitions"
-    prev_conf = spark.conf.get(conf_key)
     pinned: list[DataFrame] = []
     try:
         # ONE width for the whole loop: the up-front edge partitioning
-        # (the alignment every round's aggregations inherit) and any
-        # conf-pinned residual shuffles must agree, or the round aggs
-        # re-exchange to the conf width.  The width itself is
+        # (the alignment every round's aggregations inherit) and the
+        # rounds' conf-pinned residual shuffles must agree, or the round
+        # aggs re-exchange to the conf width.  The width itself is
         # DATA-SIZED (_loop_width): the count below materializes the
         # persist round 1 would have materialized anyway — LPA acts at
         # construction by design (eager checkpoints), so this adds one
         # cached-scan job, not a new execution obligation.  The
         # pre-repartition edges pin makes the co-occur join compute
-        # once, not twice.
+        # once, not twice.  try/finally: a mid-loop failure (executor
+        # OOM, cancelled stage) must not leak the persisted edges into
+        # the rest of the session.
         edges = edges.persist()
         pinned.append(edges)
         n_rows = edges.count()
         width = _loop_width(n_rows,
                             spark.sparkContext.defaultParallelism)
-        # try/finally: a mid-loop failure (executor OOM, cancelled
-        # stage) must not leak the pinned width or the persisted edges
-        # into the rest of the session — same discipline as
-        # connected_components.
-        spark.conf.set(conf_key, str(width))
         if align == "auto":
             n_v = n_vertices_hint if n_vertices_hint is not None else n_rows
             align = ("broadcast"
@@ -820,23 +816,20 @@ def _lpa_run(spark: SparkSession, e0: DataFrame, iters: int,
                         (-F.col("lab")).alias("nl"))).alias("m"))
                     .select("v", (-F.col("m.nl")).alias("lab")))
 
-        # Fused round 1: identity labels make the join a per-edge
-        # identity map — aggregate edges directly (no |V| build side).
-        labels = round_argmax(edges.select("a", F.col("b").alias("lab")))
-        capture_plan_segment(labels)
-        labels = labels.localCheckpoint(eager=True)
-        for _ in range(iters - 1):
-            labels = round_argmax(
+        def step(labels: DataFrame, i: int) -> DataFrame:
+            if i == 0:
+                # Fused round 1: identity labels make the join a
+                # per-edge identity map — aggregate edges directly (no
+                # |V| build side); the loop's entry state is unused.
+                return round_argmax(edges.select("a", F.col("b").alias("lab")))
+            return round_argmax(
                 edges.join(hint(labels.withColumnRenamed("v", "b")), "b"))
-            # Sever per-round lineage: without this, round r's broadcast
-            # build re-executes rounds 1..r-1 inside the broadcast thread
-            # (measured driver OOM at sf0.1).  Same discipline as the
-            # connected-components loop; the plan segment keeps the audit's
-            # cumulative shuffle counts honest.
-            capture_plan_segment(labels)
-            labels = labels.localCheckpoint(eager=True)
+
+        # No probe, so every round's cut is eager: without it, round r's
+        # broadcast build re-executes rounds 1..r-1 inside the broadcast
+        # thread (measured driver OOM at sf0.1).
+        labels = fixpoint(edges, step, rounds=iters, width=width)
     finally:
-        spark.conf.set(conf_key, prev_conf)
         for frame in pinned:
             frame.unpersist()
     return labels.select(F.col("v").alias("node"),
@@ -1083,10 +1076,10 @@ _KCORE_ROUNDS = 10
 # The node-set broadcast budget lives in operators/_shared.py
 # (nodeset_hint) so the operator layer (pagerank) shares the same
 # resource rule; decided PER STEP and for free here: each loop already
-# pays a count on the set (k-core fixpoint test, BFS checkpointed
-# frontier), so a 100 TB graph starts on shuffled joins where the set
-# is |V|-near (k-core round 1, a saturated BFS visited set) and drops
-# to broadcast exactly when the count fits the budget.
+# pays a count per round (k-core fixpoint test, BFS frontier probe),
+# so a 100 TB graph starts on shuffled joins where the set is |V|-near
+# (k-core round 1, a saturated BFS visited set) and drops to broadcast
+# exactly when the count fits the budget.
 _nodeset_hint = nodeset_hint
 
 
@@ -1134,20 +1127,19 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Peeling is a Pregel-style loop of two |V|-sized steps: degree count
     (one map-side-combined groupBy over the CURRENT edge set) and edge
     restriction (two semi-joins against the survivor set).  The
-    semi-join alignment is decided PER ROUND from the survivor count
-    the fixpoint test already pays for (:func:`_nodeset_hint` —
-    broadcast within the 512 MiB budget, shuffled above it): round 1
-    of a 100 TB graph keeps nearly |V| survivors, far past any build
-    side, then the monotone shrink crosses into broadcast territory
-    and later rounds go exchange-free on the survivor side.  Edges
-    start df-gated by the min-weight threshold, the loop early-exits
-    when the survivor count is stable (further rounds provably no-op,
-    so the result equals the oracle's fixed {rounds}-round unroll), and
-    each round ends in an eager localCheckpoint so round r's semi-join
-    build never re-executes rounds 1..r-1 — same discipline as the LPA
-    and CC loops.  At 100 TB: k-core peeling touches only |V|+|E| per
-    round and the round count is bounded by the degeneracy ordering
-    depth; salt the degree groupBy if a hub key dominates."""
+    semi-join alignment is decided PER ROUND from the edge count the
+    fixpoint test already pays for (:func:`_nodeset_hint` on 2|E|, a
+    survivor bound — broadcast within the 512 MiB budget, shuffled
+    above it): round 1 of a 100 TB graph keeps nearly |V| survivors,
+    far past any build side, then the monotone shrink crosses into
+    broadcast territory and later rounds go exchange-free on the
+    survivor side.  Edges start df-gated by the min-weight threshold;
+    the :func:`fixpoint` loop early-exits when the edge count is stable
+    (a peel removes an edge exactly when it removes a node, so further
+    rounds provably no-op and the result equals the oracle's fixed
+    {rounds}-round unroll).  At 100 TB: k-core peeling touches only
+    |V|+|E| per round and the round count is bounded by the degeneracy
+    ordering depth; salt the degree groupBy if a hub key dominates."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     per = (li.groupBy("l_orderkey")
            .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps")))
@@ -1160,53 +1152,39 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
              .agg(F.count(F.lit(1)).alias("w"))
              .filter(F.col("w") >= _KCORE_MIN_W)
              .select("a", "b"))
-    conf_key = "spark.sql.shuffle.partitions"
-    prev_conf = spark.conf.get(conf_key)
-    # try/finally: restore the session shuffle width even if a peel round
-    # dies mid-loop (same leak the LPA loop guards against).  The loop
-    # width is data-sized via _loop_width (floor 16 = the r4 fixture
-    # A/B: 8 under-parallelizes the edge-sized reduces, kcore warm at
-    # sf0.1: 3.13s@8 -> 2.91s@16; the r10 multi-decade study showed
-    # fixture constants strangle the third decade — see the LPA probe).
-    # The edge BUILD runs before the pin at the session width, which is
-    # the user's cluster-sized setting — only the peel rounds need the
-    # |E|-proportional width.
-    try:
-        # LAZY checkpoints throughout (r13): each checkpoint's plan is
-        # truncated immediately, but materialization rides the count the
-        # loop already pays — one job per (checkpoint, count) pair
-        # instead of two.
-        edges = edges.localCheckpoint(eager=False)
-        # 2x: edges holds a<b pairs but every peel round streams the
-        # SYMMETRIZED incidence (the unionByName below is 2|E| rows) —
-        # the 70k-rows/partition density was calibrated on LPA's
-        # symmetrized stream, so feed it the same row count here or the
-        # loop sizes ~2x narrower than calibrated (r10 ADVICE)
-        spark.conf.set(conf_key, str(_loop_width(
-            2 * edges.count(), spark.sparkContext.defaultParallelism)))
-        prev_nodes = -1
-        for _ in range(_KCORE_ROUNDS):
-            incid = edges.select(F.col("a").alias("s")).unionByName(
-                edges.select(F.col("b").alias("s")))
-            keep = (incid.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
-                    .filter(F.col("d") >= _KCORE_K).select("s"))
-            keep = keep.localCheckpoint(eager=False)
-            n = keep.count()
-            if n == prev_nodes:
-                break  # fixpoint: every further round is an identity map
-            prev_nodes = n
-            hint = _nodeset_hint(n)
-            edges = (edges
-                     .join(hint(keep.withColumnRenamed("s", "a")),
-                           "a", "semi")
-                     .join(hint(keep.withColumnRenamed("s", "b")),
-                           "b", "semi"))
-            capture_plan_segment(edges)
-            # lazy: materialized by the NEXT round's keep count (or the
-            # final degree aggregate), one job per round instead of two
-            edges = edges.localCheckpoint(eager=False)
-    finally:
-        spark.conf.set(conf_key, prev_conf)
+    # The edge BUILD runs at the session width, which is the user's
+    # cluster-sized setting; only the peel rounds pin the data-sized
+    # _loop_width (floor 16 = the r4 fixture A/B: 8 under-parallelizes
+    # the edge-sized reduces, kcore warm at sf0.1: 3.13s@8 -> 2.91s@16;
+    # the r10 multi-decade study showed fixture constants strangle the
+    # third decade — see the LPA probe).  The build is cut lazily and
+    # materialized by the count that sizes the width.
+    edges = edges.localCheckpoint(eager=False)
+    sizes = [edges.count()]  # edge count per round; each probe adds one
+
+    def peel(edges: DataFrame, _i: int) -> DataFrame:
+        incid = edges.select(F.col("a").alias("s")).unionByName(
+            edges.select(F.col("b").alias("s")))
+        keep = (incid.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
+                .filter(F.col("d") >= _KCORE_K).select("s"))
+        hint = _nodeset_hint(2 * sizes[-1])  # survivors <= 2|E| endpoints
+        return (edges
+                .join(hint(keep.withColumnRenamed("s", "a")), "a", "semi")
+                .join(hint(keep.withColumnRenamed("s", "b")), "b", "semi"))
+
+    def probe(edges: DataFrame) -> int:
+        sizes.append(edges.count())
+        return sizes[-1]
+
+    # 2x: edges holds a<b pairs but every peel round streams the
+    # SYMMETRIZED incidence (the unionByName in peel is 2|E| rows) —
+    # the 70k-rows/partition density was calibrated on LPA's
+    # symmetrized stream, so feed it the same row count here or the
+    # loop sizes ~2x narrower than calibrated (r10 ADVICE)
+    edges = fixpoint(edges, peel, rounds=_KCORE_ROUNDS, probe=probe,
+                     until=operator.eq,
+                     width=_loop_width(2 * sizes[0],
+                                       spark.sparkContext.defaultParallelism))
     return (edges.select(F.col("a").alias("node")).unionByName(
                 edges.select(F.col("b").alias("node")))
             .groupBy("node").agg(F.count(F.lit(1)).alias("core_degree")))

@@ -23,7 +23,9 @@ from ab_metadata_pusher_spark.functions.hashing import (
     MERSENNE_P, md5_long, minhash_coeffs, sql_md5_long,
 )
 from ab_metadata_pusher_spark.observability import capture_plan_segment
-from ab_metadata_pusher_spark.operators._shared import materialize_shared
+from ab_metadata_pusher_spark.operators._shared import (
+    double_array_lit, fixpoint, materialize_shared,
+)
 from ab_metadata_pusher_spark.operators import bloom as B
 from ab_metadata_pusher_spark.operators import dedup as D
 from ab_metadata_pusher_spark.operators import linalg as L
@@ -3801,8 +3803,9 @@ def q_sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded collect (like k-means centroids); the min-distance update is
     a map-only in-row expression against the broadcast center (running
     min kept as a column — each round touches the corpus once, no
-    growing join).  k rounds = k scans; lineage is cut per round with
-    localCheckpoint exactly like the other iterative operators.  The
+    growing join).  k rounds = k scans on the shared ``fixpoint``
+    kernel: each round's lazy lineage cut is materialized by its one
+    job, the TakeOrdered pick of the winning id AND its vector.  The
     oracle unrolls the data-dependent picks as scalar subqueries."""
     emb = load_table(spark, sf_dir, "embeddings")
     pts = emb.select(
@@ -3813,33 +3816,28 @@ def q_sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keeps the old agg(min) semantics: min() ignored NULL ids, while a
     # bare asc sort puts them first (r13 ADVICE — latent, fixture ids
     # are non-null).
-    seed = (pts.orderBy(F.col("vec_id").asc_nulls_last())
-            .select("vec_id", "v").first())
-    centers = [int(seed.vec_id)]
+    picks = [pts.orderBy(F.col("vec_id").asc_nulls_last())
+             .select("vec_id", "v").first()]
 
     def dist_to(center_vec):
-        from ab_metadata_pusher_spark.operators._shared import double_array_lit
         arr = double_array_lit(center_vec)
         return F.aggregate(
             F.zip_with("v", arr, lambda a, b: (a - b) * (a - b)),
             F.lit(0.0), lambda acc, x: acc + x)
 
-    state = pts.withColumn("md", dist_to(seed.v))
-    for _ in range(_KCENTER_K - 1):
-        state = state.filter(~F.col("vec_id").isin(centers))
-        capture_plan_segment(state)
-        # ONE job per round (r13): the checkpoint is lazy (plan
-        # truncated now, materialized by the pick below) and the pick
-        # fetches the winning id AND its vector in the same TakeOrdered
-        # pass — the round previously paid three jobs (eager
-        # checkpoint, orderBy/first, filter/first).
-        state = state.localCheckpoint(eager=False)
-        nxt = (state.orderBy(F.col("md").desc(), "vec_id")
-               .select("vec_id", "v").first())
-        centers.append(int(nxt.vec_id))
-        state = state.withColumn("md", F.least("md", dist_to(nxt.v)))
+    def step(state: DataFrame, i: int) -> DataFrame:
+        d = dist_to(picks[-1].v)  # the last pick's distance update
+        return (state.withColumn("md", d if i == 0 else F.least("md", d))
+                .filter(~F.col("vec_id").isin([int(p.vec_id) for p in picks])))
+
+    def pick(state: DataFrame):
+        picks.append(state.orderBy(F.col("md").desc(), "vec_id")
+                     .select("vec_id", "v").first())
+
+    fixpoint(pts, step, rounds=_KCENTER_K - 1, probe=pick)
     return spark.createDataFrame(
-        [(r, c) for r, c in enumerate(centers)], "rank int, vec_id bigint")
+        [(r, int(p.vec_id)) for r, p in enumerate(picks)],
+        "rank int, vec_id bigint")
 
 
 @register(
@@ -4230,7 +4228,6 @@ def q_embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame
     bit-for-bit before the 6-dp round."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-    from ab_metadata_pusher_spark.operators._shared import double_array_lit
     cols = []
     for i, row in enumerate(_rp_coefs()):
         dot = F.aggregate(

@@ -56,7 +56,9 @@ DEFAULT_CONFIG: dict[str, str] = {
     # for the local harness; a cluster deployment must raise this (or
     # let AQE coalesce DOWN from a high setting, never up) so that
     # |kept shingles| / width fits an executor task.  The iterative
-    # graph loops size their own width from data (_loop_width).  Since
+    # graph loops pin a width of their own for the loop only, through
+    # operators/_shared.fixpoint (LPA and k-core size it from data with
+    # _loop_width; connected components takes it as an argument).  Since
     # r12 this assumption is CHECKED at plan time: every shuffle-hash
     # build side passes through operators/_shared.hash_build_guard,
     # which warns (Catalyst size estimate / width vs a 2 GiB per-task
