@@ -11,7 +11,9 @@ the other (r6 ADVICE).
 The conf key keeps its historical name
 (``spark.ab_metadata_pusher.dedup.materialize``) because registered bench
 plans and library callers already set it; it governs every family that
-routes through here, not just dedup.
+routes through here, not just dedup.  The session conf is the only
+selector: no operator takes a per-call materialization override, so
+one session runs one physical path.
 """
 
 from __future__ import annotations
@@ -32,8 +34,7 @@ logger = logging.getLogger(__name__)
 
 #: Session conf selecting how shared self-join streams are materialized
 #: (see :func:`materialize_shared`): ``persist`` (default, lazy) |
-#: ``eager``.  A ``materialize=`` keyword on the public pair operators
-#: overrides the conf per call.
+#: ``eager``.
 MATERIALIZE_CONF = "spark.ab_metadata_pusher.dedup.materialize"
 
 #: Frames persisted by :func:`materialize_shared` in ``persist`` mode.
@@ -44,52 +45,40 @@ MATERIALIZE_CONF = "spark.ab_metadata_pusher.dedup.materialize"
 _PERSISTED: list[DataFrame] = []
 
 
-def _materialize_mode(mode: str | None, conf_get) -> str:
-    """Resolve the materialization strategy: parameter > conf > default.
+def _materialize_mode(conf_get) -> str:
+    """Resolve the materialization strategy from ``MATERIALIZE_CONF``.
 
     Pure function of a ``conf_get(key, default)`` callable so the
     decision table is unit-testable without a session.  Default is
     ``persist`` — the LAZY strategy: building a plan runs no Spark job
     (an eager/lazy localCheckpoint both execute upstream AQE stages at
     construction), and persisted blocks stay recomputable from lineage
-    after executor loss.  An explicit ``eager`` is demoted back to
-    ``persist`` when dynamic allocation or executor decommissioning is
-    enabled — localCheckpoint blocks are non-replicated executor-local
-    state, and losing one mid-job is a job FAILURE there, not a slow
-    path — and the demotion is logged at WARNING level because callers
-    that requested eager for a stable audited plan shape need to know
-    the shape changed (r6 ADVICE).
+    after executor loss.  ``eager`` is demoted back to ``persist`` when
+    dynamic allocation or executor decommissioning is enabled —
+    localCheckpoint blocks are non-replicated executor-local state, and
+    losing one mid-job is a job FAILURE there, not a slow path.
     """
-    requested = mode
-    if mode is None:
-        mode = conf_get(MATERIALIZE_CONF, None)
+    mode = conf_get(MATERIALIZE_CONF, None)
     mode = "persist" if mode is None else str(mode).lower()
     if mode not in ("eager", "persist"):
         raise ValueError(
             f"materialize mode must be eager|persist, got {mode!r}")
-    if mode == "eager":
-        for k in ("spark.dynamicAllocation.enabled",
-                  "spark.decommission.enabled"):
-            if str(conf_get(k, "false")).lower() == "true":
-                if requested is not None:
-                    logger.warning(
-                        "materialize='eager' demoted to 'persist': %s is "
-                        "enabled and localCheckpoint blocks are "
-                        "non-replicated executor-local state (job failure "
-                        "on executor loss); the audited eager plan shape "
-                        "does not apply to this run", k)
-                return "persist"
+    if mode == "eager" and any(
+            str(conf_get(k, "false")).lower() == "true"
+            for k in ("spark.dynamicAllocation.enabled",
+                      "spark.decommission.enabled")):
+        return "persist"
     return mode
 
 
-def materialize_shared(df: DataFrame, mode: str | None = None) -> DataFrame:
+def materialize_shared(df: DataFrame) -> DataFrame:
     """Materialize a stream referenced by BOTH sides of a self-join.
 
     Catalyst shares no subplans across aliases, so without
     materialization the upstream pipeline (shingling, df gates,
     fingerprint decode) is rebuilt once per reference.  Strategy comes
-    from the ``mode`` parameter, falling back to
-    ``spark.ab_metadata_pusher.dedup.materialize``:
+    from the ``spark.ab_metadata_pusher.dedup.materialize`` session
+    conf:
 
     * ``persist`` (default) — ``persist(MEMORY_AND_DISK)``: LAZY (no
       Spark job at DataFrame-construction time — library callers can
@@ -100,21 +89,20 @@ def materialize_shared(df: DataFrame, mode: str | None = None) -> DataFrame:
       when the plan is garbage-collected — blocks are LRU-evictable but
       the entry (and any spilled disk blocks) live until ``unpersist``.
       Every persist-mode frame is therefore registered here; call
-      :func:`release_materialized` after consuming the results, or use
+      :func:`release_materialized` after consuming the results, or set
       ``eager`` when invoking an operator many times in one session
       (checkpoint blocks ARE freed by the ContextCleaner on plan GC).
     * ``eager`` — ``localCheckpoint(eager=True)``: materializes NOW and
-      truncates lineage.  The registered bench plans use this (stable
-      audited plan shape, no cache-entry accumulation across bench
-      loops).  Auto-demoted to ``persist`` on elastic clusters, with a
-      WARNING — see :func:`_materialize_mode`.
+      truncates lineage.  The bench session sets it (stable audited
+      plan shape, no cache-entry accumulation across bench loops).
+      Demoted to ``persist`` on elastic clusters — see
+      :func:`_materialize_mode`.
 
     Under ``eager`` the checkpoint truncates lineage, so downstream
     filters do NOT push below the materialization point — pre-filter
     the input or use ``persist`` when that matters.
     """
-    mode = _materialize_mode(mode, df.sparkSession.conf.get)
-    if mode == "persist":
+    if _materialize_mode(df.sparkSession.conf.get) == "persist":
         from pyspark import StorageLevel
         out = df.persist(StorageLevel.MEMORY_AND_DISK)
         _PERSISTED.append(out)
@@ -276,37 +264,20 @@ def spread_if_narrow(df: DataFrame) -> DataFrame:
 HASH_BUILD_TASK_BUDGET_BYTES = 2 << 30
 
 
-#: Env knob for :func:`hash_build_guard` (r12 VERDICT ask #3 — a
-#: 100 TB deployment that misses a WARN log line still OOMs):
-#: ``warn`` (default) keeps the SHUFFLE_HASH hint and warns past
-#: budget; ``strict`` DROPS the hint past budget, falling back to
-#: spillable sort-merge; ``off`` skips the estimate entirely and keeps
-#: the hint (the measured 2.7x SHJ win over SMJ at x100).
-HASH_BUILD_MODE_ENV = "SPARK_GRAFT_HASH_BUILD"
-
-
 def hash_build_guard(df: DataFrame, what: str,
                      budget_bytes: int | None = None) -> DataFrame:
     """Guarded SHUFFLE_HASH build side: returns ``df`` carrying the
-    ``shuffle_hash`` hint, unless strict mode drops it past budget
-    (r11 ADVICE made the 'width keeps the build within a task'
-    assumption audible; r12 VERDICT ask #3 makes it actionable).
+    ``shuffle_hash`` hint while its per-task slice fits the budget.
 
     Uses Catalyst's own optimized-plan size estimate divided by the
     session shuffle width — pure driver-side planning, no job (the
     optimizer run is milliseconds; the lazy-construction contract in
     tests/test_plan_shapes.py holds).  Estimates inherit file-scan
-    sizes through filters, so they are rough.  Mode comes from
-    ``SPARK_GRAFT_HASH_BUILD``:
-
-    * ``warn`` (default) — past budget, WARN with the width/budget
-      arithmetic spelled out and keep the hint: the hint sites measured
-      2.7x faster than SMJ at x100; a deployment seeing the warning
-      raises ``spark.sql.shuffle.partitions``.
-    * ``strict`` — past budget, DROP the hint (WARN says so): Catalyst
-      falls back to sort-merge, which SPILLS instead of OOMing the
-      non-spillable hash build.  Under budget the hint stays.
-    * ``off`` — keep the hint, skip the estimate.
+    sizes through filters, so they are rough.  Past the budget it
+    WARNs with the width/budget arithmetic spelled out and DROPS the
+    hint: Catalyst falls back to sort-merge, which SPILLS instead of
+    OOMing the non-spillable hash build.  Under the budget the hint
+    stays (the hint sites measured 2.7x faster than SMJ at x100).
 
     AQE caveat (r12 ADVICE): the per-task arithmetic divides by the
     CONFIGURED ``spark.sql.shuffle.partitions``, but AQE can coalesce
@@ -317,18 +288,8 @@ def hash_build_guard(df: DataFrame, what: str,
     ``spark.sql.adaptive.coalescePartitions.minPartitionNum``, the
     guard divides by that floor instead (the worst-case post-coalesce
     width), making the bound exact rather than optimistic."""
-    import os
-
     if budget_bytes is None:  # resolved at CALL time so tests and
         budget_bytes = HASH_BUILD_TASK_BUDGET_BYTES  # deploys can patch
-    mode = os.environ.get(HASH_BUILD_MODE_ENV, "warn").lower()
-    if mode not in ("warn", "strict", "off"):
-        logger.warning("%s=%r not in warn|strict|off — using warn",
-                       HASH_BUILD_MODE_ENV, mode)
-        mode = "warn"
-    hinted = df.hint("shuffle_hash")
-    if mode == "off":
-        return hinted
     try:
         size = int(df._jdf.queryExecution().optimizedPlan()
                    .stats().sizeInBytes())
@@ -343,24 +304,20 @@ def hash_build_guard(df: DataFrame, what: str,
             width = min(width, int(mn))
         per_task = size // max(width, 1)
         if per_task > budget_bytes:
-            action = ("dropping the shuffle_hash hint (falling back to "
-                      "spillable sort-merge)" if mode == "strict" else
-                      "raise spark.sql.shuffle.partitions so the "
-                      "per-task build slice fits memory")
             logger.warning(
                 "%s: estimated shuffle-hash build ~%.1f GiB / %d shuffle "
                 "partitions = %.1f GiB per task (> %.1f GiB budget) — the "
-                "hash build cannot spill; %s. (AQE may coalesce the build "
-                "shuffle below the configured width; the budget is sized "
-                "conservatively for that.)",
+                "hash build cannot spill; dropping the shuffle_hash hint "
+                "(falling back to spillable sort-merge). (AQE may coalesce "
+                "the build shuffle below the configured width; the budget "
+                "is sized conservatively for that.)",
                 what, size / 2**30, width, per_task / 2**30,
-                budget_bytes / 2**30, action)
-            if mode == "strict":
-                return df
+                budget_bytes / 2**30)
+            return df
     except Exception:  # estimate unavailable: never block the plan
         logger.debug("%s: hash-build size estimate unavailable — "
                      "guard skipped", what, exc_info=True)
-    return hinted
+    return df.hint("shuffle_hash")
 
 
 def parquet_rowcount(path: str) -> int:

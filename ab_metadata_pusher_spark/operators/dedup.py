@@ -17,6 +17,10 @@ Scale design (the 100 TB story):
 * simhash: one 64-bit fingerprint per doc; near-dup = Hamming<=d.  Bit
   aggregation is k sum-aggregates; pair search joins on rotated prefix
   buckets (here: direct join at test scale).
+
+Every stream a self-join reads twice goes through
+``_shared.materialize_shared``; the ``MATERIALIZE_CONF`` session conf
+alone picks its lazy-persist or eager path.
 """
 
 from __future__ import annotations
@@ -31,7 +35,6 @@ from ab_metadata_pusher_spark.functions.hashing import (
 )
 from ab_metadata_pusher_spark.operators._shared import (
     MATERIALIZE_CONF,
-    _materialize_mode,  # noqa: F401  (re-export: unit tests target it here)
     fixpoint,
     hash_build_guard,
     materialize_shared as _materialize_shared,
@@ -198,8 +201,7 @@ def doc_shingles(df: DataFrame, n: int = 3, text_col: str = "text",
          .alias("shingle"))
 
 
-def _gated_shingles(df: DataFrame, n: int, max_df: int | None,
-                    materialize: str | None = None) -> DataFrame:
+def _gated_shingles(df: DataFrame, n: int, max_df: int | None) -> DataFrame:
     """(sid, shingle) — the df-gated stream WITHOUT the per-doc size
     column (r13): the df gate's window partitions by ``shingle``, so
     the gated stream leaves this helper hash-partitioned by exactly
@@ -220,11 +222,10 @@ def _gated_shingles(df: DataFrame, n: int, max_df: int | None,
             "df", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
             .filter(F.col("df") <= max_df)
             .drop("df"))
-    return _materialize_shared(sh, materialize)
+    return _materialize_shared(sh)
 
 
-def _kept_shingles(df: DataFrame, n: int, max_df: int | None,
-                   materialize: str | None = None) -> DataFrame:
+def _kept_shingles(df: DataFrame, n: int, max_df: int | None) -> DataFrame:
     """(sid, shingle, n_sh) — the df-gated shingle stream with each
     doc's kept-set size attached, MATERIALIZED once via
     :func:`~ab_metadata_pusher_spark.operators._shared.materialize_shared`
@@ -248,12 +249,11 @@ def _kept_shingles(df: DataFrame, n: int, max_df: int | None,
     kept = (sh.withColumn(
         "n_sh", F.count(F.lit(1)).over(Window.partitionBy("sid")))
         .select("sid", "shingle", "n_sh"))
-    return _materialize_shared(kept, materialize)
+    return _materialize_shared(kept)
 
 
 def jaccard_pairs(df: DataFrame, threshold: float, n: int = 3,
-                  max_df: int | None = None,
-                  materialize: str | None = None) -> DataFrame:
+                  max_df: int | None = None) -> DataFrame:
     """Exact n-gram Jaccard similarity pairs (sid_a < sid_b, sim >= t).
 
     shingles equi-join -> per-pair intersection count -> sizes join ->
@@ -278,8 +278,8 @@ def jaccard_pairs(df: DataFrame, threshold: float, n: int = 3,
     r4 containment repair), and that stream is then materialized ONCE
     via :func:`_materialize_shared` (default lazy persist: no job at
     construction, blocks on first action, released via
-    :func:`release_materialized`; ``MATERIALIZE_CONF`` selects
-    eager / persist / off) — Catalyst does
+    :func:`release_materialized`; the ``MATERIALIZE_CONF`` session conf
+    selects eager / persist) — Catalyst does
     not share subplans and plans no ReusedExchange across the
     self-join's sides, so the unmaterialized form rebuilt the entire
     shingle pipeline per alias (audited: the corpus scanned once per
@@ -287,7 +287,7 @@ def jaccard_pairs(df: DataFrame, threshold: float, n: int = 3,
     materialized stream; at corpus scale one materialization replaces
     two full recomputes.
     """
-    sh = _gated_shingles(df, n, max_df, materialize)
+    sh = _gated_shingles(df, n, max_df)
     sizes = sh.groupBy("sid").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.alias("a")
     # SHUFFLE_HASH on the build alias: sort-merge would sort BOTH
@@ -301,8 +301,8 @@ def jaccard_pairs(df: DataFrame, threshold: float, n: int = 3,
     # WIDTH ASSUMPTION: unlike SMJ the hash build cannot spill — the
     # deployment's shuffle width must keep |kept shingles|/width within
     # a task (session.py documents this next to the default width;
-    # hash_build_guard applies the hint and makes a breach audible
-    # at plan time — or drops it under SPARK_GRAFT_HASH_BUILD=strict).
+    # hash_build_guard applies the hint and, past its per-task budget,
+    # warns and drops it for the spillable sort-merge).
     b = hash_build_guard(sh, "jaccard_pairs kept-shingle build") \
         .alias("b")
     inter = (
@@ -334,8 +334,7 @@ def jaccard_pairs(df: DataFrame, threshold: float, n: int = 3,
 
 
 def containment_pairs(df: DataFrame, threshold: float, n: int = 3,
-                      max_df: int = 100,
-                      materialize: str | None = None) -> DataFrame:
+                      max_df: int = 100) -> DataFrame:
     """Shingle-containment near-dup pairs: C = |A∩B| / min(|A|, |B|).
 
     Catches SUBSET duplication — a short document embedded inside a long
@@ -358,7 +357,7 @@ def containment_pairs(df: DataFrame, threshold: float, n: int = 3,
     # candidate self-join's two aliases don't each rebuild the explode
     # + window pipeline (Catalyst shares no subplans).  The counts —
     # hence scores — are identical to the lazy form.
-    kept = _gated_shingles(df, n, max_df, materialize)
+    kept = _gated_shingles(df, n, max_df)
     sizes = kept.groupBy("sid").agg(F.count(F.lit(1)).alias("n_sh"))
     # shuffle-hash for the same reason as jaccard_pairs (same join):
     # the r10 x100 A/B — 99.9 s SMJ vs 36.6 s hash, outputs equal
@@ -498,8 +497,7 @@ def simhash(df: DataFrame, bits: int = 32, text_col: str = "text",
 
 
 def simhash_pairs(df: DataFrame, max_hamming: int = 6,
-                  bits: int = 32,
-                  materialize: str | None = None) -> DataFrame:
+                  bits: int = 32) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance (sid_a < sid_b).
 
     Blocked, not all-pairs (Manku et al., WWW'07): the fingerprint splits
@@ -516,13 +514,11 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 6,
     max_hamming so buckets stay small.
     """
     return hamming_pairs(simhash(df, bits), "simhash",
-                         max_hamming=max_hamming, bits=bits,
-                         materialize=materialize)
+                         max_hamming=max_hamming, bits=bits)
 
 
 def hamming_pairs(hashes: DataFrame, hash_col: str, max_hamming: int,
-                  bits: int, id_col: str = "sid",
-                  materialize: str | None = None) -> DataFrame:
+                  bits: int, id_col: str = "sid") -> DataFrame:
     """Generic lossless pigeonhole Hamming join over ANY integer
     fingerprint column (SimHash, image pHash, audio fingerprints):
     (id_a, id_b, hamming) for all pairs within ``max_hamming``.
@@ -555,7 +551,7 @@ def hamming_pairs(hashes: DataFrame, hash_col: str, max_hamming: int,
                                  F.explode(blocks).alias("b"))
                    .select("sid", "h", F.col("b.blk").alias("blk"),
                            F.col("b.val").alias("val")))
-    keyed = _materialize_shared(keyed_build, materialize)
+    keyed = _materialize_shared(keyed_build)
     a, b = keyed.alias("a"), keyed.alias("b")
     cand = (
         a.join(b, (F.col("a.blk") == F.col("b.blk"))
@@ -627,8 +623,7 @@ def duplicated_spans(df: DataFrame, w: int = 10, text_col: str = "text",
 
 
 def lsh_verified_pairs(df: DataFrame, threshold: float,
-                       k: int = 16, bands: int = 4, n: int = 3,
-                       materialize: str | None = None) -> DataFrame:
+                       k: int = 16, bands: int = 4, n: int = 3) -> DataFrame:
     """Candidate-then-verify near-dup pipeline: LSH banding proposes
     pairs, exact n-gram Jaccard is computed ONLY on those pairs — the
     production shape (LSH alone over-generates, exact-all-pairs is n²).
@@ -648,7 +643,7 @@ def lsh_verified_pairs(df: DataFrame, threshold: float,
     # sides AND the size columns (carried through the joins, min() just
     # propagates the per-sid constant) — the lazy form re-ran the
     # shingling per reference: 4 corpus rebuilds for the verify stage.
-    kept = _kept_shingles(df, n, None, materialize)
+    kept = _kept_shingles(df, n, None)
     expanded = cand.join(
         kept.select(F.col("sid").alias("sid_a"), "shingle",
                     F.col("n_sh").alias("na")), "sid_a")
@@ -669,8 +664,7 @@ def lsh_verified_pairs(df: DataFrame, threshold: float,
 
 
 def ppjoin_pairs(df: DataFrame, threshold: float, n: int = 3,
-                 text_col: str = "text", id_col: str = "doc_id",
-                 materialize: str | None = None) -> DataFrame:
+                 text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact Jaccard pairs via PREFIX FILTERING (PPJoin-lite, Xiao et
     al., WWW'08) — lossless, unlike the df-gate, and candidate-bounded,
     unlike the all-pairs join.
@@ -714,7 +708,7 @@ def ppjoin_pairs(df: DataFrame, threshold: float, n: int = 3,
                       .groupBy("sid")
                       .agg(F.sort_array(F.collect_list(
                           F.struct("df", "shingle"))).alias("sorted_sh")))
-    docs_arr = _materialize_shared(docs_arr_build, materialize)
+    docs_arr = _materialize_shared(docs_arr_build)
     n_sh = F.size("sorted_sh")
     prefix_len = n_sh - F.ceil(F.lit(threshold) * n_sh).cast("int") + 1
     prefix = (docs_arr.select(
@@ -745,8 +739,7 @@ def ppjoin_pairs(df: DataFrame, threshold: float, n: int = 3,
 
 def edit_distance_pairs(df: DataFrame, tau: int = 2,
                         text_col: str = "text", id_col: str = "doc_id",
-                        block_col: str | None = None,
-                        materialize: str | None = None) -> DataFrame:
+                        block_col: str | None = None) -> DataFrame:
     """All pairs within Levenshtein distance ``tau`` — VALUE-COMPRESSED
     PassJoin pigeonhole blocking (Li, Deng & Feng, ICDE'11), never an
     all-pairs comparison.
@@ -828,8 +821,7 @@ def edit_distance_pairs(df: DataFrame, tau: int = 2,
     groups = _materialize_shared(
         rows.groupBy("blk", "txt")
             .agg(F.sort_array(F.collect_list("pid")).alias("ids"))
-            .withColumn("len", F.length("txt")),
-        materialize)
+            .withColumn("len", F.length("txt")))
 
     # ONE keyed stream serves both join sides: each value emits, for
     # every (segment index i, target-length delta dl, alignment shift

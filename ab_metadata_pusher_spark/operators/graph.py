@@ -37,7 +37,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ab_metadata_pusher_spark.operators._shared import nodeset_hint
+from ab_metadata_pusher_spark.operators._shared import (
+    materialize_shared, nodeset_hint,
+)
 
 __all__ = [
     "table_key", "column_key", "to_nodes", "to_relations",
@@ -167,12 +169,11 @@ def graph_components(relations: DataFrame) -> DataFrame:
     nodes = (relations.select(F.col("start_key").alias("node_key"))
              .unionByName(relations.select(F.col("end_key").alias("node_key")))
              .distinct())
-    id_map = nodes.withColumn(
-        "id", F.row_number().over(Window.orderBy("node_key")).cast("bigint"))
     # id_map feeds the edge build (twice), the vertex set, and the final
-    # label->key joins; without the cache every consumer replays the
+    # label->key joins; unmaterialized, every consumer replays the
     # upstream graph build + the id-assigning sort.
-    id_map.persist()
+    id_map = materialize_shared(nodes.withColumn(
+        "id", F.row_number().over(Window.orderBy("node_key")).cast("bigint")))
     edges = (relations
              .join(id_map.select(F.col("node_key").alias("start_key"),
                                  F.col("id").alias("src")), "start_key")
@@ -185,17 +186,14 @@ def graph_components(relations: DataFrame) -> DataFrame:
                                   shuffle_partitions=8)
     roots = id_map.select(F.col("id").alias("label"),
                           F.col("node_key").alias("component_key"))
-    # id_map stays persisted: the returned plan still reads it twice and
-    # unpersisting here would evict the cache before execution.  The
-    # frame is node-count-sized; callers that loop over many graphs can
-    # unpersist after materializing.
+    # the returned plan still reads id_map twice: a persist-mode frame
+    # is released by release_materialized once the result is consumed
     return (id_map.join(labels, "id").join(roots, "label")
             .select("node_key", "component_key"))
 
 
 def pagerank(relations: DataFrame, iters: int = 3,
-             damping: float = 0.85,
-             broadcast_ranks: bool | None = None) -> DataFrame:
+             damping: float = 0.85) -> DataFrame:
     """Fixed-iteration PageRank over a relations frame (start_key ->
     end_key directed edges): ``pr'(v) = (1-d)/N + d * sum_{u->v}
     pr(u)/out_deg(u)``, starting uniform at 1/N.  Dangling-node mass
@@ -204,21 +202,22 @@ def pagerank(relations: DataFrame, iters: int = 3,
     so a fixed iteration count is exactly reproducible.
 
     Each iteration is ONE shuffle: join current ranks to the out-degree-
-    annotated edge list (reused across iterations, so it is persisted)
+    annotated edge list (reused across iterations, so it is materialized)
     and re-aggregate by destination; the left join back to the vertex
     set keeps zero-in-degree nodes at the teleport floor.  N comes from
     a driver-side count — the vertex set of a metadata graph is
     catalog-sized.
 
-    ``broadcast_ranks`` hints the rank/contribution side of every join:
-    a metadata graph's vertex frame is KB-sized, and the hint turns 3
-    iterations of sort-merge-join chains into map-side broadcast joins
-    against the one persisted edge list.  The default (``None``) decides
-    from the vertex count the uniform-rank seed already pays for, under
-    the shared node-set budget (``operators/_shared.nodeset_hint`` —
-    the LPA/k-core/BFS resource rule): web-scale rank frames no longer
-    fit one executor and flip to the shuffled form automatically; pass
-    True/False to override.  The loop cuts no lineage: at a few
+    The rank/contribution side of every join is broadcast while the
+    vertex count the uniform-rank seed already pays for fits the shared
+    node-set budget (``operators/_shared.nodeset_hint`` — the
+    LPA/k-core/BFS resource rule): a metadata graph's vertex frame is
+    KB-sized, and the hint turns 3 iterations of sort-merge-join chains
+    into map-side broadcast joins against the one materialized edge
+    list; web-scale rank frames no longer fit one executor and flip to
+    the shuffled form.  The vertex set and edge list go through
+    ``materialize_shared``, so a persist-mode session releases them with
+    ``release_materialized``.  The loop cuts no lineage: at a few
     iterations the unrolled plan stays small, and a cut costs a job.
     """
     edges = relations.select(F.col("start_key").alias("src"),
@@ -226,15 +225,12 @@ def pagerank(relations: DataFrame, iters: int = 3,
     nodes = (edges.select(F.col("src").alias("node_key"))
              .unionByName(edges.select(F.col("dst").alias("node_key")))
              .distinct())
-    nodes.persist()
+    nodes = materialize_shared(nodes)
     n = nodes.count()
-    if broadcast_ranks is None:
-        # string-keyed (node_key, double) rank rows: ~64 B with slack
-        hint = nodeset_hint(n, 64)
-    else:
-        hint = F.broadcast if broadcast_ranks else (lambda df: df)
+    # string-keyed (node_key, double) rank rows: ~64 B with slack
+    hint = nodeset_hint(n, 64)
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    e = edges.join(hint(out_deg), "src").persist()
+    e = materialize_shared(edges.join(hint(out_deg), "src"))
     teleport = F.lit((1.0 - damping) / n)
     pr = nodes.withColumn("pr", F.lit(1.0 / n))
     for _ in range(iters):

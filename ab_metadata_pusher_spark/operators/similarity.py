@@ -388,8 +388,8 @@ def ann_lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5, *,
 
 def ann_lsh_knn_self(corpus: DataFrame, k: int = 5, *,
                      n_planes: int | None = None, n_tables: int = 6,
-                     dim: int = 64, n_vectors: int | None = None,
-                     materialize: str | None = None) -> DataFrame:
+                     dim: int = 64, n_vectors: int | None = None
+                     ) -> DataFrame:
     """Approximate k-NN of EVERY corpus vector against the corpus itself
     (all-vs-all), via multi-table hyperplane-bucket SELF-joins.
 
@@ -415,8 +415,8 @@ def ann_lsh_knn_self(corpus: DataFrame, k: int = 5, *,
     BOTH self-join sides (Catalyst shares no subplans — the lazy form
     re-ran the corpus scan + 2·n_tables·n_planes signed projections per
     alias); it goes through the same strategy selector as the dedup
-    pair operators (default lazy persist; ``materialize=`` or the
-    ``MATERIALIZE_CONF`` session conf select eager).
+    pair operators: the ``MATERIALIZE_CONF`` session conf alone picks
+    lazy persist (default) or eager.
     """
     from ab_metadata_pusher_spark.operators._shared import (
         materialize_shared as _materialize_shared,
@@ -435,8 +435,7 @@ def ann_lsh_knn_self(corpus: DataFrame, k: int = 5, *,
     keyed = _materialize_shared(
         corpus.select("vec_id", F.explode(buckets).alias("b"))
               .select("vec_id", F.col("b.tbl").alias("tbl"),
-                      F.col("b.bkt").alias("bkt")),
-        materialize)
+                      F.col("b.bkt").alias("bkt")))
     build = keyed
     if sized and n_planes > 3:
         # data-sized (i.e. large-corpus) mode only: dense clusters defeat

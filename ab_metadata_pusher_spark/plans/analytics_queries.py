@@ -427,7 +427,7 @@ def _triangles_run(spark: SparkSession, pairs: DataFrame,
         # is already materialized at construction and the two scalars
         # cost one cached aggregate.  Scale callers in lazy mode pass
         # orientation="degree" explicitly.
-        if _materialize_mode(None, spark.conf.get) == "eager":
+        if _materialize_mode(spark.conf.get) == "eager":
             sig = adj.agg(F.max(F.size("nbrs")).alias("mx"),
                           F.sum(F.size("nbrs")).alias("m")).first()
             orientation = _pick_orientation(sig["mx"], sig["m"])
@@ -629,13 +629,13 @@ def _loop_width(n_rows: int, parallelism: int) -> int:
 #: every in-container size the probe could reach (shuffled/broadcast =
 #: 1.13-2.21x up to |V|=8e6, ~128 MB of (long, long) rows,
 #: lpa_alignment_probe.py, last in commit 9bc81c2) — so the flip is a
-#: RESOURCE bound, not a perf crossover: past this per-round broadcast
-#: footprint the build side risks executor/driver memory pressure and
-#: the loop switches to the b-aligned shuffle form (labels shuffle into
-#: the join; rounds pay the (a, lab) aggregation exchange instead).
-_LPA_BROADCAST_MAX_BYTES = 512 << 20
-#: bytes per (long v, long lab) label row in the broadcast relation,
-#: incl. per-row overhead (unsafe row + hashed-relation slack, ~2x raw)
+#: RESOURCE bound, not a perf crossover: past the shared
+#: ``NODESET_BROADCAST_MAX_BYTES`` per-round broadcast footprint the
+#: build side risks executor/driver memory pressure and the loop
+#: switches to the b-aligned shuffle form (labels shuffle into the
+#: join; rounds pay the (a, lab) aggregation exchange instead).
+#: Bytes per (long v, long lab) label row in the broadcast relation,
+#: incl. per-row overhead (unsafe row + hashed-relation slack, ~2x raw).
 _LPA_LABEL_ROW_BYTES = 32
 
 
@@ -693,7 +693,7 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossover reachable cleanly in one JVM, so the flip is a RESOURCE
     bound and since r9 it is CODE, not prose: ``_lpa_run`` counts |V|
     once (off the checkpointed initial label frame) and switches to the
-    shuffled alignment past ``_LPA_BROADCAST_MAX_BYTES`` (SCALE.md
+    shuffled alignment past ``NODESET_BROADCAST_MAX_BYTES`` (SCALE.md
     round-7 entry; both alignments are equality-tested).  (A third
     variant — adjacency arrays + a 1-row label MAP + in-row mode — was
     A/B tested and REJECTED: element_at on MapType is a linear scan, 17x
@@ -715,24 +715,23 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lpa_run(spark: SparkSession, e0: DataFrame, iters: int,
-             align: str = "auto",
              n_vertices_hint: int | None = None,
              dedup_edges: bool = False) -> DataFrame:
     """The synchronous-LPA loop with the alignment choice as code.
 
-    ``align``: ``broadcast`` partitions edges by the DESTINATION ``a``
+    Two alignments, picked by :func:`nodeset_hint` on the estimated
+    label rows against the shared ``NODESET_BROADCAST_MAX_BYTES``.
+    Under the budget the loop partitions edges by the DESTINATION ``a``
     once and broadcasts the |V|-row label frame each round — every
-    round is exchange-free.  ``shuffle`` partitions edges by the JOIN
-    key ``b``; labels shuffle into a SortMergeJoin and the round pays
-    the (a, lab) aggregation exchange — no broadcast, the web-scale
-    form.  ``auto`` flips to ``shuffle`` past
-    ``_LPA_BROADCAST_MAX_BYTES`` of estimated label rows, pricing |V|
-    from ``n_vertices_hint`` (callers pass a parquet footer count — an
-    upper bound is fine, the flip is a resource bound) or, hint-less,
-    from the symmetrized edge row count already paid for width sizing
-    (|V| <= 2|E|, conservative by the mean degree — both alignments
-    are equality-tested, so an early flip costs shuffles, never
-    correctness).
+    round is exchange-free.  Past it the loop partitions edges by the
+    JOIN key ``b``; labels shuffle into a SortMergeJoin and the round
+    pays the (a, lab) aggregation exchange — no broadcast, the
+    web-scale form.  |V| is priced from ``n_vertices_hint`` (callers
+    pass a parquet footer count — an upper bound is fine, the flip is a
+    resource bound) or, hint-less, from the symmetrized edge row count
+    already paid for width sizing (|V| <= 2|E|, conservative by the
+    mean degree — both alignments are equality-tested, so an early flip
+    costs shuffles, never correctness).
 
     ROUND 1 IS FUSED (r13): the initial label frame is the identity
     map lab(v) = v, so round 1's join contributes exactly one
@@ -756,8 +755,6 @@ def _lpa_run(spark: SparkSession, e0: DataFrame, iters: int,
     class).  The default keeps the historical contract: e0 taken as-is,
     label counts weighted by edge multiplicity if the caller passes a
     multigraph."""
-    if align not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(f"unknown LPA alignment: {align!r}")
     if iters < 1:
         raise ValueError("LPA needs at least one round (the fused first "
                          "round IS the identity-label round)")
@@ -790,20 +787,16 @@ def _lpa_run(spark: SparkSession, e0: DataFrame, iters: int,
         n_rows = edges.count()
         width = _loop_width(n_rows,
                             spark.sparkContext.defaultParallelism)
-        if align == "auto":
-            n_v = n_vertices_hint if n_vertices_hint is not None else n_rows
-            align = ("broadcast"
-                     if n_v * _LPA_LABEL_ROW_BYTES
-                     <= _LPA_BROADCAST_MAX_BYTES else "shuffle")
+        hint = nodeset_hint(n_vertices_hint if n_vertices_hint is not None
+                            else n_rows, _LPA_LABEL_ROW_BYTES)
         edges = edges.repartition(
-            width, "a" if align == "broadcast" else "b")
+            width, "a" if hint is F.broadcast else "b")
         if dedup_edges:
             # rides the repartition exchange: HashPartitioning(one key)
             # satisfies the (a, b) dedup's clustering — no new Exchange
             edges = edges.distinct()
         edges = edges.persist()
         pinned.append(edges)
-        hint = F.broadcast if align == "broadcast" else (lambda df: df)
 
         def round_argmax(joined: DataFrame) -> DataFrame:
             """(v, lab) per-round winner: most frequent, ties -> lowest."""

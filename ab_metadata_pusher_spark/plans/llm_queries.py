@@ -316,7 +316,7 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-all-pairs form stays available as D.jaccard_pairs(max_df=None)
     for bounded inputs."""
     return D.jaccard_pairs(_doc_corpus(spark, sf_dir), _JACCARD_T,
-                           max_df=_JACCARD_MAX_DF, materialize="eager")
+                           max_df=_JACCARD_MAX_DF)
 
 
 def _minhash_sql(k: int = 16, bands: int = 4) -> str:
@@ -398,8 +398,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
           covers=("G.dedup.simhash",))
 def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs at Hamming<=2 over SimHash fingerprints."""
-    return D.simhash_pairs(_doc_corpus(spark, sf_dir), max_hamming=2,
-                           materialize="eager")
+    return D.simhash_pairs(_doc_corpus(spark, sf_dir), max_hamming=2)
 
 
 # ---------------------------------------------------------------------------
@@ -1959,8 +1958,7 @@ def q_dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs (operators/dedup.py lsh_verified_pairs) — LSH alone
     over-generates, exact-everything is corpus²; candidate-then-verify
     is the shape that holds at 100 TB."""
-    return D.lsh_verified_pairs(_doc_corpus(spark, sf_dir), _JACCARD_T,
-                                materialize="eager")
+    return D.lsh_verified_pairs(_doc_corpus(spark, sf_dir), _JACCARD_T)
 
 
 @register(
@@ -2146,8 +2144,7 @@ def q_dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part") \
         .select("p_partkey", "p_brand", "p_name")
     return (D.edit_distance_pairs(p, tau=2, text_col="p_name",
-                                  id_col="p_partkey", block_col="p_brand",
-                                  materialize="eager")
+                                  id_col="p_partkey", block_col="p_brand")
             .select(F.col("id_a").alias("left_key"),
                     F.col("id_b").alias("right_key"),
                     F.col("text_a").alias("left_name"),
@@ -2349,7 +2346,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.py containment_pairs; same df-gated shingle join as
     the jaccard path, different score)."""
     return D.containment_pairs(_doc_corpus(spark, sf_dir), _CONTAINMENT_T,
-                               max_df=_JACCARD_MAX_DF, materialize="eager")
+                               max_df=_JACCARD_MAX_DF)
 
 
 _CORPUS_DIFF_SQL = """
@@ -3712,7 +3709,7 @@ def q_multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads = M.with_binary_payload(corpus)
     hashes = M.image_phash(payloads)
     return D.hamming_pairs(hashes, "phash", max_hamming=6, bits=64,
-                           id_col="doc_id", materialize="eager")
+                           id_col="doc_id")
 
 
 _PPJOIN_SQL = "WITH " + _CORPUS_CTE + "," + _SHINGLES_CTE + f""",
@@ -3742,8 +3739,7 @@ def q_dedup_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate-bounded where the ungated join is quadratic in the df of
     the worst boilerplate shingle.  The third point in the
     exactness/cost trade-off next to the df-gate and MinHash-LSH."""
-    return D.ppjoin_pairs(_doc_corpus(spark, sf_dir), _JACCARD_T,
-                          materialize="eager")
+    return D.ppjoin_pairs(_doc_corpus(spark, sf_dir), _JACCARD_T)
 
 
 # ---------------------------------------------------------------------------

@@ -61,8 +61,9 @@ DEFAULT_CONFIG: dict[str, str] = {
     # _loop_width; connected components takes it as an argument).  Since
     # r12 this assumption is CHECKED at plan time: every shuffle-hash
     # build side passes through operators/_shared.hash_build_guard,
-    # which warns (Catalyst size estimate / width vs a 2 GiB per-task
-    # budget) when a deployment's width breaks it.
+    # which, when a deployment's width breaks it (Catalyst size
+    # estimate / width vs a 2 GiB per-task budget), warns and drops the
+    # hint so the join falls back to the spillable sort-merge.
     "spark.sql.shuffle.partitions": "32",
     # Keep timestamp semantics deterministic across driver/oracle.
     "spark.sql.session.timeZone": "UTC",

@@ -7,8 +7,9 @@ dead ``JOB_PUBLISH_TAG``.  This sink fixes all three:
 
 * records stream through :mod:`ab_metadata_pusher_spark.sinks.envelope`
   greedy packing — every message provably <= 256 KiB;
-* messages go out via ``SendMessageBatch`` (10 per call — the SQS batch
-  cap);
+* messages go out via ``SendMessageBatch``, each call closed at 10
+  entries or before its summed bodies would pass 256 KiB, whichever
+  comes first (the API's two batch caps);
 * every envelope carries ``tag`` (the publish tag, implemented for real)
   and a content-hash ``MessageDeduplicationId`` so FIFO re-publishes are
   idempotent.
@@ -41,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ab_metadata_pusher_spark.sinks.envelope import (
-    DEFAULT_MAX_BYTES, pack_envelopes,
+    DEFAULT_MAX_BYTES, SQS_HARD_LIMIT, pack_envelopes,
 )
 
 __all__ = ["SqsPublisher", "PublishReport", "collect_records"]
@@ -49,6 +50,7 @@ __all__ = ["SqsPublisher", "PublishReport", "collect_records"]
 logger = logging.getLogger(__name__)
 
 _BATCH_SIZE = 10  # SQS SendMessageBatch hard cap on entries per call.
+# The same API caps a call's summed bodies at SQS_HARD_LIMIT bytes.
 
 
 @dataclass
@@ -111,11 +113,11 @@ class SqsPublisher:
     # -- core send path ----------------------------------------------------
 
     def send_bodies(self, client: Any, bodies: Iterable[str]) -> PublishReport:
-        sent = batches = nbytes = 0
+        sent = batches = nbytes = batch_bytes = 0
         entries: list[dict[str, Any]] = []
 
         def flush() -> None:
-            nonlocal batches
+            nonlocal batches, batch_bytes
             if not entries:
                 return
             resp = client.send_message_batch(
@@ -125,11 +127,15 @@ class SqsPublisher:
                 raise RuntimeError(f"SQS batch send failed for "
                                    f"{len(failed)} entries: {failed[:3]}")
             batches += 1
+            batch_bytes = 0
             entries.clear()
 
-        for i, body in enumerate(bodies):
+        for body in bodies:
+            size = len(body.encode("utf-8"))
+            if batch_bytes + size > SQS_HARD_LIMIT:
+                flush()
             entry: dict[str, Any] = {
-                "Id": str(i % _BATCH_SIZE),
+                "Id": str(len(entries)),
                 "MessageBody": body,
             }
             if self.fifo:
@@ -137,7 +143,8 @@ class SqsPublisher:
                 entry["MessageDeduplicationId"] = _dedup_id(body)
             entries.append(entry)
             sent += 1
-            nbytes += len(body.encode("utf-8"))
+            nbytes += size
+            batch_bytes += size
             if len(entries) == _BATCH_SIZE:
                 flush()
         flush()

@@ -182,7 +182,7 @@ def _unbounded_llm(spark, sf_dir):
         "text_pii_full": lambda: X.pii_redact(docs_raw),
         "dedup_clusters_full": lambda: _clusters_full(docs),
         "dedup_containment_full": lambda: D.containment_pairs(
-            docs, 0.8, max_df=100, materialize="eager"),
+            docs, 0.8, max_df=100),
         # round-11: the label-noise screen over the FULL embeddings
         # table (the registry form gates at vec_id < 500 for the
         # oracle; this is the corpus-scale shape the r10 verdict wanted
@@ -238,17 +238,15 @@ def _quality_label_full(emb, emb_path):
     embedding geometry (true 5-NN at cosine ~0.42) data-learned cells
     reach 4-7x the recall of sized+capped hyperplane buckets at the same
     candidate budget.  Cell count is data-sized from the parquet
-    footer count; ``SPARK_GRAFT_IVF_NPROBE`` (default 8) is the
-    recall/cost dial a deployment with a recall target turns — the
-    measured nprobe in {8,16,32} x {x10,x100} curve is in SCALE.md
-    round-12 (r11 VERDICT ask #3: recall rises with nprobe at exactly
-    proportional candidate cost; candidates stay nprobe * occupancy
-    per query, linear in corpus at any fixed setting)."""
+    footer count; nprobe is fixed at 8 — the measured nprobe in
+    {8,16,32} x {x10,x100} curve is in SCALE.md round-12 (r11 VERDICT
+    ask #3: recall rises with nprobe at exactly proportional candidate
+    cost; candidates stay nprobe * occupancy per query, linear in
+    corpus at any fixed setting)."""
     from ab_metadata_pusher_spark.operators._shared import parquet_rowcount
     from ab_metadata_pusher_spark.plans.llm_queries import _qlc_flags
-    nprobe = int(os.environ.get("SPARK_GRAFT_IVF_NPROBE", "8"))
     return _qlc_flags(emb, S.ann_ivf_knn_self(
-        emb, k=5, nprobe=nprobe, n_vectors=parquet_rowcount(emb_path)))
+        emb, k=5, nprobe=8, n_vectors=parquet_rowcount(emb_path)))
 
 
 def _clusters_full(docs):

@@ -31,6 +31,9 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from ab_metadata_pusher_spark.operators._shared import (  # noqa: E402
+    MATERIALIZE_CONF,
+)
 from ab_metadata_pusher_spark.plans.registry import queries  # noqa: E402
 from ab_metadata_pusher_spark.session import get_spark  # noqa: E402
 
@@ -52,6 +55,8 @@ def main() -> None:
                       extra_conf={"spark.ui.enabled": "false",
                                   "spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
+    # time the bench's materialization mode (bench.py sets the same)
+    spark.conf.set(MATERIALIZE_CONF, "eager")
     reg = queries()
 
     import bench

@@ -268,26 +268,29 @@ def test_assign_tiers_degenerate_embeddings_agree(spark, monkeypatch):
     assert by_id[15] == (0, "NaN")
 
 
-def test_lpa_alignments_agree(spark):
+def test_lpa_alignments_agree(spark, monkeypatch):
     """The broadcast and shuffled LPA alignments are one algorithm in
     two physical plans (r9: the r7-measured flip is now code, selected
-    on the label-frame footprint) — identical communities, and the
-    auto path picks broadcast at fixture scale."""
+    on the label-frame footprint against the shared node-set budget) —
+    forcing the above-budget (shuffled) alignment yields identical
+    communities."""
     import os
     import sys
     sys.path.insert(0, os.path.dirname(os.path.dirname(__file__)))
     from conftest import SF_DIR
 
+    from ab_metadata_pusher_spark.operators import _shared
     from ab_metadata_pusher_spark.plans.analytics_queries import (
         _cooccur_edges, _lpa_run,
     )
-    res = {}
-    for align in ("broadcast", "shuffle", "auto"):
-        out = _lpa_run(spark, _cooccur_edges(spark, SF_DIR), 3, align=align)
-        res[align] = sorted((r["node"], r["community"])
-                            for r in out.collect())
-    assert res["broadcast"] == res["shuffle"] == res["auto"]
-    assert len(res["auto"]) > 0
+
+    def communities():
+        out = _lpa_run(spark, _cooccur_edges(spark, SF_DIR), 3)
+        return sorted((r["node"], r["community"]) for r in out.collect())
+
+    base = communities()
+    monkeypatch.setattr(_shared, "NODESET_BROADCAST_MAX_BYTES", 0)
+    assert communities() == base and len(base) > 0
 
 
 def test_loop_width_scales_with_edges_and_caps_at_cores():

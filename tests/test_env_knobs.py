@@ -11,8 +11,7 @@ from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "ab_metadata_pusher_spark"
 
-ALLOWED = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM",
-           "SPARK_GRAFT_HASH_BUILD"}
+ALLOWED = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
 
 
 def _is_os(node: ast.AST, attr: str) -> bool:

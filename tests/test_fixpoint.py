@@ -93,3 +93,20 @@ def test_connected_components_failing_round_releases_cache_and_width(spark):
         connected_components(vertices, edges, shuffle_partitions=3)
     assert spark.conf.get(WIDTH) == saved
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_metadata_graph_loops_leave_no_cache_after_release(spark, sf_dir):
+    """PageRank's vertex set and edge list and graph_components' id map
+    go through materialize_shared, so once the results are consumed
+    release_materialized leaves the cache manager empty."""
+    from ab_metadata_pusher_spark.operators._shared import (
+        release_materialized,
+    )
+    from ab_metadata_pusher_spark.plans.registry import queries
+
+    spark.catalog.clearCache()
+    release_materialized(spark)
+    for name in ("metadata_graph_pagerank", "metadata_graph_components"):
+        assert queries()[name](spark, sf_dir).collect(), name
+    release_materialized(spark)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -790,7 +790,7 @@ def test_ppjoin_lossless_on_adversarial_corpus(spark):
 # -- materialization gating (ADVICE r5: no eager jobs at construction) ------
 
 def test_materialize_mode_decision_table():
-    from ab_metadata_pusher_spark.operators.dedup import (
+    from ab_metadata_pusher_spark.operators._shared import (
         MATERIALIZE_CONF, _materialize_mode,
     )
 
@@ -798,24 +798,20 @@ def test_materialize_mode_decision_table():
         return lambda k, d=None: values.get(k, d)
 
     # unset -> lazy persist (no construction-time job, recompute-safe)
-    assert _materialize_mode(None, conf({})) == "persist"
-    # conf selects; parameter overrides conf
-    for m in ("eager", "persist"):
-        assert _materialize_mode(None, conf({MATERIALIZE_CONF: m})) == m
-    assert _materialize_mode(
-        "persist", conf({MATERIALIZE_CONF: "eager"})) == "persist"
+    assert _materialize_mode(conf({})) == "persist"
+    # the session conf alone selects
+    for m in ("eager", "persist", "EAGER"):
+        assert _materialize_mode(conf({MATERIALIZE_CONF: m})) == m.lower()
     # eager demotes to persist on elastic clusters: localCheckpoint
     # blocks are non-replicated executor-local state — losing one
     # mid-job under decommissioning is a job failure
-    assert _materialize_mode(
-        "eager", conf({"spark.dynamicAllocation.enabled": "true"})) \
-        == "persist"
-    assert _materialize_mode(
-        "eager", conf({"spark.decommission.enabled": "true"})) == "persist"
-    assert _materialize_mode("eager", conf({})) == "eager"
+    for k in ("spark.dynamicAllocation.enabled",
+              "spark.decommission.enabled"):
+        assert _materialize_mode(
+            conf({MATERIALIZE_CONF: "eager", k: "true"})) == "persist"
     for bad in ("bogus", "off"):
         with pytest.raises(ValueError, match="eager|persist"):
-            _materialize_mode(bad, conf({}))
+            _materialize_mode(conf({MATERIALIZE_CONF: bad}))
 
 
 def test_pair_operators_run_no_job_at_construction(spark):
@@ -859,7 +855,7 @@ def test_pair_operators_run_no_job_at_construction(spark):
 
 def test_materialize_modes_agree(spark):
     """eager / persist are execution strategies, not semantics:
-    identical pair results on every mode (parameter and conf paths)."""
+    identical pair results under either session conf value."""
     from ab_metadata_pusher_spark.operators.dedup import (
         MATERIALIZE_CONF, jaccard_pairs,
     )
@@ -868,47 +864,16 @@ def test_materialize_modes_agree(spark):
          (3, "x y z w v u t"), (4, "a b c d e f g")],
         "doc_id long, text string")
     results = {}
-    for mode in ("eager", "persist"):
-        results[mode] = sorted(
-            (r.sid_a, r.sid_b, r.jaccard)
-            for r in jaccard_pairs(docs, 0.5, materialize=mode).collect())
     try:
-        spark.conf.set(MATERIALIZE_CONF, "eager")
-        results["conf-eager"] = sorted(
-            (r.sid_a, r.sid_b, r.jaccard)
-            for r in jaccard_pairs(docs, 0.5).collect())
+        for mode in ("eager", "persist"):
+            spark.conf.set(MATERIALIZE_CONF, mode)
+            results[mode] = sorted(
+                (r.sid_a, r.sid_b, r.jaccard)
+                for r in jaccard_pairs(docs, 0.5).collect())
     finally:
         spark.conf.unset(MATERIALIZE_CONF)
-    assert results["eager"] == results["persist"] == results["conf-eager"]
+    assert results["eager"] == results["persist"]
     assert results["eager"]  # non-empty: (1,2) and (1,4) at least
-
-
-def test_eager_demotion_warns(caplog):
-    """An EXPLICIT materialize='eager' demoted on an elastic cluster must
-    say so (r6 ADVICE: the audited plan-shape assumption breaks silently
-    otherwise); a conf-derived or defaulted eager demotes quietly."""
-    import logging
-
-    from ab_metadata_pusher_spark.operators._shared import (
-        MATERIALIZE_CONF, _materialize_mode,
-    )
-
-    def conf(values):
-        return lambda k, d=None: values.get(k, d)
-
-    elastic = conf({"spark.dynamicAllocation.enabled": "true"})
-    with caplog.at_level(logging.WARNING,
-                         logger="ab_metadata_pusher_spark.operators._shared"):
-        assert _materialize_mode("eager", elastic) == "persist"
-    assert any("demoted" in r.message for r in caplog.records)
-    caplog.clear()
-    with caplog.at_level(logging.WARNING,
-                         logger="ab_metadata_pusher_spark.operators._shared"):
-        assert _materialize_mode(
-            None, conf({MATERIALIZE_CONF: "eager",
-                        "spark.dynamicAllocation.enabled": "true"})) \
-            == "persist"
-    assert not any("demoted" in r.message for r in caplog.records)
 
 
 def test_release_materialized_unpersists(spark):
@@ -917,7 +882,7 @@ def test_release_materialized_unpersists(spark):
     returned frame (r6 ADVICE — cache-manager entries are not freed on
     plan GC)."""
     from ab_metadata_pusher_spark.operators._shared import (
-        _PERSISTED, release_materialized,
+        _PERSISTED, MATERIALIZE_CONF, release_materialized,
     )
     from ab_metadata_pusher_spark.operators.dedup import jaccard_pairs
 
@@ -925,17 +890,21 @@ def test_release_materialized_unpersists(spark):
     docs = spark.createDataFrame(
         [(1, "a b c d e f g"), (2, "a b c d e f h")],
         "doc_id long, text string")
-    pairs = jaccard_pairs(docs, 0.5, materialize="persist")
+    pairs = jaccard_pairs(docs, 0.5)
     assert len(_PERSISTED) == 1
     pairs.count()  # materialize the cache entry
     assert _PERSISTED[0].storageLevel.useMemory
     assert release_materialized(spark) == 1
     assert _PERSISTED == []
     # eager mode registers nothing
-    jaccard_pairs(docs, 0.5, materialize="eager")
+    spark.conf.set(MATERIALIZE_CONF, "eager")
+    try:
+        jaccard_pairs(docs, 0.5)
+    finally:
+        spark.conf.unset(MATERIALIZE_CONF)
     assert _PERSISTED == []
     # a different session's frames are kept when filtering by session
-    jaccard_pairs(docs, 0.5, materialize="persist")
+    jaccard_pairs(docs, 0.5)
     assert release_materialized(object()) == 0 and len(_PERSISTED) == 1
     assert release_materialized() == 1 and _PERSISTED == []
 
@@ -1025,7 +994,7 @@ def test_edit_distance_pairs_lossless(spark, tau, blkcol, seed):
 
 
 def test_pagerank_alignments_agree(spark, monkeypatch):
-    """auto broadcast_ranks rides the vertex count under the shared
+    """The rank-side broadcast rides the vertex count under the shared
     node-set budget: forcing the above-budget (shuffled) path yields
     identical ranks."""
     from ab_metadata_pusher_spark.operators import _shared

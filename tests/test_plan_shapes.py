@@ -157,6 +157,8 @@ def test_converted_plan_queries_are_lazy_at_construction(spark, sf_dir):
     eager localCheckpoint to the shared selector (r6 VERDICT ask #4)
     must run NO Spark job at plan-construction time under the library
     default: callers can build these plans without executing them.
+    The pair heads whose operators once took a per-call eager pin now
+    follow the session conf too, and join the list.
     (entity_resolution_customers stays out: its connected-components
     loop is inherently iterative and acts during construction.)"""
     from ab_metadata_pusher_spark.operators._shared import (
@@ -168,6 +170,9 @@ def test_converted_plan_queries_are_lazy_at_construction(spark, sf_dir):
         "graph_triangles", "graph_link_prediction",
         "graph_link_prediction_capped", "orders_basket_lift",
         "agg_countmin_sketch",
+        "dedup_ngram_jaccard", "dedup_simhash_pairs",
+        "dedup_minhash_verified", "dedup_edit_distance",
+        "dedup_containment", "multimodal_phash_pairs", "dedup_ppjoin",
     ]
     sc = spark.sparkContext
     try:
@@ -230,13 +235,12 @@ def test_spread_if_narrow_never_probes_post_shuffle_plans(spark, sf_dir):
     assert spread_if_narrow(scan) is not scan
 
 
-def test_hash_build_guard_warns_past_budget_and_keeps_hint(
-        spark, sf_dir, caplog):
-    """Default (warn) mode: past the per-task budget the guard logs the
-    width arithmetic but KEEPS the shuffle_hash hint (the measured 2.7x
-    SHJ win stays the default plan); within budget it is silent.  The
-    returned frame always carries the hint — callers no longer apply it
-    themselves (r12 VERDICT ask #3 refactor)."""
+def test_hash_build_guard_drops_hint_past_budget(spark, sf_dir, caplog):
+    """The guard's one rule: within the per-task budget it is silent and
+    the returned frame carries the shuffle_hash hint (callers never
+    apply it themselves); past the budget it logs the width arithmetic
+    and returns the frame UNHINTED (the plan-level SHJ -> SMJ flip is
+    pinned by test_hash_build_guard_flips_shj_to_smj_past_budget)."""
     import logging
 
     from ab_metadata_pusher_spark.operators._shared import hash_build_guard
@@ -246,12 +250,10 @@ def test_hash_build_guard_warns_past_budget_and_keeps_hint(
     with caplog.at_level(logging.WARNING,
                          logger="ab_metadata_pusher_spark.operators._shared"):
         caplog.clear()
-        out = hash_build_guard(li, "test-build", budget_bytes=1)
+        assert hash_build_guard(li, "test-build", budget_bytes=1) is li
         assert any("test-build" in r.message and "cannot spill" in r.message
+                   and "dropping the shuffle_hash hint" in r.message
                    for r in caplog.records)
-        joins = _join_blocks(_plan(keyed.join(out, "l_orderkey")))
-        assert joins and all(op == "ShuffledHashJoin" for op, _ in joins), \
-            joins
         caplog.clear()
         out = hash_build_guard(li, "test-build-ok")
         assert not caplog.records
@@ -286,8 +288,8 @@ def test_hash_build_guard_uses_pinned_coalesce_floor(spark, sf_dir,
     """When the deployment pins spark.sql.adaptive.coalescePartitions.
     minPartitionNum, the guard divides by that worst-case post-coalesce
     width instead of the configured shuffle width — the same build that
-    fits per-task at width 32 breaches the budget at a pinned floor of
-    1, and the guard must say so."""
+    fits per-task at width 32 keeps its hint, and breaches the budget at
+    a pinned floor of 1, where the guard says so and drops the hint."""
     import logging
 
     from ab_metadata_pusher_spark.operators._shared import hash_build_guard
@@ -302,26 +304,27 @@ def test_hash_build_guard_uses_pinned_coalesce_floor(spark, sf_dir,
     logger = "ab_metadata_pusher_spark.operators._shared"
     with caplog.at_level(logging.WARNING, logger=logger):
         caplog.clear()
-        hash_build_guard(li, "floor-unpinned", budget_bytes=budget)
+        assert hash_build_guard(li, "floor-unpinned",
+                                budget_bytes=budget) is not li
         assert not caplog.records
         spark.conf.set(key, "1")
         try:
-            hash_build_guard(li, "floor-pinned", budget_bytes=budget)
+            assert hash_build_guard(li, "floor-pinned",
+                                    budget_bytes=budget) is li
         finally:
             spark.conf.unset(key)
         assert any("floor-pinned" in r.message and "/ 1 shuffle" in r.message
                    for r in caplog.records)
 
 
-def test_hash_build_guard_strict_flips_shj_to_smj(
+def test_hash_build_guard_flips_shj_to_smj_past_budget(
         spark, sf_dir, caplog, monkeypatch):
-    """SPARK_GRAFT_HASH_BUILD=strict (r12 VERDICT ask #3): past budget
-    the guard DROPS the shuffle_hash hint so Catalyst falls back to
-    spillable sort-merge — a deployment that misses the warn-mode log
-    line no longer OOMs the non-spillable hash build.  Same operator,
-    same inputs: the shingle self-join plans SHJ under warn and SMJ
-    under strict with the budget exceeded, and the RESULT is
-    unchanged (hint choice is physical only)."""
+    """Past budget (r12 VERDICT ask #3) the guard DROPS the shuffle_hash
+    hint so Catalyst falls back to spillable sort-merge — a deployment
+    whose width breaks the budget no longer OOMs the non-spillable hash
+    build.  Same operator, same inputs: the shingle self-join plans SHJ
+    within the budget and SMJ past it, and the RESULT is unchanged
+    (hint choice is physical only)."""
     import logging
 
     from ab_metadata_pusher_spark.operators import _shared
@@ -341,13 +344,14 @@ def test_hash_build_guard_strict_flips_shj_to_smj(
         release_materialized(spark)
         return out
 
-    monkeypatch.setattr(_shared, "HASH_BUILD_TASK_BUDGET_BYTES", 1)
-    monkeypatch.setenv("SPARK_GRAFT_HASH_BUILD", "warn")
-    assert shingle_ops() == ["ShuffledHashJoin"]
-    warn_rows = rows()
-
-    monkeypatch.setenv("SPARK_GRAFT_HASH_BUILD", "strict")
     logger = "ab_metadata_pusher_spark.operators._shared"
+    with caplog.at_level(logging.WARNING, logger=logger):
+        caplog.clear()
+        assert shingle_ops() == ["ShuffledHashJoin"]
+        assert not caplog.records
+    hinted_rows = rows()
+
+    monkeypatch.setattr(_shared, "HASH_BUILD_TASK_BUDGET_BYTES", 1)
     # on the tiny fixture Catalyst broadcasts the unhinted side; pin
     # auto-broadcast off so the scale-shaped fallback (spillable SMJ,
     # what a 100 TB build side would get) is the one asserted
@@ -359,21 +363,9 @@ def test_hash_build_guard_strict_flips_shj_to_smj(
             assert shingle_ops() == ["SortMergeJoin"]
             assert any("dropping the shuffle_hash hint" in r.message
                        for r in caplog.records)
-        assert rows() == warn_rows
+        assert rows() == hinted_rows
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
-
-    # under budget, strict keeps the measured-faster hash join
-    monkeypatch.setattr(_shared, "HASH_BUILD_TASK_BUDGET_BYTES", 2 << 30)
-    assert shingle_ops() == ["ShuffledHashJoin"]
-
-    # off skips the estimate entirely and keeps the hint
-    monkeypatch.setattr(_shared, "HASH_BUILD_TASK_BUDGET_BYTES", 1)
-    monkeypatch.setenv("SPARK_GRAFT_HASH_BUILD", "off")
-    with caplog.at_level(logging.WARNING, logger=logger):
-        caplog.clear()
-        assert shingle_ops() == ["ShuffledHashJoin"]
-        assert not caplog.records
 
 
 def test_metadata_graph_is_one_generate_over_a_local_scan(spark, sf_dir):

@@ -15,7 +15,7 @@ from ab_metadata_pusher_spark.operators.graph import to_nodes, to_relations
 from ab_metadata_pusher_spark.operators.metadata import table_metadata
 from ab_metadata_pusher_spark.pipeline import Pipeline
 from ab_metadata_pusher_spark.sinks.envelope import (
-    SQS_HARD_LIMIT, envelope_json, pack_envelopes,
+    DEFAULT_MAX_BYTES, SQS_HARD_LIMIT, envelope_json, pack_envelopes,
 )
 from ab_metadata_pusher_spark.sinks.kafka import build_kafka_rows
 from ab_metadata_pusher_spark.sinks.sqs import SqsPublisher, collect_records
@@ -27,13 +27,19 @@ from ab_metadata_pusher_spark.sources.jdbc import (
 
 
 class StubSqsClient:
-    """Records batches; optionally fails entries."""
+    """Records batches; optionally fails entries.  Refuses a batch the
+    real API would: more than 10 entries, repeated entry ids, or summed
+    bodies past 256 KiB (``BatchRequestTooLong``)."""
 
     def __init__(self, fail_ids: set[str] | None = None) -> None:
         self.batches: list[dict] = []
         self.fail_ids = fail_ids or set()
 
     def send_message_batch(self, QueueUrl, Entries):
+        ids = [e["Id"] for e in Entries]
+        assert 1 <= len(Entries) <= 10 and len(set(ids)) == len(ids), ids
+        total = sum(len(e["MessageBody"].encode()) for e in Entries)
+        assert total <= SQS_HARD_LIMIT, f"batch of {total} bytes"
         self.batches.append({"QueueUrl": QueueUrl, "Entries": Entries})
         failed = [{"Id": e["Id"]} for e in Entries if e["Id"] in self.fail_ids]
         return {"Failed": failed} if failed else {}
@@ -253,6 +259,32 @@ def test_sqs_publish_collected(spark, sf_dir):
         other = hostile.selectExpr("s", f"{expr} AS {col}")
         with pytest.raises(TypeError, match=repr(col)):
             pub.publish_collected(other, hostile, tag="r3")
+
+
+def test_sqs_batches_stay_under_the_byte_cap():
+    """Ten near-``DEFAULT_MAX_BYTES`` envelopes are ten batches: two
+    such bodies already pass the 256 KiB a SendMessageBatch call may
+    carry, so each call closes on bytes before it reaches 10 entries.
+    Order and entry-id uniqueness hold across the byte-closed batches."""
+    records = [{"key": f"n{i}", "pad": "x" * (DEFAULT_MAX_BYTES - 1024)}
+               for i in range(10)]
+    bodies = list(pack_envelopes(records, [], "big"))
+    assert len(bodies) == 10
+    assert all(len(b.encode()) > SQS_HARD_LIMIT // 2 for b in bodies)
+    stub = StubSqsClient()
+    report = SqsPublisher("https://queue/test.fifo",
+                          lambda: stub).send_bodies(stub, bodies)
+    sent = [e["MessageBody"] for b in stub.batches for e in b["Entries"]]
+    assert sent == bodies
+    assert report.batches_sent == len(stub.batches) == 10
+    assert report.bytes_sent == sum(len(b.encode()) for b in bodies)
+    # small bodies still close on the entry cap, ids unique per batch
+    stub = StubSqsClient()
+    small = [f"m{i}" for i in range(23)]
+    SqsPublisher("https://queue/q", lambda: stub).send_bodies(stub, small)
+    assert [len(b["Entries"]) for b in stub.batches] == [10, 10, 3]
+    assert [e["MessageBody"] for b in stub.batches
+            for e in b["Entries"]] == small
 
 
 def test_sqs_publish_small_max_bytes_chunks(spark, sf_dir):
