@@ -305,14 +305,15 @@ def publish_wire(rows: DataFrame, bootstrap_servers: str, topic: str,
     batches (CRC-32C verified broker-side), and every partition task
     holds ONE socket with bounded ``batch_max_records`` frames — state
     per executor is O(batch), so the path distributes like the SQS
-    ``publish_distributed`` sink.  Returns the driver-side row count
-    (one bounded count job), which callers use for the statsd success
-    metric."""
+    ``publish_distributed`` sink.  Returns the number of rows sent,
+    summed by an accumulator in the send tasks (no second job over
+    ``rows``), which callers use for the statsd success metric."""
     n_partitions = fetch_partition_count(bootstrap_servers, topic,
                                          timeout_sec=timeout_sec)
     host, port = bootstrap_servers.rsplit(":", 1)
     _host, _port, _topic = host, int(port), topic
     _max, _acks, _timeout = batch_max_records, acks, timeout_sec
+    sent = rows.sparkSession.sparkContext.accumulator(0)
 
     def send_partition(it) -> None:
         groups: dict[int, list[tuple[bytes | None, bytes]]] = {}
@@ -332,8 +333,10 @@ def publish_wire(rows: DataFrame, bootstrap_servers: str, topic: str,
                      timeout_ms=int(_timeout * 1000))
             groups[part] = []
 
+        n = 0
         try:
             for row in it:
+                n += 1
                 key = None if row["key"] is None else row["key"].encode()
                 value = row["value"].encode()
                 part = (partition_for_key(key, n_partitions)
@@ -343,9 +346,10 @@ def publish_wire(rows: DataFrame, bootstrap_servers: str, topic: str,
                     flush(part)
             for part in list(groups):
                 flush(part)
+            sent.add(n)
         finally:
             if sock is not None:
                 sock.close()
 
     rows.foreachPartition(send_partition)
-    return rows.count()
+    return sent.value

@@ -180,7 +180,8 @@ def _unbounded_llm(spark, sf_dir):
             emb, emb.filter(F.col("vec_id") < 8), k=10),
         "text_repetition_full": lambda: X.repetition_features(docs),
         "text_pii_full": lambda: X.pii_redact(docs_raw),
-        "dedup_clusters_full": lambda: _clusters_full(docs),
+        "dedup_clusters_full": lambda: _clusters_full(
+            docs, f"{sf_dir}/documents.parquet"),
         "dedup_containment_full": lambda: D.containment_pairs(
             docs, 0.8, max_df=100),
         # round-11: the label-noise screen over the FULL embeddings
@@ -249,7 +250,7 @@ def _quality_label_full(emb, emb_path):
         emb, k=5, nprobe=8, n_vectors=parquet_rowcount(emb_path)))
 
 
-def _clusters_full(docs):
+def _clusters_full(docs, docs_path):
     """Unbounded cluster-dedup: fingerprint keys over the FULL documents
     table -> star edges -> hash-to-min connected components (the iterative
     loop runs inside the timed build)."""
@@ -264,7 +265,7 @@ def _clusters_full(docs):
     # parallelism like the LPA/k-core loop widths.  At sf0.1 this still
     # resolves to 8 — the driver's bench stays comparable.
     from ab_metadata_pusher_spark.operators._shared import parquet_rowcount
-    n_docs = parquet_rowcount(f"{SF_DIR}/documents.parquet")
+    n_docs = parquet_rowcount(docs_path)
     spark = docs.sparkSession
     width = max(8, min(-(-n_docs // 65_536),
                        4 * spark.sparkContext.defaultParallelism))

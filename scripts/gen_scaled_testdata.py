@@ -4,7 +4,7 @@ scale measurement.
 SCALE.md's scaling exponents have so far spanned ONE decade
 (sf0.01 -> sf0.1).  This script manufactures the next decade(s) by
 unioning N key-shifted replicas of the sf0.1 fixtures, so
-scripts/scale_multi_decade.py can measure t(10x)/t(1x) on identical
+``scripts/ab.py --dirs x1,x10`` can measure t(10x)/t(1x) on identical
 plan shapes and two generator-identical inputs.
 
 Replica construction (replica column ``rep`` from a crossJoin with
@@ -36,6 +36,8 @@ the baseline decade and --factor 10 (and 100) for the scaled ones.
 Usage:
     python scripts/gen_scaled_testdata.py --factor 1  --out .scratch/scaled/x1
     python scripts/gen_scaled_testdata.py --factor 10 --out .scratch/scaled/x10
+    python scripts/ab.py --dirs .scratch/scaled/x1,.scratch/scaled/x10 \
+        similarity_ivf_full
 """
 
 from __future__ import annotations

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import argparse
 import importlib.util
-import math
 import os
 import sys
 import time
@@ -21,6 +20,8 @@ os.environ.setdefault("TZ", "America/New_York")
 time.tzset()
 
 import duckdb  # noqa: E402
+# the one oracle normalizer, shared with driver_sim and perfbench/checks.py
+from driver_sim import norm  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
 REPO = Path(__file__).resolve().parent.parent
@@ -28,27 +29,6 @@ sys.path.insert(0, str(REPO))
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
-
-
-def norm_cell(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else round(v, 6)
-    if isinstance(v, (list, tuple)):
-        return tuple(norm_cell(x) for x in v)
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    if isinstance(v, bytes):
-        return v.hex()
-    return v
-
-
-def norm(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(norm_cell(r[i]) for i in order) for r in rows]
-    out.sort(key=lambda r: tuple((x is None, str(x)) for x in r))
-    return out
 
 
 def main() -> int:

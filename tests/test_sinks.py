@@ -890,7 +890,7 @@ def test_kafka_publish_live_wire_protocol(spark, sf_dir):
     """E6 end-to-end over live TCP: build_kafka_rows -> publish_wire ->
     emulated broker.  Every record arrives exactly once with its key,
     every record landed on the murmur2-default-partitioner partition,
-    and batches respect batch_max_records."""
+    and batches respect batch_max_records; the publish is one Spark job."""
     from ab_metadata_pusher_spark.sinks.kafka import (
         build_kafka_rows, partition_for_key, publish_wire)
 
@@ -901,12 +901,18 @@ def test_kafka_publish_live_wire_protocol(spark, sf_dir):
 
     n_partitions = 4
     srv, received, batches = _kafka_broker_emulator("md-topic", n_partitions)
+    sc = spark.sparkContext
+    sc.setJobGroup("kafka_publish_wire", "kafka_publish_wire")
     try:
         sent = publish_wire(
             rows, f"127.0.0.1:{srv.server_address[1]}", "md-topic",
             batch_max_records=16)
     finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
         srv.shutdown()
+    # the send tasks count the rows: one job, no second pass over rows
+    assert len(sc.statusTracker().getJobIdsForGroup(
+        "kafka_publish_wire")) == 1
 
     got = [(k, v) for part, kvs in received.items() for k, v in kvs]
     assert sorted(got) == sorted(expect)      # exactly once, keys intact
