@@ -1,15 +1,13 @@
-"""Scoped configuration with env-var fallbacks.
+"""Job logging bootstrap and the env-var config idiom.
 
-Re-expresses the reference's HOCON scoped-namespace config system
-(reference: job/sample_mysql_aws_sqs_job.py:47-72 builds a flat
-``scope.key`` -> value dict; job/customized_job.py:37-38 slices it per
-component via ``Scoped.get_scoped_conf``; publisher merges per-component
-defaults with ``with_fallback`` at publisher/aws_sqs_csv_puiblisher.py:70).
-
-pyhocon is not a baked-in dependency here, so the same semantics are
-provided over plain dicts: dotted keys, ``scoped()`` slicing, defaults
-merging, and ``from_env`` for the reference's env-var contract
-(reference: README.md:39-48, job/sample_mysql_aws_sqs_job.py:21-32).
+The reference's HOCON scoped config (job/sample_mysql_aws_sqs_job.py:47-72
+builds a flat ``scope.key`` -> value dict; publisher/
+aws_sqs_csv_puiblisher.py:70 merges defaults with ``with_fallback``)
+reduces here to one fallback chain per setting: a job's plain ``conf``
+dict first, then the reference's environment variable through
+:func:`env`, then a default — ``conf.get(key, env(NAME, default))`` in
+``jobs.build_metadata_job`` (reference: README.md:39-48,
+job/sample_mysql_aws_sqs_job.py:21-32).
 """
 
 from __future__ import annotations
@@ -18,10 +16,8 @@ import logging
 import logging.config
 import os
 import sys
-from collections.abc import Mapping
-from typing import Any
 
-__all__ = ["ScopedConfig", "configure_logging", "env"]
+__all__ = ["configure_logging", "env"]
 
 
 #: The reference root-logger format (config/logging_config.ini:20-21),
@@ -81,48 +77,3 @@ def env(name: str, default: str = "") -> str:
     """Env var with default — the reference's config idiom
     (job/sample_mysql_aws_sqs_job.py:21-32)."""
     return os.environ.get(name, default)
-
-
-class ScopedConfig:
-    """A flat ``{"scope.sub.key": value}`` mapping with scope slicing.
-
-    ``conf.scoped("publisher.sqs")`` returns a new ScopedConfig whose keys
-    have the prefix stripped, mirroring ``Scoped.get_scoped_conf``.
-    ``with_fallback`` merges defaults at lower priority, mirroring pyhocon's
-    ``ConfigTree.with_fallback``.
-    """
-
-    def __init__(self, data: Mapping[str, Any] | None = None) -> None:
-        self._data: dict[str, Any] = dict(data or {})
-
-    def get(self, key: str, default: Any = None) -> Any:
-        return self._data.get(key, default)
-
-    def __getitem__(self, key: str) -> Any:
-        return self._data[key]
-
-    def __contains__(self, key: str) -> bool:
-        return key in self._data
-
-    def put(self, key: str, value: Any) -> "ScopedConfig":
-        self._data[key] = value
-        return self
-
-    def scoped(self, scope: str) -> "ScopedConfig":
-        prefix = scope.rstrip(".") + "."
-        return ScopedConfig({
-            k[len(prefix):]: v for k, v in self._data.items()
-            if k.startswith(prefix)
-        })
-
-    def with_fallback(self, defaults: Mapping[str, Any] | "ScopedConfig") -> "ScopedConfig":
-        base = defaults._data if isinstance(defaults, ScopedConfig) else defaults
-        merged = dict(base)
-        merged.update(self._data)
-        return ScopedConfig(merged)
-
-    def as_dict(self) -> dict[str, Any]:
-        return dict(self._data)
-
-    def __repr__(self) -> str:  # pragma: no cover
-        return f"ScopedConfig({self._data!r})"

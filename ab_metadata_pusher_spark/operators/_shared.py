@@ -362,6 +362,14 @@ def double_sql(v) -> str:
     return f"{f!r}D"
 
 
+def _dbl(col: "Column") -> "Column":
+    """``col`` (an array) with every element cast to double — the
+    widening every vector fold and centroid collect applies first."""
+    from pyspark.sql import functions as F
+
+    return F.transform(col, lambda x: x.cast("double"))
+
+
 def double_array_lit(values) -> "Column":
     """A literal ``array<double>`` column parsed from ONE SQL string.
 

@@ -15,6 +15,12 @@ Centroids are k x dim doubles (a few KiB) — collecting them to the driver
 between iterations is the correct distributed design, not a shortcut
 (same contract as ml.clustering.KMeans, which this intentionally mirrors
 without the MLlib Vector UDT so results stay oracle-checkable).
+
+:func:`fit_centroids` is the one Lloyd trainer (seed, then ``iters`` x
+assign + update): k-means, each PQ subspace and the IVF coarse quantizer
+of ``operators.similarity`` all train through it.  This module owns the
+centroid tier rule (:data:`ASSIGN_CELLS_LITERAL_MAX`) for both the L2
+argmin here and the cosine top-nprobe cell assignment there.
 """
 
 from __future__ import annotations
@@ -23,21 +29,45 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ab_metadata_pusher_spark.operators._shared import (
-    double_sql, emb_matrix,
+    _dbl, double_sql, emb_matrix,
 )
-from ab_metadata_pusher_spark.operators.similarity import _dbl
 
-__all__ = ["seed_centroids", "assign_clusters", "update_centroids",
-           "kmeans_fit_assign"]
+__all__ = ["ASSIGN_CELLS_LITERAL_MAX", "seed_centroids", "assign_clusters",
+           "update_centroids", "fit_centroids", "kmeans_fit_assign",
+           "pq_fit_assign"]
+
+
+#: Physical-shape crossover for centroid assignment, in centroid DOUBLES
+#: (k x dim) — shared by :func:`assign_clusters` and
+#: ``similarity._assign_cells``.  The plan-literal shape is bit-exact
+#: with the DuckDB oracles and pays zero Python, but its parse/codegen
+#: cost grows superlinearly with the literal (measured, SCALE.md — probe
+#: script ivf_cells_probe.py, last in commit 3a5bcd2 — at dim 64, 5k
+#: rows, warm: k=8 0.65s, k=256 4.0s, k=1024 15.2s, k=4096 minutes at
+#: 20k rows), and per-row argmin through Catalyst higher-order functions
+#: runs ~30M mul-adds/s however the centroids ship.  Past the threshold
+#: the Arrow tier takes over: one numpy matmul per batch (k=256 0.29s,
+#: k=4096 0.72s, k=16384 2.2s) — the FAISS-style coarse assignment shape
+#: a billion-vector IVF actually needs.  128 cells at dim 64 keeps every
+#: oracle-gated query (n_cells=8) on the exact tier.
+ASSIGN_CELLS_LITERAL_MAX = 8192
 
 
 def seed_centroids(corpus: DataFrame, k: int,
                    id_col: str = "vec_id",
                    emb_col: str = "embedding") -> list[tuple[int, list[float]]]:
-    """Deterministic seeding: the vectors with the k smallest ids, cluster
-    j seeded from id j (reproducible everywhere, unlike random init)."""
-    rows = (corpus.filter(F.col(id_col) < k)
+    """Deterministic seeding (reproducible everywhere, unlike random
+    init): cluster j is seeded from the vector whose ``id_col`` is j, for
+    j < k.  A seed id with a NULL embedding seeds nothing, just as
+    :func:`update_centroids` drops a cluster with no defined mean; the
+    other clusters keep their seeds.  Raises ``ValueError`` when no id
+    below k carries an embedding."""
+    rows = (corpus.filter((F.col(id_col) < k) & F.col(emb_col).isNotNull())
             .select(id_col, _dbl(F.col(emb_col)).alias("v")).collect())
+    if not rows:
+        raise ValueError(
+            f"seed_centroids: no {id_col} below k={k} has a non-NULL "
+            f"{emb_col}; cluster j is seeded from {id_col} j")
     return [(int(r[id_col]), [float(x) for x in r["v"]]) for r in rows]
 
 
@@ -69,16 +99,13 @@ def assign_clusters(corpus: DataFrame,
     caller wants it so the update needs no corpus re-join).
 
     Same two physical tiers as similarity._assign_cells and the same
-    crossover constant — the literal tier is O(k x dim) plan text and
-    per-row Catalyst folds, which degrade superlinearly past a few
-    hundred centroids (SCALE.md), while a SemDeDup-scale k-means wants
-    thousands of clusters.  Every oracle-gated query (k <= 8) keeps
-    the bit-exact literal tier; past ASSIGN_CELLS_LITERAL_MAX doubles
-    the numpy argmin tier runs.
+    crossover constant (:data:`ASSIGN_CELLS_LITERAL_MAX`) — the literal
+    tier is O(k x dim) plan text and per-row Catalyst folds, which
+    degrade superlinearly past a few hundred centroids (SCALE.md), while
+    a SemDeDup-scale k-means wants thousands of clusters.  Every
+    oracle-gated query (k <= 8) keeps the bit-exact literal tier; past
+    ASSIGN_CELLS_LITERAL_MAX doubles the numpy argmin tier runs.
     """
-    from ab_metadata_pusher_spark.operators.similarity import (
-        ASSIGN_CELLS_LITERAL_MAX,
-    )
     centroids = sorted(centroids)
     if not centroids:
         raise ValueError("assign_clusters: empty centroid list")
@@ -173,11 +200,13 @@ def _assign_clusters_arrow(corpus: DataFrame,
     return corpus.mapInArrow(fn, out_schema)
 
 
-def update_centroids(corpus: DataFrame, assigned: DataFrame,
-                     id_col: str = "vec_id",
-                     emb_col: str = "embedding",
-                     dim: int | None = None) -> list[tuple[int, list[float]]]:
-    """Lloyd update: per-cluster element-wise mean.  posexplode to
+def update_centroids(assigned: DataFrame, dim: int,
+                     emb_col: str = "embedding"
+                     ) -> list[tuple[int, list[float]]]:
+    """Lloyd update: per-cluster element-wise mean of ``assigned`` — the
+    :func:`assign_clusters` output with ``keep_emb=True`` (assignment is
+    a map-only projection OF the corpus, so carrying the embedding is
+    free and the update needs no corpus re-join).  posexplode to
     (cluster, pos, val) and aggregate per (cluster, pos): the map side
     inflates to corpus x dim internal rows, but partial aggregation
     combines them to partitions x k x dim scalars BEFORE the exchange,
@@ -191,14 +220,6 @@ def update_centroids(corpus: DataFrame, assigned: DataFrame,
     pays superlinear plan/compile time — e.g. dim 64/2M rows 0.57s vs
     1.33s, dim 2048/20k rows 0.72s vs 20.5s.
 
-    When ``assigned`` already carries ``emb_col`` (assign_clusters with
-    ``keep_emb=True`` — assignment is a map-only projection OF the
-    corpus, so the column is free), the per-iteration corpus re-join is
-    skipped; the joined fallback stays for callers holding a bare
-    (id, cluster) frame.  ``dim`` callers that know the width (every
-    trainer does, from its seed centroids) should pass it; otherwise a
-    single bounded first() infers it.
-
     Null handling (r8 ADVICE): rows with a NULL embedding are filtered
     before the groupBy, and each dimension aggregates with ``avg`` —
     rows carrying a NULL *element* at dim i drop out of dim i's mean
@@ -206,14 +227,7 @@ def update_centroids(corpus: DataFrame, assigned: DataFrame,
     defined mean there and is dropped from the returned list (its
     members re-assign to surviving centroids next pass) instead of
     raising ``float(None)``."""
-    if emb_col in assigned.columns:
-        joined = assigned
-    else:
-        joined = corpus.join(assigned.select(id_col, "cluster"), id_col)
-    joined = joined.filter(F.col(emb_col).isNotNull())
-    if dim is None:
-        dim = len(joined.select(emb_col).first()[0])
-    per_pos = (joined
+    per_pos = (assigned.filter(F.col(emb_col).isNotNull())
                .select("cluster", F.posexplode(F.col(emb_col))
                        .alias("_pos", "_val"))
                .groupBy("cluster", "_pos")
@@ -231,28 +245,41 @@ def update_centroids(corpus: DataFrame, assigned: DataFrame,
     return out
 
 
+def fit_centroids(corpus: DataFrame, k: int, iters: int,
+                  id_col: str = "vec_id", emb_col: str = "embedding"
+                  ) -> list[tuple[int, list[float]]]:
+    """The one Lloyd trainer: :func:`seed_centroids`, then ``iters``
+    rounds of map-only :func:`assign_clusters` (embedding carried) and
+    one :func:`update_centroids` shuffle.  Deterministic end to end
+    (seeded from ids, fixed iteration count), so a SQL oracle can replay
+    the exact run.  Every round is an action over ``corpus``; callers
+    that iterate over expensive lineage pin it themselves."""
+    cents = seed_centroids(corpus, k, id_col, emb_col)
+    dim = len(cents[0][1])
+    for _ in range(iters):
+        cents = update_centroids(
+            assign_clusters(corpus, cents, id_col, emb_col, keep_emb=True),
+            dim, emb_col)
+    return cents
+
+
 def kmeans_fit_assign(corpus: DataFrame, k: int = 8, iters: int = 1,
                       id_col: str = "vec_id",
                       emb_col: str = "embedding") -> DataFrame:
-    """Seed, run ``iters`` Lloyd update iterations, return the final
-    assignment (id, cluster, dist).  Each iteration costs one map pass +
-    one (cluster, pos)-keyed shuffle; cache ``corpus`` upstream when
-    iterating more than a couple of times."""
-    cents = seed_centroids(corpus, k, id_col, emb_col)
-    dim = len(cents[0][1]) if cents else None
-    for _ in range(iters):
-        assigned = assign_clusters(corpus, cents, id_col, emb_col,
-                                   keep_emb=True)
-        cents = update_centroids(corpus, assigned, id_col, emb_col, dim=dim)
-    return assign_clusters(corpus, cents, id_col, emb_col)
+    """Train ``k`` centroids with :func:`fit_centroids`, return the
+    final assignment (id, cluster, dist).  Each iteration costs one map
+    pass + one (cluster, pos)-keyed shuffle; cache ``corpus`` upstream
+    when iterating more than a couple of times."""
+    return assign_clusters(corpus, fit_centroids(corpus, k, iters, id_col,
+                                                 emb_col), id_col, emb_col)
 
 
 def pq_fit_assign(corpus: DataFrame, m: int = 4, k: int = 4,
                   iters: int = 1, id_col: str = "vec_id",
                   emb_col: str = "embedding") -> DataFrame:
     """Product quantization: split the d-dim embedding into ``m``
-    contiguous subspaces and run an independent k-means (same Lloyd
-    machinery as above) in each, returning one row per (vector,
+    contiguous subspaces and run an independent k-means
+    (:func:`fit_centroids`) in each, returning one row per (vector,
     subspace) with its assigned code and quantization error.
 
     PQ is the storage-side half of large-scale ANN (IVF-PQ): m codes of
@@ -261,8 +288,9 @@ def pq_fit_assign(corpus: DataFrame, m: int = 4, k: int = 4,
     each update shuffles (code, pos) scalar partials; the m subspace
     plans are independent — they union without any cross-subspace
     exchange, and the codebooks (m x k x d/m doubles) stay driver-sized
-    by construction."""
-    d = corpus.select(F.size(F.col(emb_col)).alias("d")).first()["d"]
+    by construction.  ``d`` is read from the first non-NULL embedding."""
+    d = (corpus.filter(F.col(emb_col).isNotNull())
+         .select(F.size(F.col(emb_col)).alias("d")).first()["d"])
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by {m} subspaces")
     w = d // m
@@ -271,11 +299,7 @@ def pq_fit_assign(corpus: DataFrame, m: int = 4, k: int = 4,
         sub = corpus.select(
             F.col(id_col),
             F.slice(F.col(emb_col), s * w + 1, w).alias("_sub"))
-        cents = seed_centroids(sub, k, id_col, "_sub")
-        for _ in range(iters):
-            assigned = assign_clusters(sub, cents, id_col, "_sub",
-                                       keep_emb=True)
-            cents = update_centroids(sub, assigned, id_col, "_sub", dim=w)
+        cents = fit_centroids(sub, k, iters, id_col, "_sub")
         outs.append(assign_clusters(sub, cents, id_col, "_sub")
                     .select(id_col, F.lit(s).alias("subspace"),
                             F.col("cluster").alias("code"),

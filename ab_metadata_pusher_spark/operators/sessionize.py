@@ -4,16 +4,9 @@ The reference has no event/time-series processing at all (its cadence is
 cron, SURVEY.md §2.F F5); this is part of the engine's §2.G extension
 surface, the batch twin of streaming/events.py's ``session_window`` query.
 
-Two interchangeable implementations, same output contract:
-
-* ``sessionize`` — pure DataFrame: ``lag`` + conditional cumulative sum
-  over one ``(user, ts)`` window, then a hash aggregate.  All JVM,
-  whole-stage-codegen; the 100 TB default.
-* ``sessionize_pandas`` — the same computation via ``applyInPandas``,
-  demonstrating the engine's grouped-map (Arrow-batched) custom-operator
-  path for session logic too gnarly for SQL (e.g. per-session ML feature
-  extraction).  One shuffle on the grouping key; each group must fit the
-  executor's Arrow batch memory — fine for per-user event histories.
+``sessionize`` is pure DataFrame: ``lag`` + conditional cumulative sum
+over one ``(user, ts)`` window, then a hash aggregate.  All JVM,
+whole-stage-codegen, no Python per row.
 
 Output: one row per (key, session_idx): n_events, start_ts, end_ts.
 ``session_idx`` is 1-based in ts order per key.
@@ -21,14 +14,10 @@ Output: one row per (key, session_idx): n_events, start_ts, end_ts.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["sessionize", "sessionize_pandas"]
-
-_OUT_DDL = ("user_id bigint, session_idx bigint, n_events bigint, "
-            "start_ts timestamp_ntz, end_ts timestamp_ntz")
+__all__ = ["sessionize"]
 
 
 def sessionize(events: DataFrame, gap_seconds: int = 1800,
@@ -53,25 +42,3 @@ def sessionize(events: DataFrame, gap_seconds: int = 1800,
              F.min(ts).alias("start_ts"),
              F.max(ts).alias("end_ts"))
     )
-
-
-def sessionize_pandas(events: DataFrame, gap_seconds: int = 1800,
-                      key: str = "user_id", ts: str = "ts") -> DataFrame:
-    """Same contract via grouped-map ``applyInPandas`` (Arrow batches)."""
-
-    def per_key(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts)
-        gap = pdf[ts].diff().dt.total_seconds()
-        session_idx = (gap.isna() | (gap > gap_seconds)).cumsum()
-        g = pdf.groupby(session_idx.values)[ts]
-        out = pd.DataFrame({
-            key: pdf[key].iloc[0],
-            "session_idx": g.size().index,
-            "n_events": g.size().values,
-            "start_ts": g.min().values,
-            "end_ts": g.max().values,
-        })
-        return out
-
-    return events.select(key, ts).groupBy(key).applyInPandas(
-        per_key, schema=_OUT_DDL.replace("user_id", f"`{key}`", 1))

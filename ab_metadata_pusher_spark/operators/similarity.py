@@ -1,16 +1,28 @@
 """Similarity search over embedding columns (SURVEY.md §2.G north star).
 
-Two paths:
+Every operator is the same three stages — generate candidates, score
+them exactly, cut the top k (the split of distributed top-k similarity
+in REPOSE, ICDE 2021) — and each stage is written once:
 
-* ``topk_cosine_bruteforce`` — exact top-k by cosine: broadcast the query
-  set, one narrow pass over the corpus, per-query top-k via window rank
-  (WindowGroupLimit keeps k rows per partition before the shuffle).  The
-  baseline and the correctness oracle for any ANN variant.
-* ``ann_lsh_topk`` — random-hyperplane LSH: deterministic signed
-  projections bucket the corpus into MULTIPLE independent hash tables;
-  search only vectors sharing a bucket in any table.  Sub-linear
-  candidate sets at 100 TB; recall measured against brute force in
-  tests and by the registered recall queries.
+1. **Candidates**: which (query, neighbor) pairs get scored.
+   * Every pair: ``topk_cosine_bruteforce`` (broadcast query set x
+     corpus), the exact baseline and recall oracle for the rest.
+   * A shared bucket in any of several hyperplane tables
+     (``_lsh_keyer``): ``ann_lsh_topk`` (broadcast probe set),
+     ``ann_lsh_knn_self`` and ``embedding_near_dup_pairs_lsh`` (corpus
+     self-joins).
+   * A shared learned IVF cell (``ivf_centroid_list``, trained by
+     ``clustering.fit_centroids``; cells attached map-only by
+     ``_assign_cells``): ``ann_ivf_topk``, ``ann_ivf_knn_self`` and
+     ``semantic_dedup_pairs``.
+2. **Score**: exact cosine per candidate over the ``_side`` projections,
+   which fold each vector's norm once per row.  Below
+   ``CELLPAIRS_MIN_CANDIDATES`` the JVM ``cosine_prenorm`` fold scores
+   each joined pair (``_fold_scores``); above it one Arrow cogroup per
+   cell scores the same bits.
+3. **Rank**: the kNN operators keep each query's top ``k`` by cosine,
+   ties to the lower neighbor id (``_rank_topk``); the pair operators
+   keep pairs at or above a threshold instead.
 
 Vector math is F.aggregate/F.zip_with over array<float> — JVM-side, no
 UDF.  All floats are accumulated as doubles in array order so the DuckDB
@@ -26,24 +38,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from ab_metadata_pusher_spark.operators import clustering
 from ab_metadata_pusher_spark.operators._shared import (
-    double_array_lit, double_sql, emb_matrix,
+    _dbl, double_array_lit, double_sql, emb_matrix, materialize_shared,
 )
 
 logger = logging.getLogger(__name__)
 
-__all__ = ["dot", "l2_norm", "cosine", "cosine_prenorm",
+__all__ = ["dot", "l2_norm", "cosine_prenorm",
            "topk_cosine_bruteforce",
            "hyperplanes", "lsh_planes_for", "ann_lsh_topk",
-           "ann_lsh_knn_self",
-           "embedding_near_dup_pairs",
-           "embedding_near_dup_pairs_lsh", "ivf_centroids",
+           "ann_lsh_knn_self", "embedding_near_dup_pairs_lsh",
            "ivf_centroid_list", "ivf_cells_for", "ann_ivf_topk",
            "ann_ivf_knn_self", "semantic_dedup_pairs"]
-
-
-def _dbl(col: Column) -> Column:
-    return F.transform(col, lambda x: x.cast("double"))
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -55,21 +62,17 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(_dbl(a), F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """NULL where a norm is zero, with or without ANSI mode (a plain
-    ``/`` raises DIVIDE_BY_ZERO under ANSI, the Spark 4 default)."""
-    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
-
-
 def cosine_prenorm(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """``cosine`` with per-side PRE-computed norms: bit-identical result
-    (same expressions, same operation order), but each vector's norm fold
-    runs once per ROW in its side's projection instead of once per PAIR
-    in the join output — at k candidates per vector that deletes 2k of
-    the 3k higher-order-function array folds in the scoring stage
-    (measured 3.5s -> 3.1s on the bounded 500-vector ANN label screen,
-    where candidate-join/distinct shuffles dominate; the fold savings
-    grow linearly with candidates-per-vector, i.e. with corpus size)."""
+    """Cosine of ``a`` and ``b`` given their PRE-computed norms ``na``,
+    ``nb``: each vector's norm fold runs once per ROW in its side's
+    projection instead of once per PAIR in the join output — at k
+    candidates per vector that deletes 2k of the 3k higher-order-function
+    array folds in the scoring stage (measured 3.5s -> 3.1s on the
+    bounded 500-vector ANN label screen, where candidate-join/distinct
+    shuffles dominate; the fold savings grow linearly with
+    candidates-per-vector, i.e. with corpus size).  NULL where a norm is
+    zero, with or without ANSI mode (a plain ``/`` raises DIVIDE_BY_ZERO
+    under ANSI, the Spark 4 default)."""
     return F.try_divide(dot(a, b), na * nb)
 
 
@@ -219,35 +222,48 @@ def _cellpair_semantic_scores(assigned: DataFrame, dim: int,
     return assigned.groupBy("cell").applyInArrow(fn, out_schema)
 
 
-def topk_cosine_bruteforce(corpus: DataFrame, queries: DataFrame,
-                           k: int = 5) -> DataFrame:
-    """Exact top-k neighbors for each query vector.
+def _side(vectors: DataFrame, role: str) -> DataFrame:
+    """One side of a candidate pair: ``role`` is ``query`` (columns
+    query_id, q_emb, q_norm) or ``neighbor`` (neighbor_id, c_emb,
+    c_norm).  The norm fold runs here, once per vector."""
+    p = "q" if role == "query" else "c"
+    return vectors.select(F.col("vec_id").alias(f"{role}_id"),
+                          F.col("embedding").alias(f"{p}_emb"),
+                          l2_norm(F.col("embedding")).alias(f"{p}_norm"))
 
-    Output: query_id, neighbor_id, cosine_sim (rounded 6), rank.
-    Ties break on neighbor_id for cross-engine determinism.
-    """
-    q = F.broadcast(queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        l2_norm(F.col("embedding")).alias("q_norm")))
-    c = corpus.select(F.col("vec_id").alias("neighbor_id"),
-                      F.col("embedding").alias("c_emb"),
-                      l2_norm(F.col("embedding")).alias("c_norm"))
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine_sim",
-                    cosine_prenorm(F.col("q_emb"), F.col("c_emb"),
-                                   F.col("q_norm"), F.col("c_norm")))
-    )
+
+def _fold_scores(pairs: DataFrame) -> DataFrame:
+    """``pairs`` (joined ``_side`` columns) plus their ``cosine_sim``
+    from the JVM ``cosine_prenorm`` fold."""
+    return pairs.withColumn(
+        "cosine_sim", cosine_prenorm(F.col("q_emb"), F.col("c_emb"),
+                                     F.col("q_norm"), F.col("c_norm")))
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's top ``k`` of ``scored`` (query_id, neighbor_id,
+    cosine_sim — from the fold or the cellpairs tier alike): cosine
+    DESC with NULL last, ties to the lower neighbor_id for cross-engine
+    determinism.  Output: query_id, neighbor_id, cosine_sim (rounded
+    6), rank."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                F.round("cosine_sim", 6).alias("cosine_sim"), "rank")
-    )
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id",
+                    F.round("cosine_sim", 6).alias("cosine_sim"), "rank"))
+
+
+def topk_cosine_bruteforce(corpus: DataFrame, queries: DataFrame,
+                           k: int = 5) -> DataFrame:
+    """Exact top-k neighbors for each query vector: every (query,
+    corpus vector) pair is a candidate (broadcast query set, one narrow
+    pass over the corpus; WindowGroupLimit keeps k rows per partition
+    before the rank's shuffle)."""
+    return _rank_topk(_fold_scores(
+        F.broadcast(_side(queries, "query"))
+        .crossJoin(_side(corpus, "neighbor"))
+        .filter(F.col("query_id") != F.col("neighbor_id"))), k)
 
 
 #: Target expected bucket occupancy for the SELF-join LSH operators.
@@ -312,6 +328,30 @@ def hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
     return planes
 
 
+def _lsh_keyer(n_tables: int, n_planes: int, dim: int):
+    """The LSH key builder: ``keyed(vectors, cols)`` returns ``cols`` of
+    ``vectors`` plus one (tbl, bkt) row per hash table — ``n_tables``
+    independent tables of ``n_planes`` signed projections of
+    ``embedding`` each, from one deterministic plane set.  The key
+    expression is built once per keyer and shared by both sides of a
+    join: each build is driver time (about 0.2 s for 6 tables x 3
+    planes at dim 64, measured on a 4-core host)."""
+    planes = hyperplanes(n_tables * n_planes, dim)
+    keys = F.array(*[
+        F.struct(F.lit(t).alias("tbl"),
+                 _bucket(F.col("embedding"),
+                         planes[t * n_planes:(t + 1) * n_planes])
+                 .alias("bkt"))
+        for t in range(n_tables)])
+
+    def keyed(vectors: DataFrame, cols: list) -> DataFrame:
+        exploded = vectors.select(*cols, F.explode(keys).alias("b"))
+        return exploded.select(*exploded.columns[:-1],
+                               F.col("b.tbl").alias("tbl"),
+                               F.col("b.bkt").alias("bkt"))
+    return keyed
+
+
 def _bucket(emb: Column, planes: list[list[float]]) -> Column:
     """Signed-projection bucket id: bit p = (emb . plane_p) >= 0."""
     bits = []
@@ -346,44 +386,16 @@ def ann_lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5, *,
     topk_cosine_bruteforce so recall is directly measurable
     (similarity_ann_recall).
     """
-    all_planes = hyperplanes(n_tables * n_planes, dim)
-    tables = [all_planes[t * n_planes:(t + 1) * n_planes]
-              for t in range(n_tables)]
-    buckets = F.array(*[
-        F.struct(F.lit(t).alias("tbl"),
-                 _bucket(F.col("embedding"), tables[t]).alias("bkt"))
-        for t in range(n_tables)])
-
-    def keyed(df: DataFrame, id_alias: str) -> DataFrame:
-        return (df.select(F.col("vec_id").alias(id_alias),
-                          F.explode(buckets).alias("b"))
-                .select(id_alias, F.col("b.tbl").alias("tbl"),
-                        F.col("b.bkt").alias("bkt")))
-
-    cand = (F.broadcast(keyed(queries, "query_id"))
-            .join(keyed(corpus, "neighbor_id"), ["tbl", "bkt"])
+    keyed = _lsh_keyer(n_tables, n_planes, dim)
+    cand = (F.broadcast(keyed(queries, [F.col("vec_id").alias("query_id")]))
+            .join(keyed(corpus, [F.col("vec_id").alias("neighbor_id")]),
+                  ["tbl", "bkt"])
             .filter(F.col("query_id") != F.col("neighbor_id"))
             .select("query_id", "neighbor_id")
             .distinct())
-    q = F.broadcast(queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        l2_norm(F.col("embedding")).alias("q_norm")))
-    c = corpus.select(F.col("vec_id").alias("neighbor_id"),
-                      F.col("embedding").alias("c_emb"),
-                      l2_norm(F.col("embedding")).alias("c_norm"))
-    scored = (cand.join(q, "query_id").join(c, "neighbor_id")
-              .withColumn("cosine_sim",
-                          cosine_prenorm(F.col("q_emb"), F.col("c_emb"),
-                                         F.col("q_norm"), F.col("c_norm"))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                F.round("cosine_sim", 6).alias("cosine_sim"), "rank")
-    )
+    return _rank_topk(_fold_scores(
+        cand.join(F.broadcast(_side(queries, "query")), "query_id")
+        .join(_side(corpus, "neighbor"), "neighbor_id")), k)
 
 
 def ann_lsh_knn_self(corpus: DataFrame, k: int = 5, *,
@@ -418,24 +430,11 @@ def ann_lsh_knn_self(corpus: DataFrame, k: int = 5, *,
     pair operators: the ``MATERIALIZE_CONF`` session conf alone picks
     lazy persist (default) or eager.
     """
-    from ab_metadata_pusher_spark.operators._shared import (
-        materialize_shared as _materialize_shared,
-    )
-
     sized = n_planes is None
     if sized:
         n_planes = lsh_planes_for(n_vectors, floor=3)
-    all_planes = hyperplanes(n_tables * n_planes, dim)
-    tables = [all_planes[t * n_planes:(t + 1) * n_planes]
-              for t in range(n_tables)]
-    buckets = F.array(*[
-        F.struct(F.lit(t).alias("tbl"),
-                 _bucket(F.col("embedding"), tables[t]).alias("bkt"))
-        for t in range(n_tables)])
-    keyed = _materialize_shared(
-        corpus.select("vec_id", F.explode(buckets).alias("b"))
-              .select("vec_id", F.col("b.tbl").alias("tbl"),
-                      F.col("b.bkt").alias("bkt")))
+    keyed = materialize_shared(
+        _lsh_keyer(n_tables, n_planes, dim)(corpus, ["vec_id"]))
     build = keyed
     if sized and n_planes > 3:
         # data-sized (i.e. large-corpus) mode only: dense clusters defeat
@@ -453,48 +452,9 @@ def ann_lsh_knn_self(corpus: DataFrame, k: int = 5, *,
             .select(F.col("a.vec_id").alias("query_id"),
                     F.col("b.vec_id").alias("neighbor_id"))
             .distinct())
-    q = corpus.select(F.col("vec_id").alias("query_id"),
-                      F.col("embedding").alias("q_emb"),
-                      l2_norm(F.col("embedding")).alias("q_norm"))
-    c = corpus.select(F.col("vec_id").alias("neighbor_id"),
-                      F.col("embedding").alias("c_emb"),
-                      l2_norm(F.col("embedding")).alias("c_norm"))
-    scored = (cand.join(q, "query_id").join(c, "neighbor_id")
-              .withColumn("cosine_sim",
-                          cosine_prenorm(F.col("q_emb"), F.col("c_emb"),
-                                         F.col("q_norm"), F.col("c_norm"))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id",
-                    F.round("cosine_sim", 6).alias("cosine_sim"), "rank"))
-
-
-def embedding_near_dup_pairs(corpus: DataFrame, threshold: float) -> DataFrame:
-    """Embedding-cosine near-dup pairs (vec_a < vec_b, cosine >= t).
-
-    Brute-force pair scan blocked by label (the natural partition key in
-    the fixture); kept as the bounded-input / recall-baseline form — the
-    scale path is ``embedding_near_dup_pairs_lsh`` (hyperplane-bucketed,
-    no label dependence).
-    """
-    a = corpus.select(F.col("vec_id").alias("vec_a"),
-                      F.col("embedding").alias("ea"),
-                      l2_norm(F.col("embedding")).alias("na"),
-                      F.col("label").alias("la"))
-    b = corpus.select(F.col("vec_id").alias("vec_b"),
-                      F.col("embedding").alias("eb"),
-                      l2_norm(F.col("embedding")).alias("nb"),
-                      F.col("label").alias("lb"))
-    return (
-        a.join(b, (F.col("la") == F.col("lb")) & (F.col("vec_a") < F.col("vec_b")))
-        .withColumn("cosine_sim",
-                    cosine_prenorm(F.col("ea"), F.col("eb"),
-                                   F.col("na"), F.col("nb")))
-        .filter(F.col("cosine_sim") >= threshold)
-        .select("vec_a", "vec_b", F.round("cosine_sim", 4).alias("cosine_sim"))
-    )
+    return _rank_topk(_fold_scores(
+        cand.join(_side(corpus, "query"), "query_id")
+        .join(_side(corpus, "neighbor"), "neighbor_id")), k)
 
 
 def embedding_near_dup_pairs_lsh(corpus: DataFrame, threshold: float,
@@ -517,18 +477,9 @@ def embedding_near_dup_pairs_lsh(corpus: DataFrame, threshold: float,
     """
     if n_planes is None:
         n_planes = lsh_planes_for(n_vectors, floor=6)
-    all_planes = hyperplanes(n_tables * n_planes, dim)
-    tables = [all_planes[t * n_planes:(t + 1) * n_planes]
-              for t in range(n_tables)]
-    buckets = F.array(*[
-        F.struct(F.lit(t).alias("tbl"),
-                 _bucket(F.col("embedding"), tables[t]).alias("bkt"))
-        for t in range(n_tables)])
-    keyed = (corpus.select("vec_id", "embedding",
-                           l2_norm(F.col("embedding")).alias("nrm"),
-                           F.explode(buckets).alias("b"))
-             .select("vec_id", "embedding", "nrm",
-                     F.col("b.tbl").alias("tbl"), F.col("b.bkt").alias("bkt")))
+    keyed = _lsh_keyer(n_tables, n_planes, dim)(
+        corpus, ["vec_id", "embedding",
+                 l2_norm(F.col("embedding")).alias("nrm")])
     a, b = keyed.alias("a"), keyed.alias("b")
     cand = (
         a.join(b, (F.col("a.tbl") == F.col("b.tbl"))
@@ -549,79 +500,41 @@ def embedding_near_dup_pairs_lsh(corpus: DataFrame, threshold: float,
     )
 
 
-def ivf_centroids(corpus: DataFrame, n_cells: int = 8,
-                  iters: int = 2) -> DataFrame:
+def ivf_centroid_list(corpus: DataFrame, n_cells: int = 8,
+                      iters: int = 2) -> list[tuple[int, list[float]]]:
     """IVF coarse quantizer: LEARNED k-means cells over the embedding
     column itself — no dependence on any label/partition column (at
     corpus scale there is none).
 
-    Training is the distributed Lloyd machinery from
-    ``operators.clustering``: map-only assignment against inlined
-    centroid literals (zero shuffle), one map-side-combinable
-    (cluster, pos) shuffle per update.  Deterministic end-to-end —
-    seeded from the ``n_cells`` smallest ids, fixed ``iters`` — so a SQL
-    oracle can replay the exact training run; the k x dim centroid table
-    is driver-sized by construction (same contract as
-    ml.clustering.KMeans).  ``corpus`` is cached for the training loop's
-    lifetime (it is consumed ``2 * iters + 1`` times) and released
-    before returning.
-    """
-    return corpus.sparkSession.createDataFrame(
-        [(int(c), [float(x) for x in vec])
-         for c, vec in ivf_centroid_list(corpus, n_cells, iters)],
-        "cell bigint, cvec array<double>")
-
-
-def ivf_centroid_list(corpus: DataFrame, n_cells: int = 8,
-                      iters: int = 2) -> list[tuple[int, list[float]]]:
-    """:func:`ivf_centroids` as the raw driver-side list (k x dim — a
-    few KiB by construction).  Internal consumers take this form so the
-    downstream cell assignment can inline the centroids as plan
-    literals (map-only argmin, zero shuffle) instead of paying a
-    corpus x n_cells crossJoin + per-vector window sort."""
-    from ab_metadata_pusher_spark.operators.clustering import (
-        assign_clusters, seed_centroids, update_centroids,
-    )
+    Training is :func:`clustering.fit_centroids`: map-only assignment
+    against inlined centroid literals (zero shuffle), one
+    map-side-combinable (cluster, pos) shuffle per update.
+    Deterministic end-to-end — cell j seeded from vec_id j, fixed
+    ``iters`` — so a SQL oracle can replay the exact training run.
+    Returns the driver-side (cell, centroid) list sorted by cell (k x
+    dim, a few KiB — the ml.clustering.KMeans contract), so the
+    downstream cell assignment inlines the centroids as plan literals
+    (map-only, zero shuffle) instead of paying a corpus x n_cells
+    crossJoin + per-vector window sort."""
     # Training consumes corpus 2*iters+1 times and every consumption is
     # an action (centroids collect between iterations); pin it for the
     # loop's lifetime so upstream lineage (repartition, decode, joins)
     # replays once, then release — all training actions complete here.
     corpus = corpus.persist()
     try:
-        cents = seed_centroids(corpus, n_cells)
-        dim = len(cents[0][1]) if cents else None
-        for _ in range(iters):
-            assigned = assign_clusters(corpus, cents, keep_emb=True)
-            cents = update_centroids(corpus, assigned, dim=dim)
+        return sorted(clustering.fit_centroids(corpus, n_cells, iters))
     finally:
         corpus.unpersist()
-    return sorted(cents)
 
 
-#: Physical-shape crossover for _assign_cells, in centroid DOUBLES
-#: (k x dim).  The plan-literal shape is bit-exact with the DuckDB
-#: oracles and pays zero Python, but its parse/codegen cost grows
-#: superlinearly with the literal (measured, SCALE.md — probe script
-#: ivf_cells_probe.py, last in commit 3a5bcd2 — at dim 64, 5k rows,
-#: warm: k=8 0.65s, k=256 4.0s, k=1024 15.2s, k=4096 minutes at 20k
-#: rows), and per-row argmin through Catalyst
-#: higher-order functions runs ~30M mul-adds/s however the centroids
-#: ship.  Past the threshold the Arrow tier takes over: one numpy
-#: matmul per batch (k=256 0.29s, k=4096 0.72s, k=16384 2.2s) — the
-#: FAISS-style coarse
-#: assignment shape a billion-vector IVF actually needs.  128 cells at
-#: dim 64 keeps every oracle-gated query (n_cells=8) on the exact tier.
-ASSIGN_CELLS_LITERAL_MAX = 8192
-
-
-def _assign_cells(df: DataFrame,
-                  cents: DataFrame | list[tuple[int, list[float]]],
+def _assign_cells(df: DataFrame, cents: list[tuple[int, list[float]]],
                   id_col: str, emb_col: str, nprobe: int) -> DataFrame:
     """Attach the ``nprobe`` nearest cells to each vector — MAP-ONLY.
 
-    Up to ``ASSIGN_CELLS_LITERAL_MAX`` centroid doubles the centroids
-    are inlined into the plan (below); past it a vectorized numpy
-    matmul runs per Arrow batch (:func:`_assign_cells_arrow`).  Both
+    Up to ``clustering.ASSIGN_CELLS_LITERAL_MAX`` centroid doubles (the
+    one tier rule for cells and clusters) the centroids are inlined into
+    the plan (below); past it a vectorized numpy matmul runs per Arrow
+    batch (:func:`_assign_cells_arrow`).  Both
     tiers share the contract: cosine ranking, ties to the lower cell,
     degenerate (zero-norm / non-finite) similarity ranks LAST.
 
@@ -630,8 +543,7 @@ def _assign_cells(df: DataFrame,
     row sorts its per-cell (-cosine, cell) structs and keeps the first
     ``nprobe`` — no crossJoin row inflation, no per-vector window sort,
     zero shuffle.  Tie-break matches the previous windowed form
-    (cosine DESC, then lower cell).  ``cents`` may be the
-    :func:`ivf_centroids` DataFrame (collected here — bounded) or the
+    (cosine DESC, then lower cell).  ``cents`` is the
     :func:`ivf_centroid_list` list.
 
     Each centroid's norm is computed ONCE driver-side (the identical
@@ -648,14 +560,10 @@ def _assign_cells(df: DataFrame,
     double DESC ordering; fixture corpora and learned k-means centroids
     have no zero-norm vectors, so the green oracles see no
     difference.)"""
-    if isinstance(cents, DataFrame):
-        rows = [(int(r["cell"]), [float(x) for x in r["cvec"]])
-                for r in cents.collect()]
-    else:
-        rows = [(int(c), [float(x) for x in vec]) for c, vec in cents]
+    rows = [(int(c), [float(x) for x in vec]) for c, vec in cents]
     if not rows:
         raise ValueError("_assign_cells: empty centroid table")
-    if len(rows) * len(rows[0][1]) > ASSIGN_CELLS_LITERAL_MAX:
+    if len(rows) * len(rows[0][1]) > clustering.ASSIGN_CELLS_LITERAL_MAX:
         return _assign_cells_arrow(df, rows, emb_col, nprobe)
 
     def _norm(vec: list[float]) -> float:
@@ -666,7 +574,7 @@ def _assign_cells(df: DataFrame,
 
     # One SQL string parsed JVM-side (see _shared.double_array_lit:
     # nested F.lit trees cost hundreds of py4j round trips); cell is
-    # BIGINT to match the historical ivf_centroids DataFrame schema.
+    # BIGINT, as in the Arrow tier.
     lit = F.expr("array({})".format(", ".join(
         "named_struct('cell', {c}L, 'cvec', array({vs}), 'cnorm', {n})"
         .format(c=c, vs=", ".join(map(double_sql, vec)),
@@ -741,7 +649,7 @@ def ann_ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                  iters: int = 2) -> DataFrame:
     """IVF approximate top-k: corpus vectors live in their nearest cell,
     queries probe their ``nprobe`` nearest cells, ranking runs only inside
-    probed cells.  Cells are learned (``ivf_centroids`` k-means), not
+    probed cells.  Cells are learned (``ivf_centroid_list`` k-means), not
     taken from any data column.
 
     The 100 TB shape: candidates per query ~= nprobe * corpus / n_cells,
@@ -749,31 +657,13 @@ def ann_ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     is shuffle-free on re-use.  Output schema matches
     topk_cosine_bruteforce for direct recall measurement."""
     cents = ivf_centroid_list(corpus, n_cells=n_cells, iters=iters)
-    c = _assign_cells(
-        corpus.select(F.col("vec_id").alias("neighbor_id"),
-                      F.col("embedding").alias("c_emb"),
-                      l2_norm(F.col("embedding")).alias("c_norm")),
-        cents, "neighbor_id", "c_emb", nprobe=1)
-    q = F.broadcast(_assign_cells(
-        queries.select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("q_emb"),
-                       l2_norm(F.col("embedding")).alias("q_norm")),
-        cents, "query_id", "q_emb", nprobe=nprobe))
-    scored = (
+    c = _assign_cells(_side(corpus, "neighbor"), cents, "neighbor_id",
+                      "c_emb", nprobe=1)
+    q = F.broadcast(_assign_cells(_side(queries, "query"), cents,
+                                  "query_id", "q_emb", nprobe=nprobe))
+    return _rank_topk(_fold_scores(
         q.join(c, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine_sim",
-                    cosine_prenorm(F.col("q_emb"), F.col("c_emb"),
-                                   F.col("q_norm"), F.col("c_norm")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                F.round("cosine_sim", 6).alias("cosine_sim"), "rank")
-    )
+        .filter(F.col("query_id") != F.col("neighbor_id"))), k)
 
 
 #: Target expected cell occupancy for the corpus-sized kNN-self cell
@@ -856,16 +746,10 @@ def ann_ivf_knn_self(corpus: DataFrame, k: int = 5, *,
             "or a data-sized n_cells for the linear scale path.",
             nprobe, n_cells)
     cents = ivf_centroid_list(corpus, n_cells=n_cells, iters=iters)
-    build = _assign_cells(
-        corpus.select(F.col("vec_id").alias("neighbor_id"),
-                      F.col("embedding").alias("c_emb"),
-                      l2_norm(F.col("embedding")).alias("c_norm")),
-        cents, "neighbor_id", "c_emb", nprobe=1)
-    query = _assign_cells(
-        corpus.select(F.col("vec_id").alias("query_id"),
-                      F.col("embedding").alias("q_emb"),
-                      l2_norm(F.col("embedding")).alias("q_norm")),
-        cents, "query_id", "q_emb", nprobe=nprobe)
+    build = _assign_cells(_side(corpus, "neighbor"), cents, "neighbor_id",
+                          "c_emb", nprobe=1)
+    query = _assign_cells(_side(corpus, "query"), cents, "query_id",
+                          "q_emb", nprobe=nprobe)
     # Expected candidate volume = nprobe * occupancy per query: past
     # CELLPAIRS_MIN_CANDIDATES the scoring runs per CELL — with
     # n_vectors unknown the estimate stays 0 and every oracle-gated
@@ -875,20 +759,10 @@ def ann_ivf_knn_self(corpus: DataFrame, k: int = 5, *,
     if est_cand >= CELLPAIRS_MIN_CANDIDATES:
         scored = _cellpair_knn_scores(query, build, len(cents[0][1]), k)
     else:
-        scored = (
+        scored = _fold_scores(
             query.join(build, "cell")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .withColumn("cosine_sim",
-                        cosine_prenorm(F.col("q_emb"), F.col("c_emb"),
-                                       F.col("q_norm"), F.col("c_norm"))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                F.round("cosine_sim", 6).alias("cosine_sim"), "rank")
-    )
+            .filter(F.col("query_id") != F.col("neighbor_id")))
+    return _rank_topk(scored, k)
 
 
 def semantic_dedup_pairs(corpus: DataFrame, threshold: float,
@@ -902,8 +776,8 @@ def semantic_dedup_pairs(corpus: DataFrame, threshold: float,
     the within-cell self-join is shuffle-free on re-use).
 
     Training reuses the deterministic learned quantizer
-    (:func:`ivf_centroids`, seeded + fixed iterations) so a SQL oracle
-    replays the exact run; assignment is 1-nearest-cell.  Emits
+    (:func:`ivf_centroid_list`, seeded + fixed iterations) so a SQL
+    oracle replays the exact run; assignment is 1-nearest-cell.  Emits
     (vec_a < vec_b, shared cell, cosine) for pairs at or above
     ``threshold`` — survivor selection (keep min id per near-dup
     cluster) composes downstream exactly as for MinHash pairs.

@@ -839,8 +839,8 @@ def q_multimodal_decode_video(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmeans_cells_ctes(src: str) -> str:
-    """CTE chain replaying the deterministic k-means training (seed = 8
-    smallest ids, 2 Lloyd iterations, euclidean assignment with
+    """CTE chain replaying the deterministic k-means training (cell j
+    seeded from vec_id j < 8, 2 Lloyd iterations, euclidean assignment with
     lower-cell tiebreak) over ``src`` and the 1-nearest-cell corpus
     assignment — shared prefix of the IVF probe oracle and the SemDeDup
     oracle (no leading WITH so callers can prepend their own CTEs)."""
@@ -923,8 +923,8 @@ FROM scored WHERE rank <= 5
 def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-5 with LEARNED k-means cells (8 cells, 2 Lloyd
     iterations, nprobe=2) — no label column involved, the 100 TB shape.
-    Still oracle-checkable: the training run is deterministic (seeded
-    from smallest ids, fixed iterations) so the SQL oracle replays it
+    Still oracle-checkable: the training run is deterministic (cell j
+    seeded from vec_id j, fixed iterations) so the SQL oracle replays it
     exactly."""
     e = load_table(spark, sf_dir, "embeddings")
     return S.ann_ivf_topk(e, e.filter(F.col("vec_id") < 5), k=5, nprobe=2,

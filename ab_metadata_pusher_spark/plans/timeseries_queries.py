@@ -69,9 +69,7 @@ GROUP BY user_id, session_idx
 @register("sessionize_events", oracle=_SESSION_SQL,
           covers=("G.sessionize", "G.window.frame"))
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessions (30 min), JVM window formulation.  The
-    grouped-map applyInPandas formulation (``sessionize_pandas``) is not
-    registered; tests/test_timeseries.py checks it against this path."""
+    """Gap-based sessions (30 min), JVM window formulation."""
     return sessionize(load_table(spark, sf_dir, "events"), gap_seconds=1800)
 
 

@@ -402,21 +402,6 @@ def build_summary_lines(timings: dict[str, float], errors: dict[str, str],
     if splits:
         detail["splits"] = splits
     if regressions is not None:
-        # A note explains the round that CHANGED the query, so it only
-        # attaches when this comparison spans that round: baseline round
-        # + 1 == note round.  The baseline re-pins every round, so an
-        # older intentional slowdown is already embodied in the baseline
-        # and re-attaching its note misattributes a fresh delta (r12
-        # VERDICT finding #2: an r4 note pasted onto an r11->r12 flag).
-        base_round = regressions.get("baseline_round")
-        for q, entry in _KNOWN_SLOWDOWNS.items():
-            if base_round is None or entry["round"] != base_round + 1:
-                continue  # unknown or non-spanning round: no note —
-                # a maybe-stale note is worse than none
-            for key in ("flagged", "flagged_normalized"):
-                if q in regressions.get(key, {}):
-                    regressions[key][q]["note"] = (
-                        f"r{entry['round']}: {entry['note']}")
         detail["regressions"] = regressions
     if errors:
         detail["errors"] = errors
@@ -453,33 +438,6 @@ def build_summary_lines(timings: dict[str, float], errors: dict[str, str],
         if len(line) < 1600:
             break
     return json.dumps({"kind": "detail", **detail}), line
-
-
-#: Intentional, explained slowdowns, keyed by query with the ROUND that
-#: made the change (r12 VERDICT finding #2: un-stamped notes were
-#: re-attached to later rounds' flags of untouched queries).  A note
-#: attaches only while the regression gate still compares across its
-#: round (baseline round + 1 == note round); after the next re-pin the
-#: slowdown lives in the baseline and the note is history, kept here so
-#: the intent survives in one place.
-_KNOWN_SLOWDOWNS: dict[str, dict] = {
-    "similarity_ann_full": {"round": 4, "note": (
-        "rebuilt the LSH probe path as multi-table (6x3 planes, "
-        "candidates unioned across tables + distinct): recall@5 rose "
-        "0.12 -> 0.68 (oracle-gated by similarity_ann_recall); the "
-        "extra seconds are the candidate union that recall requires")},
-    "similarity_ann_lsh": {"round": 4, "note": (
-        "same multi-table rebuild as similarity_ann_full (recall trade)")},
-    "quality_label_consistency_ann": {"round": 4, "note": (
-        "replaced the brute-force label screen with LSH-blocked "
-        "candidates (equi-joins, no nested loop) — different query "
-        "doing strictly more defensible work at scale")},
-    "similarity_ivf_full": {"round": 3, "note": (
-        "r2 used the fixture label column as IVF cells (a crutch the r2 "
-        "verdict flagged); r3 learns cells with seeded k-means inside the "
-        "timed build — the extra seconds are the real index-build cost, "
-        "and recall is oracle-gated by similarity_ivf_recall")},
-}
 
 
 def _regressions_vs_previous_round(

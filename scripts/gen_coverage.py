@@ -120,8 +120,12 @@ STATIC = [
      "tests/test_sinks.py; scripts/pipeline_demo.py (EP3)"),
     ("F3", "Row pull-loop -> lazy DataFrame lineage",
      "(disappears by design — every registry query)", "driver_sim"),
-    ("F4", "Scoped config with fallback",
-     "config.py ScopedConfig", "tests/test_sinks.py"),
+    ("F4", "Scoped config with fallback (job conf key, else env var, "
+           "else default)",
+     "jobs.py build_metadata_job conf.get(key, env(NAME, default))",
+     "tests/test_sources.py test_bigquery_job_dispatch_end_to_end (env); "
+     "tests/test_sinks.py test_job_mysql_wire_to_kafka_wire_end_to_end "
+     "(conf)"),
     ("F5", "Cron -> Trigger.AvailableNow / ProcessingTime",
      "streaming/events.py run_to_memory + foreach_batch_publish",
      "tests/test_streaming.py"),
@@ -153,14 +157,6 @@ STATIC = [
      "(Spark built-in; engine usage proven)",
      "tests/test_observability.py "
      "test_streaming_query_listener_captures_progress"),
-    # Orphaned by the r5 retirement of sessionize_events_pandas (the
-    # 1:1 registry swap): the grouped-map applyInPandas surface stays
-    # implemented outside the registry, checked every pytest run against
-    # the native sessionize that the driver-green sessionize_events runs.
-    ("G.udf.apply_in_pandas",
-     "Grouped-map applyInPandas (pandas sessionize A/B)",
-     "operators/sessionize.py sessionize_pandas",
-     "tests/test_timeseries.py test_sessionize_pandas_equals_native"),
 ]
 
 

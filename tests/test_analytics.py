@@ -21,9 +21,9 @@ def _events(spark, rows):
 def _force_assign_tier(monkeypatch, tier: str) -> None:
     """Force the literal or Arrow cell/cluster assignment tier through
     its crossover constant (the only tier switch the code has)."""
-    from ab_metadata_pusher_spark.operators import similarity as S
+    from ab_metadata_pusher_spark.operators import clustering as C
 
-    monkeypatch.setattr(S, "ASSIGN_CELLS_LITERAL_MAX",
+    monkeypatch.setattr(C, "ASSIGN_CELLS_LITERAL_MAX",
                         0 if tier == "arrow" else 1 << 62)
 
 
@@ -70,7 +70,8 @@ def test_funnel_four_steps(spark):
 
 def test_kmeans_separable_clusters(spark):
     from ab_metadata_pusher_spark.operators.clustering import (
-        assign_clusters, kmeans_fit_assign, seed_centroids, update_centroids,
+        assign_clusters, fit_centroids, kmeans_fit_assign, seed_centroids,
+        update_centroids,
     )
     pts = [(0, [0.0, 0.0]), (1, [10.0, 10.0]), (2, [1.0, 0.0]),
            (3, [0.0, 1.0]), (4, [10.0, 9.0]), (5, [9.0, 10.0])]
@@ -81,17 +82,15 @@ def test_kmeans_separable_clusters(spark):
            for r in kmeans_fit_assign(e, k=2, iters=2).collect()}
     assert out == {0: 0, 2: 0, 3: 0, 1: 1, 4: 1, 5: 1}
 
-    # centroid update is the mean of the assigned points — via the
-    # bare-(id, cluster) fallback (corpus re-join) ...
+    # centroid update is the mean of the assigned points, read from
+    # the embedding the assignment carries (the trainer's call shape)
     cents = seed_centroids(e, 2)
-    assigned = assign_clusters(e, cents)
-    updated = dict(update_centroids(e, assigned))
+    carried = assign_clusters(e, cents, keep_emb=True)
+    updated = dict(update_centroids(carried, dim=2))
     assert updated[0] == [1.0 / 3, 1.0 / 3]
     assert updated[1] == [29.0 / 3, 29.0 / 3]
-    # ... and identically via the join-free keep_emb path the Lloyd
-    # loops use (same row multiset into the same aggregation)
-    carried = assign_clusters(e, cents, keep_emb=True)
-    assert dict(update_centroids(e, carried)) == updated
+    # one trainer round is exactly that seed -> assign -> update
+    assert dict(fit_centroids(e, 2, iters=1)) == updated
 
 
 def test_update_centroids_null_tolerant(spark):
@@ -105,7 +104,7 @@ def test_update_centroids_null_tolerant(spark):
         [(0, 0, [2.0, 4.0]), (1, 0, [4.0, None]), (2, 0, None),
          (3, 1, None)],
         "vec_id bigint, cluster int, embedding array<double>")
-    got = dict(update_centroids(e, e, dim=2))
+    got = dict(update_centroids(e, dim=2))
     # cluster 0: dim0 mean over {2,4}=3, dim1 over {4} alone=4
     # (the NULL element and NULL row contribute to neither)
     assert got == {0: [3.0, 4.0]}, got
@@ -198,6 +197,7 @@ def test_assign_cells_arrow_zero_norm_and_dispatch(spark, monkeypatch):
     """Arrow tier honors the degenerate contract (zero-norm ranks
     last, all-NaN ties to lower cells) and auto dispatch crosses to
     arrow past ASSIGN_CELLS_LITERAL_MAX."""
+    from ab_metadata_pusher_spark.operators import clustering as C
     from ab_metadata_pusher_spark.operators import similarity as S
 
     cents = [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0])]
@@ -211,10 +211,10 @@ def test_assign_cells_arrow_zero_norm_and_dispatch(spark, monkeypatch):
     assert got == {(10, 1), (10, 2), (11, 0), (11, 1)}
 
     # arrow runs once k x dim exceeds the threshold
-    monkeypatch.setattr(S, "ASSIGN_CELLS_LITERAL_MAX", 5)
+    monkeypatch.setattr(C, "ASSIGN_CELLS_LITERAL_MAX", 5)
     plan = S._assign_cells(df, cents, "vec_id", "embedding", nprobe=1)
     assert "MapInArrow" in plan._jdf.queryExecution().toString()
-    monkeypatch.setattr(S, "ASSIGN_CELLS_LITERAL_MAX", 8192)
+    monkeypatch.setattr(C, "ASSIGN_CELLS_LITERAL_MAX", 8192)
     plan = S._assign_cells(df, cents, "vec_id", "embedding", nprobe=1)
     qe = plan._jdf.queryExecution().toString()
     assert not any(node in qe for node in (
@@ -321,7 +321,7 @@ def test_assign_clusters_tiers_agree(spark, monkeypatch):
     threshold.  A NaN-coordinate centroid ranks last in both."""
     import random
 
-    from ab_metadata_pusher_spark.operators import similarity as S
+    from ab_metadata_pusher_spark.operators import clustering as C
     from ab_metadata_pusher_spark.operators.clustering import (
         assign_clusters,
     )
@@ -350,7 +350,7 @@ def test_assign_clusters_tiers_agree(spark, monkeypatch):
                        for r in assign_clusters(df, nan_cents).collect()}
     assert picks["literal"] == picks["arrow"] == lit
 
-    monkeypatch.setattr(S, "ASSIGN_CELLS_LITERAL_MAX", 5)
+    monkeypatch.setattr(C, "ASSIGN_CELLS_LITERAL_MAX", 5)
     plan = assign_clusters(df, cents)
     assert "MapInArrow" in plan._jdf.queryExecution().toString()
 
@@ -360,6 +360,60 @@ def test_kmeans_tie_breaks_to_lower_cluster(spark):
     e = spark.createDataFrame([(9, [5.0])], "vec_id bigint, embedding array<double>")
     r = assign_clusters(e, [(0, [4.0]), (1, [6.0])]).collect()[0]
     assert r["cluster"] == 0 and r["dist"] == 1.0
+
+
+def test_lloyd_operators_skip_null_seed_embedding(spark):
+    """A NULL embedding at a seed id (vec_id 0) seeds nothing: every
+    Lloyd-trained operator runs, and its rows that do not involve id 0
+    equal a run on the same corpus without row 0 (same seeds, same
+    updates — NULL rows never enter a mean)."""
+    import random
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from ab_metadata_pusher_spark.operators.clustering import (
+        kmeans_fit_assign, pq_fit_assign,
+    )
+    from ab_metadata_pusher_spark.operators.similarity import (
+        ann_ivf_knn_self, ann_ivf_topk, semantic_dedup_pairs,
+    )
+
+    rng = random.Random(11)
+    bases = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(4)]
+    rows = [(0, None)] + [
+        (i, [x + rng.uniform(-0.05, 0.05) for x in bases[i % 4]])
+        for i in range(1, 40)]
+    corpus = spark.createDataFrame(rows,
+                                   "vec_id bigint, embedding array<double>")
+    without_0 = corpus.filter(F.col("vec_id") != 0)
+    runs = {
+        "kmeans": (lambda c: kmeans_fit_assign(c, k=4, iters=2),
+                   ["vec_id"]),
+        "pq": (lambda c: pq_fit_assign(c, m=4, k=4, iters=2), ["vec_id"]),
+        "semantic": (lambda c: semantic_dedup_pairs(c, 0.9, n_cells=4),
+                     ["vec_a", "vec_b"]),
+        "ivf_knn_self": (lambda c: ann_ivf_knn_self(c, k=3, n_cells=4,
+                                                    nprobe=2),
+                         ["query_id", "neighbor_id"]),
+        "ivf_topk": (lambda c: ann_ivf_topk(
+            c, c.filter(F.col("vec_id") < 6), k=3, nprobe=2,
+            n_cells=4), ["query_id", "neighbor_id"]),
+    }
+    for name, (run, ids) in runs.items():
+        keep = F.lit(True)
+        for c in ids:
+            keep = keep & (F.col(c) != 0)
+        got = sorted(tuple(r) for r in run(corpus).filter(keep).collect())
+        want = sorted(tuple(r) for r in run(without_0).filter(keep)
+                      .collect())
+        assert got == want and got, name
+
+    # no id below k carries an embedding: the seeding contract is named
+    with pytest.raises(ValueError, match="seeded from vec_id j"):
+        kmeans_fit_assign(corpus.filter(F.col("vec_id") != 0)
+                          .withColumn("vec_id", F.col("vec_id") + 100),
+                          k=4)
 
 
 def test_funnel_randomized_vs_bruteforce(spark):

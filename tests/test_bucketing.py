@@ -471,13 +471,13 @@ def test_semdedup_cell_bucketed_self_join_is_shuffle_free(
     from pyspark.sql import functions as F
 
     from ab_metadata_pusher_spark.operators.similarity import (
-        _assign_cells, ivf_centroids, l2_norm,
+        _assign_cells, ivf_centroid_list, l2_norm,
     )
     from ab_metadata_pusher_spark.sources.fixtures import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding")
-    cents = ivf_centroids(emb, n_cells=4, iters=1)
+    cents = ivf_centroid_list(emb, n_cells=4, iters=1)
     assigned = _assign_cells(emb, cents, "vec_id", "embedding", nprobe=1) \
         .select("vec_id", "cell", l2_norm("embedding").alias("nrm"))
     (assigned.write.mode("overwrite").bucketBy(4, "cell")

@@ -176,39 +176,6 @@ def test_bench_whole_suite_geomean_reaches_the_final_line():
     assert "geomean_vs_baseline_raw" not in json.loads(bare_line)
 
 
-def test_bench_known_slowdown_notes_attach_only_to_their_round():
-    """r12 VERDICT finding #2: the un-stamped r4 note for
-    quality_label_consistency_ann re-attached itself to an r11->r12
-    flag of a query untouched since r4, misattributing the delta.  A
-    note now attaches ONLY when the comparison spans the round that
-    wrote it (baseline round + 1 == note round), and arrives stamped
-    with its origin round; an unknown baseline round attaches nothing."""
-    import json
-
-    from bench import _KNOWN_SLOWDOWNS, build_summary_lines
-
-    q = "quality_label_consistency_ann"
-    note_round = _KNOWN_SLOWDOWNS[q]["round"]
-    flag = {q: {"prev_sec": 1.0, "now_sec": 2.0, "ratio": 2.0}}
-
-    def detail_for(base_round):
-        regs = {"baseline": "BENCH_BASELINE.json",
-                "baseline_round": base_round,
-                "flagged": {k: dict(v) for k, v in flag.items()}}
-        detail_line, _ = build_summary_lines({q: 2.0}, {}, regs, 0.1)
-        return json.loads(detail_line[detail_line.index("{"):])
-
-    # spanning comparison (baseline is the round BEFORE the change):
-    # note attaches, stamped with its origin round
-    spanning = detail_for(note_round - 1)
-    assert spanning["regressions"]["flagged"][q]["note"].startswith(
-        f"r{note_round}: ")
-    # any later baseline already embodies the slowdown: no note
-    assert "note" not in detail_for(11)["regressions"]["flagged"][q]
-    # unknown baseline round: no note (maybe-stale is worse than none)
-    assert "note" not in detail_for(None)["regressions"]["flagged"][q]
-
-
 def test_bench_regression_predicate_tiers():
     """The gate's two tiers (r7): sub-3s baselines flag at 1.5x AND a
     0.75s absolute floor; >= 3s baselines flag at 1.25x — the r6 gate

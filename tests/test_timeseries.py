@@ -1,6 +1,6 @@
 """As-of join and sessionization edge semantics (beyond the registry's
-oracle parity): tie inclusivity, no-match NULLs, and the JVM-vs-pandas
-sessionizer equivalence."""
+oracle parity): tie inclusivity, no-match NULLs, and the session gap
+boundary."""
 
 from __future__ import annotations
 
@@ -9,9 +9,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from ab_metadata_pusher_spark.operators.asof import asof_join
-from ab_metadata_pusher_spark.operators.sessionize import (
-    sessionize, sessionize_pandas,
-)
+from ab_metadata_pusher_spark.operators.sessionize import sessionize
 
 
 def _ts(minute: int) -> dt.datetime:
@@ -52,14 +50,6 @@ def test_sessionize_gap_boundary(spark):
         "user_id bigint, ts timestamp_ntz")
     rows = sorted(sessionize(ev).collect(), key=lambda r: r["session_idx"])
     assert [(r["session_idx"], r["n_events"]) for r in rows] == [(1, 2), (2, 1)]
-
-
-def test_sessionize_pandas_equals_native(spark, sf_dir):
-    from ab_metadata_pusher_spark.sources.fixtures import load_table
-    ev = load_table(spark, sf_dir, "events")
-    a = {tuple(r) for r in sessionize(ev).collect()}
-    b = {tuple(r) for r in sessionize_pandas(ev).collect()}
-    assert a == b and len(a) > 0
 
 
 def test_asof_forward(spark):
