@@ -58,17 +58,20 @@ def seed_centroids(corpus: DataFrame, k: int,
                    emb_col: str = "embedding") -> list[tuple[int, list[float]]]:
     """Deterministic seeding (reproducible everywhere, unlike random
     init): cluster j is seeded from the vector whose ``id_col`` is j, for
-    j < k.  A seed id with a NULL embedding seeds nothing, just as
-    :func:`update_centroids` drops a cluster with no defined mean; the
-    other clusters keep their seeds.  Raises ``ValueError`` when no id
-    below k carries an embedding."""
+    j < k.  A seed id whose embedding is NULL or holds a NULL element
+    seeds nothing, just as :func:`update_centroids` drops a cluster with
+    no defined mean; the other clusters keep their seeds.  Raises
+    ``ValueError`` when no id below k carries a complete embedding."""
     rows = (corpus.filter((F.col(id_col) < k) & F.col(emb_col).isNotNull())
             .select(id_col, _dbl(F.col(emb_col)).alias("v")).collect())
-    if not rows:
+    seeds = [(int(r[id_col]), [float(x) for x in r["v"]]) for r in rows
+             if None not in r["v"]]
+    if not seeds:
         raise ValueError(
             f"seed_centroids: no {id_col} below k={k} has a non-NULL "
-            f"{emb_col}; cluster j is seeded from {id_col} j")
-    return [(int(r[id_col]), [float(x) for x in r["v"]]) for r in rows]
+            f"{emb_col} without NULL elements; cluster j is seeded from "
+            f"{id_col} j")
+    return seeds
 
 
 def _centroid_literal(centroids: list[tuple[int, list[float]]]) -> Column:
@@ -253,9 +256,16 @@ def fit_centroids(corpus: DataFrame, k: int, iters: int,
     one :func:`update_centroids` shuffle.  Deterministic end to end
     (seeded from ids, fixed iteration count), so a SQL oracle can replay
     the exact run.  Every round is an action over ``corpus``; callers
-    that iterate over expensive lineage pin it themselves."""
+    that iterate over expensive lineage pin it themselves.  Raises
+    ``ValueError`` naming the seed ids and lengths when the seed
+    embeddings differ in length (the centroid width is the seeds')."""
     cents = seed_centroids(corpus, k, id_col, emb_col)
     dim = len(cents[0][1])
+    if any(len(v) != dim for _, v in cents):
+        lengths = ", ".join(f"{id_col} {c}: {len(v)}"
+                            for c, v in sorted(cents))
+        raise ValueError(
+            f"fit_centroids: seed {emb_col}s differ in length ({lengths})")
     for _ in range(iters):
         cents = update_centroids(
             assign_clusters(corpus, cents, id_col, emb_col, keep_emb=True),

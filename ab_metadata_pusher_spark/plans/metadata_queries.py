@@ -704,14 +704,15 @@ FROM pack
           covers=("E2", "E3", "D2"))
 def q_sink_envelope_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 256 KiB envelope packing law as a hash-checkable driver row:
-    run the REAL sink path (graph nodes/relations -> sorted record
-    stream -> sinks/envelope.py greedy packing) and report the packing
+    run the REAL sink path (graph nodes/relations -> sorted Arrow
+    collect -> sinks/envelope.py ``pack_tables``, the columnar encoder
+    ``publish_collected`` uses -> greedy packing) and report the packing
     outcome — envelope count, record count, largest packed payload,
     largest single record, and the budget invariant — as one flat row.
     The DuckDB oracle RE-DERIVES the law from scratch: it rebuilds the
     same records, measures each record's serialized size with its own
-    to_json (byte-identical to the sink's sorted-key compact
-    json.dumps), and replays the greedy fold as a recursive CTE against
+    to_json (byte-identical to the sink's sorted-key compact record
+    text), and replays the greedy fold as a recursive CTE against
     an independently stated overhead literal.  Any drift in record
     serialization, size accounting (+1 comma), overhead, or the
     pack-then-flush order shows up as a hash mismatch.
@@ -729,16 +730,14 @@ def q_sink_envelope_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
 
     from ab_metadata_pusher_spark.sinks.envelope import (
-        _record_size, pack_envelopes,
+        _record_size, pack_tables,
     )
-    from ab_metadata_pusher_spark.sinks.sqs import collect_records
 
     tm = table_metadata(catalog_columns(spark, sf_dir))
     nodes = to_nodes(tm).orderBy("label", "key")
     rels = to_relations(tm).orderBy("start_key", "end_key")
-    bodies = list(pack_envelopes(collect_records(nodes),
-                                 collect_records(rels), _CHUNK_TAG,
-                                 _CHUNK_MAX_BYTES))
+    bodies = list(pack_tables(nodes.toArrow(), rels.toArrow(), _CHUNK_TAG,
+                              _CHUNK_MAX_BYTES))
     payloads: list[int] = []
     n_records = 0
     max_rec = 0

@@ -14,17 +14,22 @@ dead ``JOB_PUBLISH_TAG``.  This sink fixes all three:
   and a content-hash ``MessageDeduplicationId`` so FIFO re-publishes are
   idempotent.
 
-Two execution modes:
+Two execution modes, one envelope packer (sinks/envelope.py ``_pack``)
+behind two encoders:
 
 * ``publish_collected`` — driver-side, for metadata-sized outputs
   (reference parity: the whole graph of a database's catalog is small).
-  Each frame crosses to the driver as one Arrow collect
-  (:func:`collect_records`), not as pickled Rows; its columns must be
-  string, integral, boolean or floating, the types whose Arrow records
-  equal ``Row.asDict`` and so pack into the same bodies;
+  Each frame crosses to the driver as one Arrow collect and its record
+  texts are built column-wise by ``pack_tables``: no Row objects, no
+  per-record dicts, no per-record ``json.dumps``.  Its columns must be
+  string, integral, boolean or floating, the types whose Arrow values
+  equal ``Row.asDict``'s and so pack into the same bodies.  Arrow
+  strings are UTF-8 and cannot hold the lone surrogate a Python str
+  may, so the columnar encoder needs no surrogate escaping;
 * ``publish_distributed`` — ``foreachPartition``: each executor packs and
-  sends its partition, so 100 TB of records never transit the driver.
-  Clients are constructed per-partition via the injectable factory.
+  sends its partition with the row encoder ``pack_envelopes``, so 100 TB
+  of records never transit the driver.  Clients are constructed
+  per-partition via the injectable factory.
 
 The boto3 client is injected (``client_factory``) — tests use a stub; real
 deployments pass ``lambda: boto3.client("sqs")``.
@@ -42,10 +47,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ab_metadata_pusher_spark.sinks.envelope import (
-    DEFAULT_MAX_BYTES, SQS_HARD_LIMIT, pack_envelopes,
+    DEFAULT_MAX_BYTES, SQS_HARD_LIMIT, pack_envelopes, pack_tables,
 )
 
-__all__ = ["SqsPublisher", "PublishReport", "collect_records"]
+__all__ = ["SqsPublisher", "PublishReport"]
 
 logger = logging.getLogger(__name__)
 
@@ -69,21 +74,6 @@ _RECORD_TYPES = (T.StringType, T.ByteType, T.ShortType, T.IntegerType,
 
 def _dedup_id(body: str) -> str:
     return hashlib.sha256(body.encode("utf-8")).hexdigest()
-
-
-def collect_records(frame: DataFrame) -> list[dict[str, Any]]:
-    """The frame's rows as dicts, in order, through one Arrow collect.
-
-    Equal to ``[r.asDict(recursive=True) for r in frame.collect()]`` for
-    the flat string/integral/boolean/floating frames this accepts;
-    raises ``TypeError`` naming the first column of any other type."""
-    for field in frame.schema:
-        if not isinstance(field.dataType, _RECORD_TYPES):
-            raise TypeError(
-                f"collect_records: column {field.name!r} has type "
-                f"{field.dataType.simpleString()}; only string, integral, "
-                "boolean and floating columns keep Row.asDict's records")
-    return frame.toArrow().to_pylist()
 
 
 class SqsPublisher:
@@ -158,14 +148,22 @@ class SqsPublisher:
         output is metadata-sized (the reference's regime); raises early if
         a single record exceeds the envelope budget.
 
-        Each frame is collected once as Arrow and turned into records
-        by :func:`collect_records`, so both frames may hold only string,
-        integral, boolean and floating columns (a graph frame does);
-        any other column type raises ``TypeError`` before anything is
-        sent."""
-        bodies = pack_envelopes(collect_records(nodes),
-                                collect_records(relations),
-                                tag, self.max_bytes)
+        Each frame is collected once as Arrow and packed by
+        ``pack_tables``, so both frames may hold only string, integral,
+        boolean and floating columns (a graph frame does); any other
+        column type raises ``TypeError`` before anything is collected or
+        sent.  The bodies are those of ``pack_envelopes`` over the frames'
+        ``Row.asDict`` records."""
+        for frame in (nodes, relations):
+            for field in frame.schema:
+                if not isinstance(field.dataType, _RECORD_TYPES):
+                    raise TypeError(
+                        f"publish_collected: column {field.name!r} has "
+                        f"type {field.dataType.simpleString()}; only "
+                        "string, integral, boolean and floating columns "
+                        "keep Row.asDict's records")
+        bodies = pack_tables(nodes.toArrow(), relations.toArrow(), tag,
+                             self.max_bytes)
         report = self.send_bodies(self.client_factory(), bodies)
         logger.info("published %d messages in %d batches (%d bytes) tag=%s",
                     report.messages_sent, report.batches_sent,

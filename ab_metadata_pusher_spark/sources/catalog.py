@@ -12,6 +12,10 @@ data scan), then joined with the deterministic description tables below.
 For a live database, sources/jdbc.py builds the equivalent pushed-down JDBC
 query; both paths produce identical catalog_columns schemas so the rest of
 the pipeline (operators/metadata.py) is source-agnostic.
+
+The derived catalog is one partition: it is driver-sized, and one
+partition lets the graph built from it (operators/metadata.py,
+operators/graph.py) run without a shuffle (see :func:`catalog_columns`).
 """
 
 from __future__ import annotations
@@ -110,6 +114,19 @@ def catalog_columns(spark: SparkSession, sf_dir: str,
     tests/test_catalog_introspection.py).  The rows reach Spark as one
     Arrow table, a local relation: reading the frame runs no Python worker
     and no extra Spark job, however many plans read it.
+
+    The relation is returned as ONE partition (``coalesce(1)``).  The
+    catalog is driver-sized by construction (one row per column of the
+    lake, already held in one Arrow table), so spreading it over the
+    default parallelism bought nothing but an Exchange:
+    ``table_metadata``'s per-table aggregate now finds its input already
+    clustered and plans no shuffle, and each staging write of the graph
+    is one shuffle-free job.  Plans that group or join the graph further
+    downstream (degrees, two-hop) inherit the one partition too.  A
+    catalog graph is thousands of rows, where one task beats a shuffle:
+    timed with scripts/ab.py at sf0.1 on a 4-core host, the ``metadata_*``
+    heads ran 2-31% faster this way (median of per-pair minimums, none
+    slower), with equal output.
     """
     rows = []
     for table in tables:
@@ -136,4 +153,4 @@ def catalog_columns(spark: SparkSession, sf_dir: str,
     arrow = pa.table([pa.array(c, type=t)
                       for c, t in zip(columns, _ARROW_COLUMN_TYPES)],
                      names=_CATALOG_SCHEMA.names)
-    return spark.createDataFrame(arrow, _CATALOG_SCHEMA)
+    return spark.createDataFrame(arrow, _CATALOG_SCHEMA).coalesce(1)

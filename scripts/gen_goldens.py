@@ -20,19 +20,25 @@ GOLDEN = REPO / "tests" / "golden"
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def build(spark, tmp_dir: str) -> dict[str, str]:
-    """Render all golden artifacts; returns {filename: content}."""
+def graph(spark):
+    """The fixture catalog's (nodes, relations) frames in golden order."""
     from ab_metadata_pusher_spark.operators.graph import (
         to_nodes, to_relations,
     )
     from ab_metadata_pusher_spark.operators.metadata import table_metadata
-    from ab_metadata_pusher_spark.sinks.envelope import pack_envelopes
-    from ab_metadata_pusher_spark.sinks.staging import StagingArea
     from ab_metadata_pusher_spark.sources.catalog import catalog_columns
 
     tm = table_metadata(catalog_columns(spark, SF_DIR))
-    nodes = to_nodes(tm).orderBy("label", "key")
-    rels = to_relations(tm).orderBy("start_key", "end_key", "type")
+    return (to_nodes(tm).orderBy("label", "key"),
+            to_relations(tm).orderBy("start_key", "end_key", "type"))
+
+
+def build(spark, tmp_dir: str) -> dict[str, str]:
+    """Render all golden artifacts; returns {filename: content}."""
+    from ab_metadata_pusher_spark.sinks.envelope import pack_envelopes
+    from ab_metadata_pusher_spark.sinks.staging import StagingArea
+
+    nodes, rels = graph(spark)
 
     area = StagingArea(tmp_dir)
     area.write_legacy_csv(nodes, rels)

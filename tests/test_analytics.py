@@ -416,6 +416,49 @@ def test_lloyd_operators_skip_null_seed_embedding(spark):
                           k=4)
 
 
+def _two_group_corpus(spark, first):
+    """10 rows: vec_id 0 is ``first``; odd ids sit near (0, 0), even ids
+    near (10, 10), so seeds 1 and 2 split the rest into two groups."""
+    rows = [(0, first)] + [
+        (i, [0.1 * i, 0.0] if i % 2 else [10.0, 10.0 + 0.1 * i])
+        for i in range(1, 10)]
+    return spark.createDataFrame(rows,
+                                 "vec_id bigint, embedding array<double>")
+
+
+def test_kmeans_skips_seed_with_null_element(spark):
+    """A seed embedding with a NULL element ([NULL, 1.0] at vec_id 0)
+    seeds nothing, like a NULL embedding: seeds 1 and 2 train, row 0
+    has no defined distance, every other row lands with its group."""
+    from ab_metadata_pusher_spark.operators.clustering import (
+        kmeans_fit_assign,
+    )
+
+    got = {r["vec_id"]: (r["cluster"], r["dist"])
+           for r in kmeans_fit_assign(_two_group_corpus(spark, [None, 1.0]),
+                                      k=3).collect()}
+    assert len(got) == 10
+    assert got[0][1] is None
+    assert {i: c for i, (c, _) in got.items() if i} == {
+        i: 1 if i % 2 else 2 for i in range(1, 10)}
+    assert all(d is not None for i, (_, d) in got.items() if i)
+
+
+def test_kmeans_refuses_seeds_of_different_lengths(spark):
+    """A 1-long seed among 2-long ones would train 1-long centroids and
+    NULL distances; the trainer names the ids and lengths instead."""
+    import pytest
+
+    from ab_metadata_pusher_spark.operators.clustering import (
+        kmeans_fit_assign,
+    )
+
+    corpus = _two_group_corpus(spark, [1.0])
+    with pytest.raises(ValueError,
+                       match=r"vec_id 0: 1, vec_id 1: 2, vec_id 2: 2"):
+        kmeans_fit_assign(corpus, k=3, iters=1).collect()
+
+
 def test_funnel_randomized_vs_bruteforce(spark):
     # fixed-seed randomized differential: many users, shuffled event
     # streams, compared against a pure-Python funnel reference

@@ -29,6 +29,19 @@ def test_golden_output_contracts(spark, tmp_path):
         assert content == want, f"{name} drifted from golden"
 
 
+def test_golden_chunks_through_the_columnar_encoder(spark):
+    """``publish_collected``'s encoder renders the pinned chunks too:
+    ``pack_tables`` over the Arrow collects of the same ordered frames
+    gives the bytes ``pack_envelopes`` over their Rows pinned."""
+    from ab_metadata_pusher_spark.sinks.envelope import pack_tables
+
+    nodes, rels = _gen.graph(spark)
+    chunks = list(pack_tables(nodes.toArrow(), rels.toArrow(),
+                              tag="golden", max_bytes=4096))
+    assert json.dumps(chunks, indent=1) == (
+        GOLDEN / "envelope_chunks.json").read_text()
+
+
 def test_golden_chunks_respect_byte_budget_and_ordering():
     chunks = json.loads((GOLDEN / "envelope_chunks.json").read_text())
     assert len(chunks) > 1

@@ -370,9 +370,10 @@ def test_hash_build_guard_flips_shj_to_smj_past_budget(
 
 def test_metadata_graph_is_one_generate_over_a_local_scan(spark, sf_dir):
     """to_nodes/to_relations each run as ONE Generate over
-    table_metadata's single shuffle: no Union (each union branch re-ran
-    the aggregation and its Exchange), and the catalog is a
-    LocalTableScan, so no pickled-RDD scan or Python worker runs."""
+    table_metadata's aggregate with no shuffle at all: the catalog is a
+    one-partition LocalTableScan, so the aggregate needs no Exchange and
+    no pickled-RDD scan or Python worker runs; no Union either (each
+    union branch re-ran the aggregation)."""
     import re
 
     from ab_metadata_pusher_spark.operators.graph import (
@@ -390,7 +391,7 @@ def test_metadata_graph_is_one_generate_over_a_local_scan(spark, sf_dir):
                  .split("== Initial Plan ==")[0])
         node = r"^[\s:+|-]*(?:\*\(\d+\) )?"
         shuffles = re.findall(node + r"(?:Reused)?Exchange\b", final, re.M)
-        assert len(shuffles) == 1, (build.__name__, final)
+        assert len(shuffles) == 0, (build.__name__, final)
         assert len(re.findall(node + r"Generate\b", final, re.M)) == 1, (
             build.__name__, final)
         assert "Union" not in final, (build.__name__, final)

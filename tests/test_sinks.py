@@ -18,7 +18,7 @@ from ab_metadata_pusher_spark.sinks.envelope import (
     DEFAULT_MAX_BYTES, SQS_HARD_LIMIT, envelope_json, pack_envelopes,
 )
 from ab_metadata_pusher_spark.sinks.kafka import build_kafka_rows
-from ab_metadata_pusher_spark.sinks.sqs import SqsPublisher, collect_records
+from ab_metadata_pusher_spark.sinks.sqs import SqsPublisher
 from ab_metadata_pusher_spark.sinks.staging import StagingArea
 from ab_metadata_pusher_spark.sources.catalog import catalog_columns
 from ab_metadata_pusher_spark.sources.jdbc import (
@@ -229,22 +229,20 @@ def test_sqs_publish_collected(spark, sf_dir):
     assert total_nodes == nodes.count()
     assert total_rels == relations.count()
 
-    # The Arrow records equal Row.asDict on every accepted column type,
-    # hostile values included, so the bodies are those of the Rows.
+    # The columnar bodies equal those of Row.asDict on every accepted
+    # column type, hostile values included: quotes, backslashes, control
+    # characters (the escaping path), U+2028, astral code points.
     nan = float("nan")
     hostile = spark.createDataFrame(
-        [("a\"b\\c\u2028é漢😀", 1, 2**40, True, 0.1, 0.1),
-         (None, None, None, None, None, None),
-         ("", -2**31, -2**63, False, nan, nan),
-         ("x" * 50, 7, 7, None, float("inf"), -1e300)],
-        "s string, i int, l bigint, b boolean, f float, d double")
-
-    def token(recs):
-        return [{k: "NaN" if v != v else v for k, v in r.items()}
-                for r in recs]
+        [("a\"b\\c\u2028é漢😀", "t\tn\nz\x00\x1f\x7f", -128, -32768, 1,
+          2**40, True, 0.1, 0.1),
+         (None, None, None, None, None, None, None, None, None),
+         ("", "\\u00", 127, 32767, -2**31, -2**63, False, nan, nan),
+         ("x" * 50, "\x08", 0, 0, 7, 7, None, float("inf"), -1e300)],
+        "s string, c string, y tinyint, h smallint, i int, l bigint, "
+        "b boolean, f float, d double")
 
     row_recs = [r.asDict(recursive=True) for r in hostile.collect()]
-    assert token(collect_records(hostile)) == token(row_recs)
     stub = StubSqsClient()
     pub = SqsPublisher("https://queue/test.fifo", lambda: stub,
                        max_bytes=600)
@@ -356,6 +354,31 @@ def test_staging_read_back_launches_no_job(spark, sf_dir, tmp_path):
     area.write(nodes.withColumnRenamed("label", "LABEL"), relations)
     assert area.read_nodes(spark).schema == spark.read.parquet(
         os.path.join(area._resolve(), "nodes")).schema
+
+
+def test_catalog_graph_stages_and_publishes_in_two_jobs(spark, sf_dir,
+                                                        tmp_path):
+    """The catalog is one partition, so the graph runs without a shuffle:
+    staging it is one job per frame, and so is ``publish_collected``'s
+    one Arrow collect per frame."""
+    nodes, relations = _graph(spark, sf_dir)
+    sc = spark.sparkContext
+
+    def jobs(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    area = StagingArea(str(tmp_path / "stage"))
+    assert jobs("graph_staging", lambda: area.write(nodes, relations)) == 2
+    stub = StubSqsClient()
+    pub = SqsPublisher("https://queue/test.fifo", lambda: stub)
+    assert jobs("graph_publish",
+                lambda: pub.publish_collected(nodes, relations, "j")) == 2
+    assert stub.batches
 
 
 def test_staging_legacy_csv_contract(spark, sf_dir, tmp_path):
